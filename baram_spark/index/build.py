@@ -489,11 +489,14 @@ def _pack_partition_arrow(avgdl_by_field: dict, codec: int,
         oo = np.lexsort(
             (np.asarray(g_term, dtype=object), g_field, c["shard"])
         )
-        # slice on PACK_EMIT_BYTES_CAP so no binary column's 32-bit
-        # offsets overflow (2 GiB/array); slices are contiguous in oo, so
-        # the (shard, field, term) ordering the writer prunes on is
+        # slice on PACK_EMIT_BYTES_CAP so no string/binary column's
+        # 32-bit offsets overflow (2 GiB/array): the payload counts the
+        # term bytes as well as the three blobs. Slices are contiguous in
+        # oo, so the (shard, field, term) ordering the writer prunes on is
         # preserved across the yielded batches
-        payload = np.fromiter(
+        term_bytes = pc.binary_length(g_term).to_numpy(
+            zero_copy_only=False).astype(np.int64)
+        payload = term_bytes[oo] + np.fromiter(
             (len(c["blobs"][i]) + len(c["skips"][i]) + len(c["bmax"][i])
              for i in oo), dtype=np.int64, count=oo.size)
         cum = payload.cumsum()

@@ -56,6 +56,32 @@ GEN_META_SCHEMA = (
 # data dirs that carry gen=G partitions (GC / next-gen scans)
 _GEN_TABLES = ("docs", "doc_terms", "postings", "embeddings", "doc_attrs")
 
+# doc_terms rows per postings reduce partition (see postings_partitions):
+# where a reduce task's packing time matches its fixed cost. Measured at
+# local[4] on a 4-vCPU host: a Python reduce task of 250 rows takes
+# 0.23 s (median of 16), nearly all of it fixed cost, and the arrow
+# packer runs at 0.25-0.29M rows/s — 0.2 s x 0.25M rows/s = 50k rows.
+POSTINGS_ROWS_PER_PARTITION = 50_000
+
+
+def postings_partitions(rows: int, n_shards: int) -> int:
+    """Reduce partitions of one postings job over ``rows`` doc_terms rows
+    of ``n_shards`` shards: one per POSTINGS_ROWS_PER_PARTITION rows, so
+    a small wave pays for few tasks, and at most 4 per shard (the fixed
+    layout large builds keep)."""
+    return max(1, min(4 * n_shards, -(-rows // POSTINGS_ROWS_PER_PARTITION)))
+
+
+def _parquet_rows(path: str) -> int:
+    """Row count of a parquet dir from its footers (no data read)."""
+    import pyarrow.dataset as ds
+
+    pa_fs, p = fs.resolve(path)
+    try:
+        return ds.dataset(p, format="parquet", filesystem=pa_fs).count_rows()
+    except FileNotFoundError:
+        return 0
+
 
 def committed_gens(index_dir: str) -> list[int] | None:
     """Generations listed by the committed manifest, or None when the
@@ -206,6 +232,9 @@ class IndexBuilder:
         # salt plans computed concurrently with extract (see
         # _stage_extract_tokenize); keyed by generation
         self._salt_plans: dict[int, dict] = {}
+        # doc_terms rows per shard observed by the tokenize write (sizes
+        # the postings exchange); keyed by generation
+        self._doc_terms_rows: dict[int, dict[int, int]] = {}
 
     # -- paths ----------------------------------------------------------
     @property
@@ -472,6 +501,10 @@ class IndexBuilder:
         # `first` flag — no separate pass over the much larger doc_terms.
         obs = Observation(f"doc_terms_{gen}")
         obs_aggs = [F.count(F.lit(1)).alias("rows")]
+        obs_aggs += [
+            F.sum(F.when(F.col("shard") == k, 1).otherwise(0)).alias(f"rows_{k}")
+            for k in range(self.n_shards)
+        ]
         for f in INDEX_FIELDS:
             cond = F.col("field") == f
             obs_aggs.append(
@@ -493,6 +526,9 @@ class IndexBuilder:
             )
             got = obs.get
             n_out = int(got["rows"])
+            self._doc_terms_rows[gen] = {
+                k: int(got[f"rows_{k}"] or 0) for k in range(self.n_shards)
+            }
             gen_rows = [
                 (gen, f, int(got[f"n_{f}"] or 0), int(got[f"dl_{f}"] or 0))
                 for f in INDEX_FIELDS
@@ -771,9 +807,9 @@ class IndexBuilder:
             return
         avgdl_by_field = {
             r["field"]: float(r["avgdl"])
-            for r in self.spark.read.parquet(
-                _sp(self._latest_stats_dir(self.corpus_stats_path))
-            ).collect()
+            for r in fs.read_parquet(
+                self._latest_stats_dir(self.corpus_stats_path)
+            ).to_pylist()
         }
         if self.shuffle_mode == "rows":
             salt_plan = self._salt_plans.pop(gen, None)
@@ -787,8 +823,14 @@ class IndexBuilder:
         ]
         gen_doc_terms = f"{self.doc_terms_path}/gen={gen}"
         gen_postings = f"{self.postings_path}/gen={gen}"
+        # the exchange is sized by the rows it moves: the tokenize write
+        # observed them, and on resume the doc_terms footers know them
+        rows_by_shard = self._doc_terms_rows.pop(gen, None)
+        if rows_by_shard is None:
+            rows_by_shard = {k: _parquet_rows(f"{gen_doc_terms}/shard={k}")
+                             for k in todo}
 
-        def build_group(shard_ids: list[int]) -> int:
+        def build_group(shard_ids: list[int]) -> tuple[int, int]:
             t0 = time.time()
             # a tiny wave (e.g. two re-indexed urls after a compact freed
             # them) may leave some shards with NO doc_terms rows — the
@@ -801,7 +843,9 @@ class IndexBuilder:
                     [(stage_prefix, k, fingerprint, 0, 0, 0.0)
                      for k in shard_ids]
                 )
-                return 0
+                return 0, 0
+            n_parts = postings_partitions(
+                sum(rows_by_shard.get(k, 0) for k in present), len(shard_ids))
             shard_terms = (
                 self.spark.read.option("basePath", _sp(gen_doc_terms))
                 .parquet(*[_sp(f"{gen_doc_terms}/shard={k}")
@@ -813,7 +857,7 @@ class IndexBuilder:
             # counts ride along as write observations.
             postings = build_postings(
                 self.spark, shard_terms, avgdl_by_field, salt_plan,
-                codec=self.codec, out_partitions=4 * len(shard_ids),
+                codec=self.codec, out_partitions=n_parts,
                 row_shuffle=(self.shuffle_mode == "rows"),
             )
             obs = Observation(f"postings-{gen}-{shard_ids[0]}")
@@ -846,14 +890,16 @@ class IndexBuilder:
                     for k in shard_ids
                 ]
             )
-            return sum(counts.values())
+            return sum(counts.values()), n_parts
 
         total_postings = 0
+        metrics["postings_partitions"] = []  # per shard group, in order
         t0 = time.time()
         if groups:
             with ThreadPoolExecutor(max_workers=self.shard_concurrency) as pool:
-                for n_postings in pool.map(build_group, groups):
+                for n_postings, n_parts in pool.map(build_group, groups):
                     total_postings += n_postings
+                    metrics["postings_partitions"].append(n_parts)
         metrics["postings_seconds"] = time.time() - t0
         metrics["postings_built"] = total_postings
         if metrics["postings_seconds"] > 0 and total_postings:

@@ -10,8 +10,9 @@ expressed as a table lookup instead of a JSON blob.
 
 Appends are written with pyarrow directly (one unique file per append — the
 atomic tmp+rename pattern of ``checkpoint.rs:234-245``) so a ledger write
-costs microseconds instead of a Spark job submission; Spark reads the same
-directory back for resume checks and metrics queries.
+costs microseconds instead of a Spark job submission. Resume checks read the
+directory back with pyarrow too (a build or wave starts no Spark job to
+learn what is done); Spark reads it for metrics queries.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from datetime import datetime
 
 import pyarrow as pa
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from . import fs
 
@@ -90,19 +91,23 @@ class LineageLedger:
         must never disagree on what counts as live."""
         from collections import Counter
 
-        rows = (
-            self.read()
-            .filter(F.col("fingerprint") == fingerprint)
-            .select("stage", "partition_id")
-            .collect()
-        )
+        import pyarrow.dataset as ds
+
         live: Counter = Counter()
-        for r in rows:
-            stage = r["stage"]
+        pa_fs, root = fs.resolve(self.path)
+        try:
+            dset = ds.dataset(root, format="parquet", filesystem=pa_fs,
+                              schema=_ARROW_SCHEMA)
+        except FileNotFoundError:
+            return live  # no ledger yet: nothing is done
+        tbl = dset.to_table(columns=["stage", "partition_id"],
+                            filter=ds.field("fingerprint") == fingerprint)
+        for stage, pid in zip(tbl["stage"].to_pylist(),
+                              tbl["partition_id"].to_pylist()):
             if stage.startswith(self.TOMBSTONE):
-                live[(stage[1:], r["partition_id"])] -= 1
+                live[(stage[1:], pid)] -= 1
             else:
-                live[(stage, r["partition_id"])] += 1
+                live[(stage, pid)] += 1
         return live
 
     def invalidate(self, fingerprint: str) -> None:

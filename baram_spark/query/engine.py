@@ -22,6 +22,8 @@ Filters from SearchConfig (category / date range / min_score,
 
 from __future__ import annotations
 
+import logging
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -35,14 +37,81 @@ from .wand import TermPostings, score_blockmax, score_exhaustive
 
 MAX_K = 100  # REST cap, src/commands/serve.rs:426
 
+log = logging.getLogger(__name__)
+
+
+def _part_files(d: str) -> tuple[tuple[str, int], ...]:
+    """(relative path, size) of every parquet part under ``d``, sorted.
+
+    Spark part names carry a per-write UUID, so this listing identifies
+    one write of a generation: a generation NUMBER handed out again after
+    compact-to-empty + vacuum lists different files. Hidden and
+    underscore paths (``_SUCCESS``, ``.crc``, in-flight staging dirs) are
+    skipped, as Spark's and pyarrow's dataset discovery skip them. A
+    missing committed directory raises: serving it as empty would drop
+    documents silently."""
+    from pyarrow import fs as pafs
+
+    pa_fs, root = fs.resolve(d)
+    infos = pa_fs.get_file_info(pafs.FileSelector(root, recursive=True))
+    out = []
+    for i in infos:
+        if i.type != pafs.FileType.File:
+            continue
+        rel = i.path[len(root):].lstrip("/")
+        if any(part.startswith((".", "_")) for part in rel.split("/")):
+            continue
+        out.append((rel, int(i.size)))
+    return tuple(sorted(out))
+
+
+class _GenPostings:
+    """One generation's postings, resident on the driver:
+    ``lists[(field, term)] = [(shard, blob, skips, blockmax, gen), ...]``.
+
+    Immutable once loaded, so consecutive snapshots of a serving node
+    share it: a refresh loads only generations it does not already hold.
+    ``files`` is the part-file listing it was read from — the reuse key."""
+
+    __slots__ = ("files", "lists")
+
+    def __init__(self, d: str, files: tuple, gen: int):
+        import pyarrow.dataset as ds
+
+        self.files = files
+        self.lists: dict = {}
+        if not files:
+            return
+        pa_fs, root = fs.resolve(d)
+        dset = ds.dataset([f"{root}/{rel}" for rel, _ in files],
+                          format="parquet", filesystem=pa_fs,
+                          partitioning="hive", partition_base_dir=root)
+        cols = ["field", "term", "postings", "skips", "blockmax"]
+        has_shard = "shard" in dset.schema.names
+        tbl = dset.to_table(columns=cols + (["shard"] if has_shard else []))
+        shards = (tbl["shard"].to_pylist() if has_shard
+                  else [0] * tbl.num_rows)
+        lists = self.lists
+        for f, t, s, b, sk, bm in zip(
+                tbl["field"].to_pylist(), tbl["term"].to_pylist(), shards,
+                tbl["postings"].to_pylist(), tbl["skips"].to_pylist(),
+                tbl["blockmax"].to_pylist()):
+            lists.setdefault((f, t), []).append((int(s), b, sk, bm, gen))
+
 
 class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str,
-                 preload: bool = False):
+                 preload: bool = False,
+                 reuse: "SearchEngine | None" = None):
         """``preload=True`` pins term stats + posting blobs in driver memory
         (the 'open index' serving mode — an OpenSearch node keeps exactly
-        this resident); queries then run with zero Spark jobs. Default is
-        the cluster mode: parquet-pruned lookups + per-shard scoring.
+        this resident); the open and every query then run with zero Spark
+        jobs. Default is the cluster mode: parquet-pruned lookups +
+        per-shard scoring.
+
+        ``reuse``: an earlier preloaded engine over the same index whose
+        resident generations this one may share (the serving refresh):
+        only generations whose part files it does not hold are read.
 
         The engine reads the snapshot that was committed when it was
         created; call :meth:`refresh` (the OpenSearch refresh analog) to
@@ -56,7 +125,7 @@ class SearchEngine:
         # tombstone set (deletes is the one unversioned table). Re-check
         # the manifest after the reads and re-open if the snapshot moved.
         for _attempt in range(3):
-            self._open()
+            self._open(reuse)
             m2 = self._load_manifest()
             if ((m2 or {}).get("snapshot_id")
                     == (self._manifest or {}).get("snapshot_id")):
@@ -65,42 +134,46 @@ class SearchEngine:
             # three snapshots moved under us in a row: serve the last
             # consistent-read attempt but say so — a silent fall-through
             # could pair old generations with a newer tombstone set
-            import logging
-
-            logging.getLogger(__name__).warning(
+            log.warning(
                 "index %s: snapshot moved during all 3 open attempts; "
                 "serving the last read (snapshot_id=%s) which may pair "
                 "generations with a newer tombstone set until refresh()",
                 self.index_dir, (self._manifest or {}).get("snapshot_id"))
 
-    def _open(self) -> None:
-        spark = self.spark
-        preload = self._preload
+    def _open(self, reuse: "SearchEngine | None" = None) -> None:
+        # taken before _resident is rebound below (an in-place refresh
+        # passes reuse=self)
+        held = reuse._resident if reuse is not None else {}
         # snapshot isolation: when the builder's _manifest.json exists, read
         # ONLY the committed generations — a crashed/in-flight build's
         # partial gen dirs are invisible (the Iceberg-manifest analog) —
         # and the committed VERSION of each small stats table (writers
         # create fresh v_K dirs instead of overwriting, so a pinned reader
-        # never has files yanked from under it mid-build).
+        # never has files yanked from under it mid-build). Everything here
+        # is a driver-side pyarrow read; the Spark relations of the cluster
+        # mode are built on first use (see _postings / _term_stats).
         self._manifest = self._load_manifest()
         self._committed = self._manifest_gens()
         self.corpus_stats = {
             r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
-            for r in spark.read.parquet(
-                _sp(self._stats_path("corpus_stats"))
-            ).collect()
+            for r in fs.read_parquet(
+                self._stats_path("corpus_stats")).to_pylist()
         }
         post_dir = f"{self.index_dir}/postings"
-        self._postings = self._gen_read(post_dir)
-        self._term_stats = spark.read.parquet(
-            _sp(self._stats_path("term_stats")))
-        self._has_gens = "gen" in self._postings.columns
+        if self._committed is not None:
+            gens = self._committed
+        else:  # pre-manifest layout: every on-disk generation, if any
+            gens = sorted(int(d.split("=", 1)[1]) for d in fs.listdir(post_dir)
+                          if d.startswith("gen="))
+        self._has_gens = self._committed is not None or bool(gens)
+        self._postings_df: DataFrame | None = None
+        self._term_stats_df: DataFrame | None = None
         # block-max bound correction per (gen, field): avgdl_now/avgdl_pack
         # capped below at 1 (see wand.TermPostings)
         self._bound_factor: dict = {}
         gm_path = self._stats_path("gen_meta")
         if self._has_gens and fs.exists(gm_path):
-            for r in spark.read.parquet(_sp(gm_path)).collect():
+            for r in fs.read_parquet(gm_path).to_pylist():
                 _, avgdl_now = self.corpus_stats.get(r["field"], (0, 0.0))
                 pack = float(r["avgdl_pack"]) or avgdl_now
                 self._bound_factor[(int(r["gen"]), r["field"])] = max(
@@ -124,26 +197,56 @@ class SearchEngine:
         self._denied = self._load_denied()
         self._mem_df: dict | None = None
         self._mem_postings: dict | None = None
+        self._resident: dict[int, _GenPostings] = {}
         self._pa_ds = None  # lazily-built pyarrow dataset (local mode)
-        if preload:
-            self._mem_df = {
-                (r["field"], r["term"]): int(r["df"])
-                for r in self._term_stats.collect()
-            }
-            self._mem_postings = {}
-            for r in self._postings.collect():
-                gen = int(r["gen"]) if self._has_gens else 0
-                self._mem_postings.setdefault((r["field"], r["term"]), []).append(
-                    (int(r["shard"]), bytes(r["postings"]), bytes(r["skips"]),
-                     bytes(r["blockmax"]), gen)
-                )
+        if self._preload:
+            ts = fs.read_parquet(self._stats_path("term_stats"),
+                                 columns=["field", "term", "df"])
+            self._mem_df = dict(zip(
+                zip(ts["field"].to_pylist(), ts["term"].to_pylist()),
+                ts["df"].to_pylist()))
+            # per-generation resident postings: a generation the previous
+            # snapshot held with the same part files is shared, not re-read
+            dirs = ({g: f"{post_dir}/gen={g}" for g in gens}
+                    if self._has_gens else {0: post_dir})
+            for g, d in dirs.items():
+                files = _part_files(d)
+                prev = held.get(g)
+                self._resident[g] = (
+                    prev if prev is not None and prev.files == files
+                    else _GenPostings(d, files, g))
+            merged: dict = {}
+            for g in sorted(self._resident):
+                for key, lst in self._resident[g].lists.items():
+                    cur = merged.get(key)
+                    if cur is None:
+                        merged[key] = list(lst)
+                    else:
+                        cur.extend(lst)
+            self._mem_postings = merged
+
+    @property
+    def _postings(self) -> DataFrame:
+        """The committed postings as a Spark relation (cluster mode)."""
+        if self._postings_df is None:
+            self._postings_df = self._gen_read(f"{self.index_dir}/postings")
+        return self._postings_df
+
+    @property
+    def _term_stats(self) -> DataFrame:
+        if self._term_stats_df is None:
+            self._term_stats_df = self.spark.read.parquet(
+                _sp(self._stats_path("term_stats")))
+        return self._term_stats_df
 
     def refresh(self) -> "SearchEngine":
         """Re-open the index at the latest committed snapshot (new
         generations, deletions, compactions become visible) — the S11
-        'refresh' analog. Re-runs __init__ in place; cached file listings,
-        preloaded blobs, and the pyarrow dataset are all rebuilt."""
-        self.__init__(self.spark, self.index_dir, preload=self._preload)
+        'refresh' analog. Re-runs __init__ in place; resident generations
+        whose part files are unchanged are kept, everything else (stats,
+        tombstones, file listings, the pyarrow dataset) is re-read."""
+        self.__init__(self.spark, self.index_dir, preload=self._preload,
+                      reuse=self)
         return self
 
     # ------------------------------------------------------------------
@@ -236,7 +339,7 @@ class SearchEngine:
             return int(v)
         meta = f"{self.index_dir}/index_meta"
         if fs.exists(meta):
-            rows = self.spark.read.parquet(_sp(meta)).collect()
+            rows = fs.read_parquet(meta, columns=["n_shards"]).to_pylist()
             if rows:
                 return int(rows[0]["n_shards"])
         shards = {
@@ -509,9 +612,7 @@ class SearchEngine:
                     # FS pyarrow can't reach) — but SAY so: a corrupt
                     # footer silently costing a Spark job per query is an
                     # operator problem, not a code path
-                    import logging
-
-                    logging.getLogger(__name__).warning(
+                    log.warning(
                         "local postings lookup failed; falling back to "
                         "the Spark path for this query", exc_info=True,
                     )

@@ -233,14 +233,20 @@ class _Snapshot:
             self._emb_raw = self.matn * self.emb_norms[:, None]
         return self._emb_raw
 
-    def __init__(self, spark, index_dir: str,
+    def __init__(self, spark, index_dir: str, prev: "_Snapshot | None" = None,
                  ivf_threshold: int | None = None, ivf_cells: int | None = None,
                  ivf_probes: int | None = None, ivf_assign: int = 2):
+        """``prev``: the snapshot this one replaces; its engine's resident
+        postings generations are shared where their part files are
+        unchanged (see SearchEngine ``reuse``). Everything else — stats,
+        tombstones, doc metadata, embeddings and the attribute indexes —
+        is re-read with pyarrow; no Spark job runs."""
         import pyarrow.dataset as ds
 
         from .index import fs
 
-        self.engine = SearchEngine(spark, index_dir, preload=True)
+        self.engine = SearchEngine(spark, index_dir, preload=True,
+                                   reuse=prev.engine if prev else None)
         base = index_dir.rstrip("/")
         cols = ["doc_id", "oid", "aid", "title", "text", "category",
                 "publisher", "url", "published_at"]
@@ -454,12 +460,14 @@ class ServingContext:
         analog): builds the new state OFF TO THE SIDE and swaps it in with
         one attribute assignment — concurrent searches keep the old
         snapshot until the swap and never observe a half-built context.
+        Postings generations the current snapshot holds are handed over,
+        so the cost tracks what changed since, not the index size.
         Serialized: two concurrent POSTs to /api/refresh would otherwise
         each build a snapshot, and the LATER-finishing (possibly
         older-read) build would win the swap."""
         with self._refresh_lock:
             self._snap = _Snapshot(self.spark, self.index_dir,
-                                   **self._ivf_opts)
+                                   prev=self._snap, **self._ivf_opts)
 
     # -- candidate filter (precomputed snapshot attribute index) ----------
     @staticmethod

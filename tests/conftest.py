@@ -1,3 +1,4 @@
+import contextlib
 import os
 import shutil
 import sys
@@ -36,3 +37,28 @@ def stats_dir(index_dir: str, name: str) -> str:
         if vs:
             return f"{base}/v_{max(vs)}"
     return base
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Collect the ids of the Spark jobs started inside the block, read
+    from the status store (as perfbench/probes.py reads them). The
+    listener bus is drained on both ends, so a job's start event is in
+    the store before it is counted::
+
+        with spark_jobs(spark) as jobs:
+            ...
+        assert jobs == []
+    """
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
+
+    def job_ids() -> set:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    before = job_ids()
+    started: list = []
+    yield started
+    started.extend(sorted(job_ids() - before))

@@ -464,6 +464,25 @@ def test_ledger_invalidation_is_clock_free(spark, tmp_path):
     assert led.completed("fp") == {("docs.g1", 0)}
 
 
+def test_ledger_read_starts_no_spark_job(spark, tmp_path):
+    """Every build and wave starts with completed(): it reads the ledger
+    on the driver (pyarrow, fingerprint-filtered), not through a Spark
+    job, and a missing ledger dir reads as nothing done."""
+    from baram_spark.index.lineage import LineageLedger
+    from tests.conftest import spark_jobs
+
+    led = LineageLedger(spark, f"{tmp_path}/ledger")
+    with spark_jobs(spark) as jobs:
+        assert led.completed("fp") == set()
+        led.record_many([("docs.g1", 0, "fp", 0, 10, 1.0),
+                         ("postings.g1", 1, "other", 0, 5, 1.0)])
+        led.invalidate("fp")
+        led.record("docs.g1", 0, "fp", 0, 10, 1.0)
+        assert led.completed("fp") == {("docs.g1", 0)}
+        assert led.completed("other") == {("postings.g1", 1)}
+    assert jobs == []
+
+
 def test_vacuum_is_an_occ_commit(spark, tmp_path):
     """vacuum participates in optimistic concurrency like any commit:
     (1) it ADVANCES snapshot_id, so a writer whose base snapshot predates

@@ -343,3 +343,101 @@ def test_arrow_packer_slices_emit_at_bytes_cap(monkeypatch):
             for v in out.column(col).to_pylist()
         )
         assert payload <= cap + per_row_max
+
+
+def test_arrow_packer_emit_cap_counts_term_bytes(monkeypatch):
+    """The term column is pa.string(), with the same 32-bit offsets as the
+    blob columns, so the emit cap counts its bytes too: with long terms
+    and tiny blobs, every emitted batch keeps terms + blobs within the cap
+    (plus one row), and the rows are the uncapped packer's, unchanged."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from baram_spark.index import build
+    from baram_spark.index.build import _pack_partition_arrow
+    from baram_spark.index.codec import CODEC_VARINT
+
+    rng = np.random.default_rng(29)
+    n = 3_000
+    group = rng.integers(0, 200, n)
+    pdf = pd.DataFrame(
+        {
+            "doc_id": rng.choice(10**9, size=n, replace=False).astype(
+                "int64"),
+            "field": np.where(group % 2 == 0, "title", "content"),
+            # ~600-byte terms: the term column outweighs the blobs
+            "term": [f"{'t' * 600}{g // 2}" for g in group],
+            "tf": rng.integers(1, 9, n).astype("int32"),
+            "dl": rng.integers(5, 400, n).astype("int32"),
+            "shard": (group % 4).astype("int32"),
+            "salt": np.zeros(n, dtype="int32"),
+        }
+    )
+    avgdl = {"title": 5.0, "content": 130.0}
+    batches = [pa.RecordBatch.from_pandas(c, preserve_index=False)
+               for c in np.array_split(pdf, 3)]
+
+    def rows(outs):
+        t = pa.Table.from_batches(outs).to_pydict()
+        return list(zip(t["shard"], t["field"], t["term"], t["salt"],
+                        t["df"], t["postings"], t["skips"], t["blockmax"]))
+
+    whole = list(_pack_partition_arrow(avgdl, CODEC_VARINT)(iter(batches)))
+    all_rows = rows(whole)
+    blob_bytes = sum(len(p) + len(s) + len(b)
+                     for *_, p, s, b in all_rows)
+    term_bytes = sum(len(r[2].encode()) for r in all_rows)
+    assert term_bytes > 4 * blob_bytes
+
+    cap = 20_000
+    monkeypatch.setattr(build, "PACK_EMIT_BYTES_CAP", cap)
+    sliced = list(_pack_partition_arrow(avgdl, CODEC_VARINT)(iter(batches)))
+
+    assert rows(sliced) == all_rows  # same rows and blobs, same order
+    # counting blobs alone would cut blob_bytes // cap + 1 batches
+    assert len(sliced) > blob_bytes // cap + 1
+    per_row_max = max(len(r[2].encode()) + len(r[5]) + len(r[6]) + len(r[7])
+                      for r in all_rows)
+    for out in sliced:
+        terms = sum(len(t.encode()) for t in out.column("term").to_pylist())
+        blobs = sum(len(v) for col in ("postings", "skips", "blockmax")
+                    for v in out.column(col).to_pylist())
+        assert terms + blobs <= cap + per_row_max
+
+
+def test_row_sized_postings_partitions_keep_blobs_and_ledger(
+        spark, tmp_path, monkeypatch):
+    """The postings exchange is sized by the doc_terms rows a shard group
+    packs (capped at the old fixed 4 x shards). The partition count is a
+    layout choice only: blobs and the per-shard ledger rows are identical
+    to the fixed-count build, and the chosen counts are in the metrics."""
+    from baram_spark.corpus import pages_df
+    from baram_spark.index import builder as builder_mod
+    from baram_spark.index.builder import IndexBuilder, postings_partitions
+
+    assert postings_partitions(0, 2) == 1
+    assert postings_partitions(builder_mod.POSTINGS_ROWS_PER_PARTITION + 1,
+                               2) == 2
+    assert postings_partitions(10**12, 2) == 8  # the fixed layout's cap
+
+    def build(name):
+        out = f"{tmp_path}/{name}"
+        b = IndexBuilder(spark, out, n_shards=4, salt_threshold=10**9)
+        m = b.build(pages_df(spark, 200, partitions=4), fingerprint="fp")
+        blobs = sorted(
+            (r["shard"], r["field"], r["term"], r["df"], bytes(r["postings"]),
+             bytes(r["skips"]), bytes(r["blockmax"]))
+            for r in spark.read.parquet(f"{out}/postings").collect())
+        ledger = sorted(
+            (r["stage"], r["partition_id"], r["rows_out"])
+            for r in b.ledger.metrics() if r["stage"] == "postings")
+        return m["postings_partitions"], blobs, ledger
+
+    sized = build("sized")
+    monkeypatch.setattr(builder_mod, "POSTINGS_ROWS_PER_PARTITION", 1)
+    fixed = build("fixed")
+    assert fixed[0] == [8, 8]  # 4 x the 2 shards of each group
+    assert sized[0] == [1, 1]  # 200 pages fit one partition per group
+    assert sized[1] == fixed[1]
+    assert sized[2] == fixed[2] and len(sized[2]) == 4
