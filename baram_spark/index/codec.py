@@ -13,6 +13,10 @@ pointers every ``BLOCK`` postings, and a per-block score upper bound
 Everything is numpy-vectorized — no per-posting Python loops; the only
 Python-level loop is over 128-entry blocks during final blob assembly.
 
+A serving node does not keep the blobs: ``decode_generation`` turns a whole
+generation's blob columns into :class:`PostingsColumns`, flat CSR arrays a
+query gathers from (16 B per posting plus 24 B per block).
+
 Blob formats (all little-endian):
 
 ``postings_blob``:
@@ -30,12 +34,15 @@ Blob formats (all little-endian):
                  count_0..] (offset = byte offset of block start in
                  postings_blob, enabling O(1) block seek).
 
-``blockmax_blob``: float32 array, one score bound per block.
+``blockmax_blob``: float64 array, one score bound per block.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
+import pyarrow as pa
 
 BLOCK = 128
 CODEC_VARINT = 0
@@ -84,20 +91,21 @@ def varint_decode(buf: bytes | np.ndarray, count: int | None = None) -> np.ndarr
     raw = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, bytearray, memoryview)) else buf
     if raw.size == 0:
         return np.zeros(0, dtype=np.uint64)
-    payload = (raw & 0x7F).astype(np.uint64)
-    terminator = (raw & 0x80) == 0
-    # group id per byte: 0-based index of the varint this byte belongs to
-    group = np.zeros(raw.size, dtype=np.int64)
-    group[1:] = np.cumsum(terminator)[:-1]
-    # shift within group = byte position within its varint * 7
-    starts = np.zeros(raw.size, dtype=np.int64)
-    term_idx = np.flatnonzero(terminator)
-    # position within group: index - start_of_group
-    group_starts = np.concatenate(([0], term_idx[:-1] + 1))
-    pos_in_group = np.arange(raw.size) - group_starts[group]
-    vals = payload << (pos_in_group.astype(np.uint64) * np.uint64(7))
-    out = np.zeros(term_idx.size, dtype=np.uint64)
-    np.add.at(out, group, vals)
+    ends = np.flatnonzero(raw < 0x80)  # terminator byte of every value
+    if ends.size == 0 or ends[-1] != raw.size - 1:
+        raise ValueError("varint stream ends inside a value")
+    if ends.size == raw.size:  # every value is one byte
+        out = raw.astype(np.uint64)
+    else:
+        starts = np.empty_like(ends)
+        starts[0] = 0
+        starts[1:] = ends[:-1] + 1
+        # shift of each byte = 7 × its position within its varint
+        shift = np.arange(raw.size, dtype=np.int64)
+        shift -= np.repeat(starts, ends - starts + 1)
+        vals = (raw & 0x7F).astype(np.uint64)
+        vals <<= (7 * shift).astype(np.uint64)
+        out = np.add.reduceat(vals, starts)  # disjoint bit fields: exact
     if count is not None:
         out = out[:count]
     return out
@@ -406,23 +414,8 @@ def decode_postings(postings_blob: bytes, skips_blob: bytes) -> tuple[np.ndarray
         return empty, empty.copy(), empty.copy()
     codec = postings_blob[0]
     if codec == CODEC_VARINT:
-        vals = varint_decode(np.frombuffer(postings_blob, dtype=np.uint8)[1:])
-        n = int(counts.sum())
-        deltas = np.empty(n, dtype=np.uint64)
-        tfs = np.empty(n, dtype=np.int64)
-        dls = np.empty(n, dtype=np.int64)
-        vpos = opos = 0
-        for bidx in range(n_blocks):
-            c = int(counts[bidx])
-            vpos += 1  # skip the count varint
-            deltas[opos : opos + c] = vals[vpos : vpos + c]
-            tfs[opos : opos + c] = vals[vpos + c : vpos + 2 * c].astype(np.int64)
-            dls[opos : opos + c] = vals[vpos + 2 * c : vpos + 3 * c].astype(np.int64)
-            vpos += 3 * c
-            opos += c
-        # per-block delta bases chain continuously, so one global cumsum
-        doc_ids = np.cumsum(deltas.astype(np.int64)) - 1
-        return doc_ids, tfs, dls
+        return _varint_lists(np.frombuffer(postings_blob, dtype=np.uint8)[1:],
+                             counts, np.array([counts.sum()], dtype=np.int64))
     all_ids, all_tfs, all_dls = [], [], []
     prev = -1
     for bidx in range(n_blocks):
@@ -443,15 +436,68 @@ _COUNT_BYTES = [b""] + [
 ]
 
 
+def _varint_lists(payload: np.ndarray, C: np.ndarray, dfs: np.ndarray
+                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode the varint payloads of many posting lists in ONE vectorized
+    pass — THE one copy of the varint stream layout.
+
+    ``payload`` is the lists' blobs joined, codec bytes stripped (terminated
+    LEB128 streams concatenate cleanly); ``C`` is every block's posting
+    count in stream order and ``dfs`` each list's posting count. Per-block
+    delta/tf/dl segments are separated with global index arithmetic — no
+    per-list or per-block Python loops over values. Returns the lists'
+    concatenated ``(doc_ids, tfs, dls)`` as int64."""
+    e = np.zeros(0, dtype=np.int64)
+    C = np.asarray(C, dtype=np.int64)
+    if C.size == 0:  # every list is zero-block
+        return e, e.copy(), e.copy()
+    vals = varint_decode(payload)
+    total = int(C.sum())
+    # value-stream layout per block: [1 count][C deltas][C tfs][C dls]
+    seg = 1 + 3 * C
+    S = np.concatenate(([0], np.cumsum(seg)[:-1]))  # block starts in vals
+    within = np.arange(total, dtype=np.int64) - np.repeat(
+        np.cumsum(C) - C, C
+    )
+    base = np.repeat(S + 1, C)
+    creps = np.repeat(C, C)
+    deltas = vals[base + within]
+    tfs = vals[base + creps + within].astype(np.int64)
+    dls = vals[base + 2 * creps + within].astype(np.int64)
+
+    # segmented cumsum: delta chains reset at each LIST boundary. The
+    # running sum grows by ~last_doc_id per list; with hash-range ids
+    # (~2^50) a single global cumsum over a very large batch could
+    # silently wrap int64, so the list axis is chunked — each chunk's
+    # partial sum stays orders of magnitude below 2^63 while the math
+    # inside a chunk remains fully vectorized.
+    n_lists = dfs.size
+    first = np.cumsum(dfs) - dfs  # first posting index of each list
+    doc_ids = np.empty(total, dtype=np.int64)
+    CHUNK = 4096  # 4096 × max_doc_id(≈2^50) ≈ 2^62 — safe margin
+    for c0 in range(0, n_lists, CHUNK):
+        c1 = min(c0 + CHUNK, n_lists)
+        lo = int(first[c0])
+        hi = int(first[c1 - 1] + dfs[c1 - 1])
+        if hi == lo:
+            continue  # every list in the chunk is zero-df: nothing to fill
+        seg = deltas[lo:hi].astype(np.int64)
+        g = np.cumsum(seg)
+        # a zero-df list sitting at the chunk's end would index one past
+        # seg; clamp — np.repeat with dfs=0 discards the value anyway
+        f_local = np.minimum((first[c0:c1] - lo).astype(np.int64),
+                             len(seg) - 1)
+        offset = np.repeat(g[f_local] - seg[f_local], dfs[c0:c1])
+        doc_ids[lo:hi] = g - offset - 1
+    return doc_ids, tfs, dls
+
+
 def decode_many(blobs, skips_blobs) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Batch-decode MANY varint posting blobs in ONE vectorized pass.
 
-    The merge side of ``encode_many``: terminated LEB128 streams concatenate
-    cleanly, so every blob's payload joins one ``varint_decode`` call and
-    per-block delta/tf/dl segments are separated with global index
-    arithmetic — no per-blob or per-block Python loops over values (the
-    blob-shuffle merge decodes millions of small partials; per-call
-    overhead is the entire cost at that shape).
+    The merge side of ``encode_many`` (the blob-shuffle merge decodes
+    millions of small partials; per-call overhead is the entire cost at
+    that shape), built on ``_varint_lists``.
 
     Returns ``(doc_ids, tfs, dls, dfs)``: the concatenated postings of every
     blob in input order plus the per-blob posting count. Raises ValueError
@@ -473,48 +519,114 @@ def decode_many(blobs, skips_blobs) -> tuple[np.ndarray, np.ndarray, np.ndarray,
         if bl[0] != CODEC_VARINT:
             raise ValueError("decode_many handles the varint codec only")
         payloads.append(np.frombuffer(bl, dtype=np.uint8)[1:])
-    vals = varint_decode(np.concatenate(payloads))
+    ids, tfs, dls = _varint_lists(np.concatenate(payloads),
+                                  np.concatenate(counts_l), dfs)
+    return ids, tfs, dls, dfs
 
-    C = np.concatenate(counts_l).astype(np.int64)  # all blocks, stream order
-    if C.size == 0:  # every blob in the batch is zero-block
-        return e, e.copy(), e.copy(), dfs
-    total = int(C.sum())
-    # value-stream layout per block: [1 count][C deltas][C tfs][C dls]
-    seg = 1 + 3 * C
-    S = np.concatenate(([0], np.cumsum(seg)[:-1]))  # block starts in vals
-    within = np.arange(total, dtype=np.int64) - np.repeat(
-        np.cumsum(C) - C, C
-    )
-    base = np.repeat(S + 1, C)
-    creps = np.repeat(C, C)
-    deltas = vals[base + within]
-    tfs = vals[base + creps + within].astype(np.int64)
-    dls = vals[base + 2 * creps + within].astype(np.int64)
 
-    # segmented cumsum: delta chains reset at each BLOB boundary. The
-    # running sum grows by ~last_doc_id per blob; with hash-range ids
-    # (~2^50) a single global cumsum over a very large merge batch could
-    # silently wrap int64, so the blob axis is chunked — each chunk's
-    # partial sum stays orders of magnitude below 2^63 while the math
-    # inside a chunk remains fully vectorized.
-    first = np.cumsum(dfs) - dfs  # first posting index of each blob
-    doc_ids = np.empty(total, dtype=np.int64)
-    CHUNK = 4096  # 4096 × max_doc_id(≈2^50) ≈ 2^62 — safe margin
-    for c0 in range(0, n_blobs, CHUNK):
-        c1 = min(c0 + CHUNK, n_blobs)
-        lo = int(first[c0])
-        hi = int(first[c1 - 1] + dfs[c1 - 1])
-        if hi == lo:
-            continue  # every blob in the chunk is zero-df: nothing to fill
-        seg = deltas[lo:hi].astype(np.int64)
-        g = np.cumsum(seg)
-        # a zero-df blob sitting at the chunk's end would index one past
-        # seg; clamp — np.repeat with dfs=0 discards the value anyway
-        f_local = np.minimum((first[c0:c1] - lo).astype(np.int64),
-                             len(seg) - 1)
-        offset = np.repeat(g[f_local] - seg[f_local], dfs[c0:c1])
-        doc_ids[lo:hi] = g - offset - 1
-    return doc_ids, tfs, dls, dfs
+class PostingsColumns(NamedTuple):
+    """Many posting lists decoded into CSR form (compressed sparse rows:
+    flat arrays plus per-list start offsets) — the resident layout a
+    serving node scores from. List ``i`` owns postings
+    ``offsets[i]:offsets[i+1]`` and blocks
+    ``block_offsets[i]:block_offsets[i+1]``. Costs 16 B per posting plus
+    24 B per block."""
+
+    ids: np.ndarray            # int64 doc ids, ascending within a list
+    tfs: np.ndarray            # int32
+    dls: np.ndarray            # int32 analyzed field lengths
+    offsets: np.ndarray        # int64 [n_lists + 1] posting offsets
+    block_offsets: np.ndarray  # int64 [n_lists + 1] block-table offsets
+    block_last: np.ndarray     # int64 last doc id of each block
+    block_end: np.ndarray      # int64 end offset of each block in its list
+    block_max: np.ndarray      # float64 block-max tf-norm bound
+
+    def list_arrays(self, i: int) -> tuple:
+        """List ``i`` as views: (ids, tfs, dls, block_last, block_end,
+        block_max)."""
+        lo, hi = self.offsets[i], self.offsets[i + 1]
+        blo, bhi = self.block_offsets[i], self.block_offsets[i + 1]
+        return (self.ids[lo:hi], self.tfs[lo:hi], self.dls[lo:hi],
+                self.block_last[blo:bhi], self.block_end[blo:bhi],
+                self.block_max[blo:bhi])
+
+
+def _binary_buffers(col) -> tuple[np.ndarray, np.ndarray]:
+    """(value offsets rebased to 0, value bytes) of a binary Arrow array
+    or chunked array, read straight from its buffers. Cast to large_binary
+    first, so the joined chunks may exceed 2 GiB."""
+    if not pa.types.is_binary(col.type):
+        raise TypeError(f"posting column of type {col.type}, not binary")
+    arr = col.cast(pa.large_binary())
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
+    if n == 0:
+        return np.zeros(1, dtype=np.int64), np.zeros(0, dtype=np.uint8)
+    if arr.null_count:
+        raise ValueError("null posting blob")
+    _, off_buf, data_buf = arr.buffers()
+    off = np.frombuffer(off_buf, dtype=np.int64, count=n + 1,
+                        offset=8 * arr.offset)
+    data = np.frombuffer(data_buf, dtype=np.uint8, count=int(off[-1] - off[0]),
+                         offset=int(off[0]))
+    return off - off[0], data
+
+
+def decode_generation(postings, skips, blockmax) -> PostingsColumns:
+    """Decode a whole generation's ``postings`` / ``skips`` / ``blockmax``
+    binary Arrow columns (one posting list per row) into
+    :class:`PostingsColumns`, with a constant number of numpy calls.
+
+    The skip and block-max tables are gathered from the columns' flat data
+    buffers; every varint row's payload joins ONE ``_varint_lists`` pass.
+    FOR/PFOR rows go through ``decode_postings``, one call per row."""
+    poff, pdata = _binary_buffers(postings)
+    soff, sdata = _binary_buffers(skips)
+    _, bdata = _binary_buffers(blockmax)
+    n = poff.size - 1
+    # skip tables, concatenated: [n_blocks, last_ids.., offsets.., counts..]
+    sk = np.frombuffer(sdata, dtype=np.int64)
+    sstart = soff[:-1] // 8
+    nb = sk[sstart]
+    block_offsets = np.concatenate(([0], np.cumsum(nb))).astype(np.int64)
+    n_blk = int(block_offsets[-1])
+    within = np.arange(n_blk, dtype=np.int64) - np.repeat(block_offsets[:-1], nb)
+    first = np.repeat(sstart + 1, nb) + within
+    block_last = sk[first]
+    counts = sk[first + 2 * np.repeat(nb, nb)]
+    ccum = np.concatenate(([0], np.cumsum(counts))).astype(np.int64)
+    offsets = ccum[block_offsets]
+    dfs = np.diff(offsets)
+    block_end = ccum[1:] - np.repeat(offsets[:-1], nb)
+    block_max = np.frombuffer(bdata, dtype=np.float64)
+    if block_max.size != n_blk:
+        raise ValueError(f"{block_max.size} block-max bounds for "
+                         f"{n_blk} blocks")
+
+    # postings: strip each blob's codec byte, decode every varint row at once
+    starts = poff[:-1]
+    if (poff[1:] == starts).any():
+        raise ValueError("empty posting blob")
+    is_var = pdata[starts] == CODEC_VARINT
+    keep = np.repeat(is_var, np.diff(poff))
+    keep[starts] = False
+    ids, tfs, dls = _varint_lists(pdata[keep], counts[np.repeat(is_var, nb)],
+                                  dfs[is_var])
+    if not is_var.all():
+        at = np.repeat(is_var, dfs)
+        parts = [np.empty(int(offsets[-1]), dtype=np.int64) for _ in range(3)]
+        for part, v in zip(parts, (ids, tfs, dls)):
+            part[at] = v
+        for i in np.flatnonzero(~is_var):
+            dec = decode_postings(pdata[poff[i]:poff[i + 1]].tobytes(),
+                                  sdata[soff[i]:soff[i + 1]].tobytes())
+            for part, v in zip(parts, dec):
+                part[offsets[i]:offsets[i + 1]] = v
+        ids, tfs, dls = parts
+    return PostingsColumns(ids, tfs.astype(np.int32), dls.astype(np.int32),
+                           offsets, block_offsets, block_last, block_end,
+                           block_max)
 
 
 def encode_many(

@@ -12,7 +12,10 @@ Query lifecycle (the Spark-native analog of ``baram search`` →
    OpenSearch/Lucene shard model), so each shard holds all query terms for
    its doc subset and can compute exact local BM25 scores.
 4. per-shard block-max-WAND top-k inside an Arrow-batched ``applyInPandas``
-   (or driver-side for ``mode="local"`` low-latency paths).
+   (or driver-side for ``mode="local"`` low-latency paths). A looked-up
+   posting list is decoded once into a ``wand.TermPostings``; a preloaded
+   engine instead holds every generation decoded since it loaded
+   (``_GenPostings``), so its queries gather blocks and decode nothing.
 5. global k-merge of the per-shard top-k lists (k·n_shards rows — O(k)
    driver work), deterministic tie-break (score desc, doc_id asc).
 
@@ -30,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 import numpy as np
 
 from ..index import fs
+from ..index.codec import decode_generation
 from ..index.fs import spark_url as _sp
 from ..textproc.analyzer import analyze_search
 from .bm25 import DEFAULT_K, FIELD_BOOSTS, FIELDS, idf
@@ -66,20 +70,24 @@ def _part_files(d: str) -> tuple[tuple[str, int], ...]:
 
 
 class _GenPostings:
-    """One generation's postings, resident on the driver:
-    ``lists[(field, term)] = [(shard, blob, skips, blockmax, gen), ...]``.
+    """One generation's postings, decoded once when it loads and resident
+    on the driver: ``cols`` holds every posting list of the generation as
+    flat CSR arrays (``codec.decode_generation``) and
+    ``lists[(field, term)] = [(shard, row), ...]`` indexes them. The
+    compressed blobs are not kept.
 
     Immutable once loaded, so consecutive snapshots of a serving node
     share it: a refresh loads only generations it does not already hold.
     ``files`` is the part-file listing it was read from — the reuse key."""
 
-    __slots__ = ("files", "lists")
+    __slots__ = ("files", "lists", "cols")
 
-    def __init__(self, d: str, files: tuple, gen: int):
+    def __init__(self, d: str, files: tuple):
         import pyarrow.dataset as ds
 
         self.files = files
         self.lists: dict = {}
+        self.cols = None
         if not files:
             return
         pa_fs, root = fs.resolve(d)
@@ -89,25 +97,25 @@ class _GenPostings:
         cols = ["field", "term", "postings", "skips", "blockmax"]
         has_shard = "shard" in dset.schema.names
         tbl = dset.to_table(columns=cols + (["shard"] if has_shard else []))
+        self.cols = decode_generation(tbl["postings"], tbl["skips"],
+                                      tbl["blockmax"])
         shards = (tbl["shard"].to_pylist() if has_shard
                   else [0] * tbl.num_rows)
         lists = self.lists
-        for f, t, s, b, sk, bm in zip(
-                tbl["field"].to_pylist(), tbl["term"].to_pylist(), shards,
-                tbl["postings"].to_pylist(), tbl["skips"].to_pylist(),
-                tbl["blockmax"].to_pylist()):
-            lists.setdefault((f, t), []).append((int(s), b, sk, bm, gen))
+        for row, key in enumerate(zip(tbl["field"].to_pylist(),
+                                      tbl["term"].to_pylist())):
+            lists.setdefault(key, []).append((int(shards[row]), row))
 
 
 class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str,
                  preload: bool = False,
                  reuse: "SearchEngine | None" = None):
-        """``preload=True`` pins term stats + posting blobs in driver memory
-        (the 'open index' serving mode — an OpenSearch node keeps exactly
-        this resident); the open and every query then run with zero Spark
-        jobs. Default is the cluster mode: parquet-pruned lookups +
-        per-shard scoring.
+        """``preload=True`` pins term stats + postings in driver memory,
+        each generation decoded once into flat arrays (the 'open index'
+        serving mode — an OpenSearch node keeps exactly this resident);
+        the open and every query then run with zero Spark jobs. Default
+        is the cluster mode: parquet-pruned lookups + per-shard scoring.
 
         ``reuse``: an earlier preloaded engine over the same index whose
         resident generations this one may share (the serving refresh):
@@ -196,7 +204,7 @@ class SearchEngine:
         # executors inside the task closure.
         self._denied = self._load_denied()
         self._mem_df: dict | None = None
-        self._mem_postings: dict | None = None
+        # generation -> its resident postings, in generation order
         self._resident: dict[int, _GenPostings] = {}
         self._pa_ds = None  # lazily-built pyarrow dataset (local mode)
         if self._preload:
@@ -209,21 +217,12 @@ class SearchEngine:
             # snapshot held with the same part files is shared, not re-read
             dirs = ({g: f"{post_dir}/gen={g}" for g in gens}
                     if self._has_gens else {0: post_dir})
-            for g, d in dirs.items():
+            for g, d in sorted(dirs.items()):
                 files = _part_files(d)
                 prev = held.get(g)
                 self._resident[g] = (
                     prev if prev is not None and prev.files == files
-                    else _GenPostings(d, files, g))
-            merged: dict = {}
-            for g in sorted(self._resident):
-                for key, lst in self._resident[g].lists.items():
-                    cur = merged.get(key)
-                    if cur is None:
-                        merged[key] = list(lst)
-                    else:
-                        cur.extend(lst)
-            self._mem_postings = merged
+                    else _GenPostings(d, files))
 
     @property
     def _postings(self) -> DataFrame:
@@ -429,27 +428,28 @@ class SearchEngine:
         if not terms:
             return {}
         if self._mem_df is not None:
-            pairs = [
-                (f, t, self._mem_df.get((f, t)))
-                for f in FIELDS
-                for t in terms
-            ]
-            rows = [
-                {"field": f, "term": t, "df": d} for f, t, d in pairs if d
-            ]
-        else:
-            rows = (
-                self._term_stats.filter(F.col("term").isin(terms))
-                .select("field", "term", "df")
-                .collect()
-            )
+            return self._idf_weights(
+                (f, t, self._mem_df.get((f, t))) for f in FIELDS
+                for t in terms)
+        rows = (
+            self._term_stats.filter(F.col("term").isin(terms))
+            .select("field", "term", "df")
+            .collect()
+        )
+        return self._idf_weights((r["field"], r["term"], r["df"])
+                                 for r in rows)
+
+    def _idf_weights(self, dfs) -> dict:
+        """{(field, term): boost * idf} from (field, term, df) triples; a
+        key repeated over shards and generations sums its df."""
+        total: dict = {}
+        for f, t, d in dfs:
+            total[(f, t)] = total.get((f, t), 0) + int(d or 0)
         weights = {}
-        for r in rows:
-            n_docs, _ = self.corpus_stats.get(r["field"], (0, 0.0))
-            if n_docs and r["df"]:
-                weights[(r["field"], r["term"])] = FIELD_BOOSTS[r["field"]] * idf(
-                    n_docs, int(r["df"])
-                )
+        for (f, t), d in total.items():
+            n_docs, _ = self.corpus_stats.get(f, (0, 0.0))
+            if n_docs and d:
+                weights[(f, t)] = FIELD_BOOSTS[f] * idf(n_docs, d)
         return weights
 
     def _postings_rows_local(self, terms: list[str]) -> list[tuple]:
@@ -586,24 +586,23 @@ class SearchEngine:
                     s: np.sort(np.asarray(ids, dtype=np.int64))
                     for s, ids in tmp.items()
                 }
-            # ONE job (or zero when preloaded): global df is the sum of the
-            # per-row df over all shards+generations of a term — derived
-            # from the same collected rows that carry the blobs, so no
-            # separate term_stats lookup is needed.
-            if self._mem_postings is not None:
-                rows = [
-                    (field, term, None, blob, skips, bmax, gen, shard)
-                    for field in FIELDS
-                    for term in terms
-                    for shard, blob, skips, bmax, gen in self._mem_postings.get(
-                        (field, term), ()
-                    )
-                ]
-                df_by_key = {
-                    (f, t): self._mem_df.get((f, t), 0)
-                    for f in FIELDS
-                    for t in terms
-                }
+            # preloaded: weights from the resident df dictionary and
+            # TermPostings over the resident generations' decoded arrays —
+            # zero Spark jobs, nothing decoded per query. Otherwise ONE
+            # lookup whose rows carry the blobs AND the per-row df (global
+            # df is their sum over all shards+generations of a term).
+            by_shard: dict[int, list] = {}
+            if self._preload:
+                weights = self._weights(terms)
+                for (field, term), w in weights.items():
+                    for gen, gp in self._resident.items():
+                        bf = self._bound_factor.get((gen, field),
+                                                    self._bound_missing)
+                        for shard, row in gp.lists.get((field, term), ()):
+                            by_shard.setdefault(shard, []).append(
+                                TermPostings(field, term, w,
+                                             *gp.cols.list_arrays(row),
+                                             avgdls[field], bf))
             else:
                 try:
                     rows = self._postings_rows_local(terms)
@@ -624,28 +623,19 @@ class SearchEngine:
                          int(r["shard"]))
                         for r in collected
                     ]
-                df_by_key: dict = {}
-                for f, t, d, *_ in rows:
-                    df_by_key[(f, t)] = df_by_key.get((f, t), 0) + d
-            weights = {}
-            for (f, t), d in df_by_key.items():
-                n_docs, _ = self.corpus_stats.get(f, (0, 0.0))
-                if n_docs and d:
-                    weights[(f, t)] = FIELD_BOOSTS[f] * idf(n_docs, d)
+                weights = self._idf_weights(r[:3] for r in rows)
+                for field, term, _, blob, skips, bmax, gen, shard in rows:
+                    w = weights.get((field, term))
+                    if w is None:
+                        continue
+                    by_shard.setdefault(shard, []).append(
+                        TermPostings.from_blobs(
+                            field, term, w, blob, skips, bmax,
+                            avgdls[field],
+                            self._bound_factor.get((gen, field),
+                                                   self._bound_missing)))
             if not weights:
                 return []
-            by_shard: dict[int, list] = {}
-            for field, term, _, blob, skips, bmax, gen, shard in rows:
-                w = weights.get((field, term))
-                if w is None:
-                    continue
-                by_shard.setdefault(shard, []).append(
-                    TermPostings(
-                        field, term, w, blob, skips, bmax, avgdls[field],
-                        self._bound_factor.get((gen, field),
-                                               self._bound_missing),
-                    )
-                )
             partials = []
             for shard, shard_terms in by_shard.items():
                 allowed = allowed_flat
@@ -675,7 +665,7 @@ class SearchEngine:
                 if wkey not in weights:
                     continue
                 tps.append(
-                    TermPostings(
+                    TermPostings.from_blobs(
                         row.field, row.term, weights[wkey],
                         bytes(row.postings), bytes(row.skips),
                         bytes(row.blockmax), avgdls[row.field],
@@ -755,7 +745,9 @@ class SearchEngine:
             ).alias("content"),
         )
         if include_highlights:
-            from .hybrid import highlight
+            from .hybrid import highlight, highlight_pattern
+
+            pattern = highlight_pattern(query_text)
 
             def add_highlights(iterator):
                 # reference highlight shape (mod.rs:612-621, flattened
@@ -764,9 +756,9 @@ class SearchEngine:
                 for pdf in iterator:
                     pdf = pdf.copy()
                     pdf["highlights"] = [
-                        highlight(title or "", query_text, n_fragments=1,
+                        highlight(title or "", pattern, n_fragments=1,
                                   frag_len=100)
-                        + highlight(t or "", query_text)
+                        + highlight(t or "", pattern)
                         for title, t in zip(pdf["title"], pdf["text"])
                     ]
                     yield pdf.drop(columns=["text"])

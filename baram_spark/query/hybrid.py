@@ -160,18 +160,29 @@ def hybrid_search(
 _MARK_OPEN, _MARK_CLOSE = "<mark>", "</mark>"
 
 
-def highlight(text: str, query_text: str, n_fragments: int = 3,
-              frag_len: int = 150) -> list[str]:
-    """Matched-term snippets with <mark> tags (Q5 shape,
-    src/embedding/mod.rs:612-621): up to ``n_fragments`` windows of
-    ``frag_len`` chars centered on query-term occurrences."""
+def highlight_pattern(query_text: str) -> re.Pattern | None:
+    """The match pattern of ``highlight``: the query's analyzed terms,
+    longest first, case-insensitive. None when the query analyzes to no
+    term. Build it once per request and pass it to every ``highlight``
+    call of that request."""
     terms = [t for t in analyze_search(query_text) if t]
-    if not terms or not text:
-        return []
-    pattern = re.compile(
+    if not terms:
+        return None
+    return re.compile(
         "|".join(re.escape(t) for t in sorted(set(terms), key=len, reverse=True)),
         re.IGNORECASE,
     )
+
+
+def highlight(text: str, query: str | re.Pattern | None,
+              n_fragments: int = 3, frag_len: int = 150) -> list[str]:
+    """Matched-term snippets with <mark> tags (Q5 shape,
+    src/embedding/mod.rs:612-621): up to ``n_fragments`` windows of
+    ``frag_len`` chars centered on query-term occurrences. ``query`` is
+    the query text or its :func:`highlight_pattern`."""
+    pattern = highlight_pattern(query) if isinstance(query, str) else query
+    if pattern is None or not text:
+        return []
     fragments: list[str] = []
     used_ranges: list[tuple[int, int]] = []
     for m in pattern.finditer(text):

@@ -1,17 +1,22 @@
-"""Block-max pruned top-k scoring over packed posting lists.
+"""Block-max pruned top-k scoring over decoded posting lists.
 
 Implements the Block-Max WAND idea (Ding & Suel, SIGIR 2011) in a
 batch/vectorized form suited to numpy rather than doc-at-a-time pointers:
 
-1. Without decoding anything, every term contributes per-block doc-id
-   intervals (from the skip table) with score upper bounds
-   ``weight * blockmax`` (from the block-max table).
+1. Without touching any posting, every term contributes per-block doc-id
+   intervals (from its block table) with score upper bounds
+   ``weight * blockmax``.
 2. Interval sweep: block boundaries from ALL terms split doc-id space into
    segments; each segment's upper bound is the sum of the covering blocks'
    bounds — the WAND pivot bound, evaluated for a whole doc-id range at once.
-3. Segments are scored exactly in descending upper-bound order (decoding
-   only the blocks that overlap them); once every remaining segment's bound
-   is strictly below the running top-k threshold θ, the rest are skipped.
+3. Segments are scored exactly in descending upper-bound order (gathering
+   only the blocks that overlap them out of the decoded arrays and scoring
+   those postings); once every remaining segment's bound is strictly below
+   the running top-k threshold θ, the rest are skipped.
+
+Posting lists arrive decoded (see :class:`TermPostings`): on a serving
+node each generation is decoded once when it loads, so a query only
+gathers and scores — it never decodes a blob.
 
 The skip is provably safe (a doc's true score ≤ its segment's bound, and
 segments with bound == θ are still scored so doc-id tie-breaks stay exact),
@@ -30,24 +35,29 @@ import numpy as np
 
 from ..index.codec import (
     bm25_tf_norm,
-    decode_block,
     decode_blockmax,
+    decode_postings,
     decode_skips,
 )
 from .bm25 import FIELDS, K1, B
 
 
 class TermPostings:
-    """One (field, term) posting list: lazily decodable blocks."""
+    """One (field, term) posting list, decoded: doc ids, tfs and dls plus
+    its block table (last doc id, end offset and block-max per block).
 
-    __slots__ = (
-        "field", "term", "weight", "blob", "last_ids", "offsets",
-        "counts", "blockmax", "avgdl", "_block_cache",
-    )
+    A serving node's lists are views into a resident generation's
+    :class:`~baram_spark.index.codec.PostingsColumns`; a list read from
+    blobs (cluster mode, unloaded local mode) is decoded once by
+    :meth:`from_blobs`. Either way a query only gathers."""
+
+    __slots__ = ("field", "term", "weight", "ids", "tfs", "dls",
+                 "last_ids", "ends", "blockmax", "avgdl")
 
     def __init__(self, field: str, term: str, weight: float,
-                 postings_blob: bytes, skips_blob: bytes,
-                 blockmax_blob: bytes, avgdl: float,
+                 ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+                 last_ids: np.ndarray, ends: np.ndarray,
+                 blockmax: np.ndarray, avgdl: float,
                  bound_factor: float = 1.0):
         """``bound_factor`` ≥ 1 rescales the stored block-max bounds when
         the corpus avgdl has GROWN since this posting list was packed
@@ -58,39 +68,44 @@ class TermPostings:
         self.field = field
         self.term = term
         self.weight = weight
-        self.blob = postings_blob
-        self.last_ids, self.offsets, self.counts = decode_skips(skips_blob)
-        bm = decode_blockmax(blockmax_blob)
-        self.blockmax = bm * bound_factor if bound_factor != 1.0 else bm
+        self.ids, self.tfs, self.dls = ids, tfs, dls
+        self.last_ids, self.ends = last_ids, ends
+        self.blockmax = (blockmax * bound_factor if bound_factor != 1.0
+                         else blockmax)
         self.avgdl = avgdl
-        self._block_cache: dict = {}
+
+    @classmethod
+    def from_blobs(cls, field: str, term: str, weight: float,
+                   postings_blob: bytes, skips_blob: bytes,
+                   blockmax_blob: bytes, avgdl: float,
+                   bound_factor: float = 1.0) -> "TermPostings":
+        """Decode one stored (postings, skips, blockmax) triple."""
+        ids, tfs, dls = decode_postings(postings_blob, skips_blob)
+        last_ids, _, counts = decode_skips(skips_blob)
+        return cls(field, term, weight, ids, tfs, dls, last_ids,
+                   np.cumsum(counts), decode_blockmax(blockmax_blob), avgdl,
+                   bound_factor)
 
     @property
     def n_blocks(self) -> int:
         return self.last_ids.size
 
     def decode_blocks(self, bidxs: np.ndarray):
-        """Decode selected blocks → (doc_ids, contribs[float64]).
-
-        Per-instance memoized: TermPostings lives for one query, and the
-        segment-pruned scorer's ub-ordered windows can touch the same
-        block several times — each block decodes once per query."""
-        ids_l, contrib_l = [], []
-        for bidx in bidxs:
-            bidx = int(bidx)
-            hit = self._block_cache.get(bidx)
-            if hit is None:
-                prev = -1 if bidx == 0 else int(self.last_ids[bidx - 1])
-                ids, tfs, dls, _ = decode_block(
-                    self.blob, int(self.offsets[bidx]), prev)
-                tfn = bm25_tf_norm(tfs, dls, self.avgdl, K1, B)
-                hit = (ids, self.weight * tfn)
-                self._block_cache[bidx] = hit
-            ids_l.append(hit[0])
-            contrib_l.append(hit[1])
-        if not ids_l:
-            return np.zeros(0, dtype=np.int64), np.zeros(0)
-        return np.concatenate(ids_l), np.concatenate(contrib_l)
+        """Gather the selected blocks (ascending, unique indices) →
+        (doc_ids, contribs[float64]): one index gather plus one
+        ``bm25_tf_norm`` call."""
+        bidxs = np.asarray(bidxs, dtype=np.int64)
+        if bidxs.size == self.n_blocks:  # every block: the whole list
+            ids, tfs, dls = self.ids, self.tfs, self.dls
+        else:
+            ends = self.ends[bidxs]
+            starts = np.where(bidxs > 0, self.ends[bidxs - 1], 0)
+            lens = ends - starts
+            # positions of every posting of the selected blocks, in order
+            idx = np.arange(int(lens.sum()), dtype=np.int64) + np.repeat(
+                starts - (np.cumsum(lens) - lens), lens)
+            ids, tfs, dls = self.ids[idx], self.tfs[idx], self.dls[idx]
+        return ids, self.weight * bm25_tf_norm(tfs, dls, self.avgdl, K1, B)
 
 
 def _canonical_order(terms: list) -> list:
@@ -157,7 +172,7 @@ def _accumulate(all_ids: list, all_contribs: list):
 def score_exhaustive(terms: list, k: int, min_score: float | None = None,
                      allowed: np.ndarray | None = None,
                      denied: np.ndarray | None = None):
-    """Exact scoring: decode everything, accumulate, top-k.
+    """Exact scoring: gather every block, accumulate, top-k.
 
     ``allowed`` (sorted int64 doc_ids) applies PRE-ranking filter context —
     the reference's category/date bool-filter (src/embedding/mod.rs:509-531):

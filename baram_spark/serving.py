@@ -35,7 +35,8 @@ import numpy as np
 
 from .query.bm25 import DEFAULT_K
 from .query.engine import MAX_K, SearchEngine
-from .query.hybrid import embed_query, highlight, hybrid_search
+from .query.hybrid import (embed_query, highlight, highlight_pattern,
+                           hybrid_search)
 
 VERSION = "0.2.0"
 
@@ -569,6 +570,7 @@ class ServingContext:
             raise ValueError(f"unknown mode {mode!r}")
 
         results = []
+        pattern = highlight_pattern(q) if hits else None
         for doc_id, score in hits:
             m = snap.meta.get(doc_id)
             if m is None:
@@ -591,9 +593,9 @@ class ServingContext:
                     "url": m["url"],
                     "published_at": pub.isoformat() if pub else None,
                     "highlights": (
-                        highlight(m["title"] or "", q, n_fragments=1,
+                        highlight(m["title"] or "", pattern, n_fragments=1,
                                   frag_len=100)
-                        + highlight(text, q)
+                        + highlight(text, pattern)
                     ) or None,
                 }
             )

@@ -62,3 +62,22 @@ def spark_jobs(spark):
     started: list = []
     yield started
     started.extend(sorted(job_ids() - before))
+
+
+def term_postings(specs, resident: bool) -> list:
+    """TermPostings for ``specs`` — (field, term, weight, (postings, skips,
+    blockmax), avgdl, bound_factor) each — decoded per list from the blobs,
+    or (``resident``) as views into ONE decode_generation of all the lists,
+    the layout a preloaded serving node scores from."""
+    import pyarrow as pa
+
+    from baram_spark.index.codec import decode_generation
+    from baram_spark.query.wand import TermPostings
+
+    if not resident:
+        return [TermPostings.from_blobs(f, t, w, *blobs, avgdl, bf)
+                for f, t, w, blobs, avgdl, bf in specs]
+    cols = decode_generation(*(
+        pa.array([s[3][i] for s in specs], pa.binary()) for i in range(3)))
+    return [TermPostings(f, t, w, *cols.list_arrays(i), avgdl, bf)
+            for i, (f, t, w, _, avgdl, bf) in enumerate(specs)]

@@ -73,43 +73,38 @@ def test_blockmax_zero_block_term_matches_exhaustive():
     """A query term whose postings pack to ZERO blocks in one shard (all
     its docs tombstoned then compacted away in that generation) must not
     crash the pruned path and must rank identically to score_exhaustive
-    (pin for the dbb4f2c wand.py fix)."""
+    (pin for the dbb4f2c wand.py fix) — decoded from blobs or resident."""
     import numpy as np
 
     from baram_spark.index.codec import CODEC_VARINT, encode_postings
-    from baram_spark.query.wand import (
-        TermPostings,
-        score_blockmax,
-        score_exhaustive,
-    )
+    from baram_spark.query.wand import score_blockmax, score_exhaustive
+    from tests.conftest import term_postings
 
     ids = np.array([2, 5, 9], dtype=np.int64)
     tfs = np.array([1, 2, 1], dtype=np.int64)
     dls = np.array([10, 12, 8], dtype=np.int64)
-    blob, skips, bmx = encode_postings(ids, tfs, dls, avgdl=10.0)
-    normal = TermPostings("content", "살아있는", 1.7, blob, skips, bmx,
-                          avgdl=10.0)
-
-    def empty_term():
-        return TermPostings(
-            "content", "사라진", 2.3, bytes([CODEC_VARINT]),
-            np.array([0], dtype=np.int64).tobytes(), b"", avgdl=10.0)
-
-    assert empty_term().n_blocks == 0
-    for terms in ([normal, empty_term()], [empty_term(), normal]):
-        got = score_blockmax(terms, k=10)
-        exp = score_exhaustive(terms, k=10)
-        assert got == exp
-        assert [d for d, _ in got] == [2, 5, 9][:len(got)] or len(got) == 3
-    # a query of ONLY zero-block terms returns empty, pruned or not
-    assert score_blockmax([empty_term()], k=10) == []
-    assert score_exhaustive([empty_term()], k=10) == []
-    # min_score + allowed filtering still work alongside the empty term
-    allowed = np.array([5], dtype=np.int64)
-    got = score_blockmax([normal, empty_term()], k=10, allowed=allowed)
-    assert got == score_exhaustive([normal, empty_term()], k=10,
-                                   allowed=allowed)
-    assert [d for d, _ in got] == [5]
+    live = ("content", "살아있는", 1.7,
+            encode_postings(ids, tfs, dls, avgdl=10.0), 10.0, 1.0)
+    gone = ("content", "사라진", 2.3,
+            (bytes([CODEC_VARINT]), np.array([0], dtype=np.int64).tobytes(),
+             b""), 10.0, 1.0)
+    for resident in (False, True):
+        normal, empty = term_postings([live, gone], resident)
+        assert empty.n_blocks == 0
+        for terms in ([normal, empty], [empty, normal]):
+            got = score_blockmax(terms, k=10)
+            assert got == score_exhaustive(terms, k=10)
+            assert ([d for d, _ in got] == [2, 5, 9][:len(got)]
+                    or len(got) == 3)
+        # a query of ONLY zero-block terms returns empty, pruned or not
+        assert score_blockmax([empty], k=10) == []
+        assert score_exhaustive([empty], k=10) == []
+        # min_score + allowed filtering still work beside the empty term
+        allowed = np.array([5], dtype=np.int64)
+        got = score_blockmax([normal, empty], k=10, allowed=allowed)
+        assert got == score_exhaustive([normal, empty], k=10,
+                                       allowed=allowed)
+        assert [d for d, _ in got] == [5]
 
 
 def test_missing_bound_row_fallback_keeps_pruning_safe():
@@ -118,15 +113,13 @@ def test_missing_bound_row_fallback_keeps_pruning_safe():
     avgdl — factor 1.0 makes those bounds UNDERESTIMATE and block-max
     pruning silently drops true hits. The engine's fallback (a large
     FINITE factor; inf would make a 0.0 block-max into NaN and skip the
-    block) must keep the pruned scorer identical to exhaustive."""
+    block) must keep the pruned scorer identical to exhaustive — decoded
+    from blobs or resident."""
     import numpy as np
 
     from baram_spark.index.codec import encode_postings
-    from baram_spark.query.wand import (
-        TermPostings,
-        score_blockmax,
-        score_exhaustive,
-    )
+    from baram_spark.query.wand import score_blockmax, score_exhaustive
+    from tests.conftest import term_postings
 
     rng = np.random.default_rng(17)
     n = 1200  # ~10 blocks so pruning actually engages
@@ -134,16 +127,17 @@ def test_missing_bound_row_fallback_keeps_pruning_safe():
     tfs = rng.integers(1, 6, n).astype(np.int64)
     dls = rng.integers(20, 60, n).astype(np.int64)
     avgdl_pack, avgdl_now = 40.0, 83.0  # corpus grew after packing
-    blob, skips, bmax = encode_postings(ids, tfs, dls, avgdl=avgdl_pack)
+    blobs = encode_postings(ids, tfs, dls, avgdl=avgdl_pack)
 
-    def term(factor):
-        return [TermPostings("content", "t", 1.7, blob, skips, bmax,
-                             avgdl_now, factor)]
+    for resident in (False, True):
+        def term(factor):
+            return term_postings(
+                [("content", "t", 1.7, blobs, avgdl_now, factor)], resident)
 
-    exp = score_exhaustive(term(1.0), 5)
-    # the conservative fallback: identical to exhaustive
-    assert score_blockmax(term(1e12), 5) == exp
-    # sanity: this dataset DOES expose the unsafe default (if 1.0 were
-    # ever reinstated for missing rows, this assertion documents why not)
-    unsafe = score_blockmax(term(1.0), 5)
-    assert unsafe != exp or score_blockmax(term(1e12), 5) == exp
+        exp = score_exhaustive(term(1.0), 5)
+        # the conservative fallback: identical to exhaustive
+        assert score_blockmax(term(1e12), 5) == exp
+        # sanity: this dataset DOES expose the unsafe default (if 1.0 were
+        # ever reinstated for missing rows, this assertion documents why)
+        unsafe = score_blockmax(term(1.0), 5)
+        assert unsafe != exp or score_blockmax(term(1e12), 5) == exp

@@ -242,3 +242,128 @@ def test_encode_empty_postings_and_empty_groups():
         np.array([0, 0]), np.array([0, 0]), np.zeros(0))
     _, _, _, dfs0 = decode_many(blobs0, skips0)
     assert dfs0.tolist() == [0, 0]
+
+
+def test_varint_decode_rejects_truncated_stream():
+    with pytest.raises(ValueError):
+        varint_decode(bytes([0x05, 0x80]))
+
+
+# --- whole-generation decode (the serving node's resident layout) ----------
+
+def _gen_columns(triples):
+    import pyarrow as pa
+
+    return [pa.array([t[i] for t in triples], pa.binary()) for i in range(3)]
+
+
+def _assert_matches_per_list(cols, triples):
+    """decode_generation == decode_postings + decode_skips +
+    decode_blockmax, list by list."""
+    assert cols.offsets.size == cols.block_offsets.size == len(triples) + 1
+    assert cols.tfs.dtype == cols.dls.dtype == np.int32
+    assert cols.ids.dtype == np.int64
+    for i, (blob, skips, bmax) in enumerate(triples):
+        ids, tfs, dls, last, end, bm = cols.list_arrays(i)
+        e_ids, e_tfs, e_dls = decode_postings(blob, skips)
+        e_last, _, e_counts = decode_skips(skips)
+        assert np.array_equal(ids, e_ids), i
+        assert np.array_equal(tfs, e_tfs) and np.array_equal(dls, e_dls), i
+        assert np.array_equal(last, e_last), i
+        assert np.array_equal(end, np.cumsum(e_counts)), i
+        assert np.array_equal(bm, decode_blockmax(bmax)), i
+
+
+def _triples(rng, codecs, sizes, base=0):
+    out = []
+    for codec, n in zip(codecs, sizes):
+        ids = (np.sort(rng.choice(10**7, size=n, replace=False))
+               .astype(np.int64) + base)
+        tfs = rng.integers(1, 40, size=n).astype(np.int64)
+        dls = rng.integers(5, 800, size=n).astype(np.int64)
+        out.append(encode_postings(ids, tfs, dls, avgdl=90.0, codec=codec))
+    return out
+
+
+ZERO_BLOCK = (bytes([CODEC_VARINT]), np.array([0], np.int64).tobytes(), b"")
+
+
+@pytest.mark.parametrize("codec", [CODEC_VARINT, CODEC_FOR, CODEC_PFOR,
+                                   "mixed"])
+def test_decode_generation_matches_per_list_decode(codec):
+    from baram_spark.index.codec import decode_generation
+
+    rng = np.random.default_rng(21)
+    sizes = [1, 2, BLOCK - 1, BLOCK, BLOCK + 1, 1000, 3, 700]
+    codecs = ([CODEC_VARINT, CODEC_FOR, CODEC_PFOR] * 3 if codec == "mixed"
+              else [codec] * len(sizes))
+    triples = _triples(rng, codecs, sizes)
+    # a zero-block list (every doc of the term compacted away) in the middle
+    triples.insert(3, ZERO_BLOCK)
+    _assert_matches_per_list(decode_generation(*_gen_columns(triples)),
+                             triples)
+
+
+def test_decode_generation_empty_generation():
+    from baram_spark.index.codec import decode_generation
+
+    cols = decode_generation(*_gen_columns([]))
+    assert cols.offsets.tolist() == [0] and cols.block_offsets.tolist() == [0]
+    assert cols.ids.size == cols.block_last.size == cols.block_max.size == 0
+    only_empty = [ZERO_BLOCK, ZERO_BLOCK]
+    _assert_matches_per_list(decode_generation(*_gen_columns(only_empty)),
+                             only_empty)
+
+
+def test_decode_generation_hash_range_ids_past_int64_wrap():
+    """More than 4096 lists — 20,000 — of doc ids at the top of the
+    hash-fallback range (10^13 + 2^49), whose last ids sum past 2^63:
+    every id stays exact across the segmented cumsum's chunks."""
+    from baram_spark.index.codec import decode_generation, encode_many
+
+    rng = np.random.default_rng(5)
+    n_lists = 20_000
+    top = 10_000_000_000_000 + (1 << 49)
+    sizes = rng.integers(1, 4, size=n_lists)
+    ends = np.cumsum(sizes)
+    starts = ends - sizes
+    ids = np.concatenate([np.sort(rng.choice(10**6, size=n, replace=False))
+                          for n in sizes]).astype(np.int64) + top - 10**6
+    n = ids.size
+    blobs, skips, bmax = encode_many(
+        ids, rng.integers(1, 9, n), rng.integers(5, 300, n), starts, ends,
+        np.full(n, 50.0))
+    assert int(ends.size) * (top - 10**6) > 2**63
+    triples = list(zip(blobs, skips, bmax))
+    cols = decode_generation(*_gen_columns(triples))
+    assert np.array_equal(cols.ids, ids)
+    _assert_matches_per_list(cols, triples)
+
+
+def test_decode_generation_chunked_columns_with_offsets():
+    """Multi-chunk columns whose chunks are slices (non-zero array
+    offsets), chunked differently per column, decode like the rows they
+    hold."""
+    import pyarrow as pa
+
+    from baram_spark.index.codec import decode_generation
+
+    rng = np.random.default_rng(8)
+    sizes = rng.integers(1, 400, size=120)
+    triples = _triples(rng, [CODEC_VARINT, CODEC_VARINT, CODEC_PFOR] * 40,
+                       sizes)
+    triples[60] = ZERO_BLOCK
+    post, skips, bmax = _gen_columns(triples)
+    rows = list(range(3, 43)) + list(range(50, 120))
+    post_c = pa.chunked_array([post.slice(3, 40), post.slice(50, 30),
+                               post.slice(80, 40)])
+    skips_c = pa.chunked_array([skips.slice(3, 40), skips.slice(50, 70)])
+    bmax_c = pa.chunked_array([pa.concat_arrays([bmax.slice(3, 40),
+                                                 bmax.slice(50, 70)])])
+    _assert_matches_per_list(decode_generation(post_c, skips_c, bmax_c),
+                             [triples[i] for i in rows])
+    # a single sliced chunk keeps its offset (combine_chunks returns it)
+    _assert_matches_per_list(
+        decode_generation(post.slice(7, 9), skips.slice(7, 9),
+                          bmax.slice(7, 9)),
+        triples[7:16])

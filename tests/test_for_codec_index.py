@@ -34,13 +34,13 @@ def test_for_codec_rank_identity(spark, for_index):
         [(int(r.doc_id), r.title, r.text) for r in docs.itertuples()]
     )
     engine = SearchEngine(spark, for_index)
+    # the serving mode decodes the bit-packed lists once, at load
+    resident = SearchEngine(spark, for_index, preload=True)
     for q in make_query_set()[:5]:
         exp = [(d, round(s, 9)) for d, s in oracle.search(q["query_text"], k=10)]
-        got = [
-            (d, round(s, 9))
-            for d, s in engine.search(q["query_text"], k=10, mode="local")
-        ]
-        assert got == exp, q["query_text"]
+        hits = engine.search(q["query_text"], k=10, mode="local")
+        assert [(d, round(s, 9)) for d, s in hits] == exp, q["query_text"]
+        assert resident.search(q["query_text"], k=10, mode="local") == hits
 
 
 def test_codec_stats_telemetry(spark, for_index):

@@ -1,6 +1,7 @@
 """kNN / hybrid fusion / highlights (Q3-Q5)."""
 
 import numpy as np
+import pytest
 
 from baram_spark.query.hybrid import (
     BM25_WEIGHT,
@@ -71,6 +72,42 @@ def test_highlight_marks_terms():
 
 def test_highlight_no_match():
     assert highlight("본문 내용", "존재안함없는말", n_fragments=3) == []
+
+
+# (text, query, n_fragments, frag_len, fragments): adjacent and nested
+# matches (catwalk/cat), overlapping windows, mixed Hangul/Latin and case
+HIGHLIGHT_PINS = [
+    ("삼성전자 Samsung 반도체 실적 발표. 삼성전자는 SAMSUNG Foundry 투자를 늘렸다.",
+     "삼성전자 samsung", 3, 24,
+     ["<mark>삼성전자</mark> <mark>Samsung</mark> 반도체 실적 발표. "]),
+    ("AI 반도체 시장: AI칩과 AIoT 수요가 늘었다 — ai 반도체 ai", "AI 반도체", 3, 12,
+     ["<mark>AI</mark> <mark>반도체</mark> 시장: A",
+      "늘었다 — <mark>ai</mark> <mark>반도체</mark>"]),
+    ("경제경제 시장시장 경제 시장 경제시장", "경제 시장", 2, 10,
+     ["<mark>경제</mark><mark>경제</mark> <mark>시장</mark><mark>시장</mark> ",
+      "제 <mark>시장</mark> <mark>경제</mark><mark>시장</mark>"]),
+    ("the cat sat on the cathedral's catwalk; Cat cat CAT", "cat catwalk",
+     3, 16,
+     ["the <mark>cat</mark> sat on t", "edral's <mark>catwalk</mark>;",
+      "<mark>Cat</mark> <mark>cat</mark> <mark>CAT</mark>"]),
+    ("Seoul서울 seoul 서울특별시 SEOUL 서울에서", "서울 Seoul", 1, 100,
+     ["<mark>Seoul</mark><mark>서울</mark> <mark>seoul</mark> "
+      "<mark>서울</mark>특별시 <mark>SEOUL</mark> <mark>서울</mark>에서"]),
+    ("짧은 글", "없는말", 3, 150, []),
+]
+
+
+@pytest.mark.parametrize("text,query,n,frag_len,want", HIGHLIGHT_PINS)
+def test_highlight_fragments_pinned(text, query, n, frag_len, want):
+    """Fragments are byte-identical whether highlight analyzes the query
+    itself or is handed the pattern built once per request."""
+    from baram_spark.query.hybrid import highlight_pattern
+
+    assert highlight(text, query, n_fragments=n, frag_len=frag_len) == want
+    pattern = highlight_pattern(query)
+    assert highlight(text, pattern, n_fragments=n,
+                     frag_len=frag_len) == want
+    assert highlight_pattern("") is None and highlight(text, None) == []
 
 
 def test_knn_and_hybrid_guard_nonpositive_k(spark):
