@@ -53,6 +53,11 @@ GEN_META_SCHEMA = (
     "gen int, field string, n_docs long, dl_sum long, avgdl_pack double"
 )
 
+# extract-stage phasing crossover in pages: at and above it the tokenize
+# job runs alone before the other extraction consumers (see
+# _stage_extract_tokenize)
+PHASE_THRESHOLD = 100_000
+
 # data dirs that carry gen=G partitions (GC / next-gen scans)
 _GEN_TABLES = ("docs", "doc_terms", "postings", "embeddings", "doc_attrs")
 
@@ -193,11 +198,8 @@ class IndexBuilder:
         salt_threshold: int = 50_000,
         codec: int = CODEC_VARINT,
         shard_concurrency: int = 2,
-        shards_per_job: int | None = None,
         build_embeddings: bool = False,
         embed_fn=None,
-        shuffle_mode: str = "auto",
-        phase_threshold: int = 100_000,
         retain_snapshots: int = 2,
     ):
         self.spark = spark
@@ -212,22 +214,18 @@ class IndexBuilder:
         self.build_embeddings = build_embeddings
         self.embed_fn = embed_fn
         # "rows" = salted row shuffle + blob merge — fastest on single-box
-        # local-disk shuffle (this bench). "blob" = map-side packing + ONE
-        # blob-level exchange moving ~3 bytes/posting — the strategy for
-        # real clusters where shuffle crosses the network. "auto" (default)
-        # picks per deployment from the master URL. Identical output either
-        # way (byte-identity asserted in tests); see build.build_postings
-        # for the measured tradeoff.
-        self.shuffle_mode = resolve_shuffle_mode(
-            spark.sparkContext.master, shuffle_mode)
-        # extract-stage phasing crossover (docs): see _stage_extract_tokenize
-        self.phase_threshold = phase_threshold
+        # local-disk shuffle. "blob" = map-side packing + ONE blob-level
+        # exchange moving ~3 bytes/posting — the strategy for real clusters
+        # where shuffle crosses the network. Picked per deployment from
+        # the master URL; identical output either way (byte-identity
+        # asserted in tests); see build.build_postings for the tradeoff.
+        self.shuffle_mode = resolve_shuffle_mode(spark.sparkContext.master)
         # snapshots whose generation dirs survive GC (readers pinned to a
         # recent manifest keep their files; see _commit_manifest / vacuum)
         self.retain_snapshots = max(retain_snapshots, 1)
         # fresh builds: few big jobs (full parallelism); resume rebuilds are
-        # naturally small. Default: half the shards per job.
-        self.shards_per_job = shards_per_job or max(n_shards // 2, 1)
+        # naturally small. Half the shards per job.
+        self.shards_per_job = max(n_shards // 2, 1)
         self.ledger = LineageLedger(spark, f"{self.out}/lineage")
         # salt plans computed concurrently with extract (see
         # _stage_extract_tokenize); keyed by generation
@@ -479,7 +477,7 @@ class IndexBuilder:
                     tasks.append(plan_salts_task)
                 if not emb_done:
                     tasks.append(write_embeddings)
-                if n_pages >= self.phase_threshold:
+                if n_pages >= PHASE_THRESHOLD:
                     write_terms()
                 else:
                     tasks.insert(0, write_terms)

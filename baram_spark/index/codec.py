@@ -367,34 +367,19 @@ def decode_block(
     offset: int,
     prev_last_docid: int,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
-    """Decode one block at ``offset`` → (doc_ids, tfs, dls, end_pos)."""
+    """Decode one FOR/PFOR block at ``offset`` → (doc_ids, tfs, dls,
+    end_pos). Varint lists decode whole, through ``_varint_lists``."""
     codec = postings_blob[0]
-    mv = memoryview(postings_blob)
-    count, pos = _decode_one_varint(mv, offset)
-    if codec == CODEC_VARINT:
-        # scan `count` delta varints then `count` tf varints; vectorized
-        # decode needs the byte span: find it by counting terminator bytes.
-        # A block holds <= 2*BLOCK varints of <= 10 bytes, so the scan
-        # window is bounded (no full-buffer rescan per block).
-        raw = np.frombuffer(postings_blob, dtype=np.uint8)
-        window_end = min(raw.size, pos + 3 * count * 10)
-        term_flags = (raw[pos:window_end] & 0x80) == 0
-        ends = np.flatnonzero(term_flags)
-        span_end = pos + int(ends[3 * count - 1]) + 1
-        section = raw[pos:span_end]
-        vals = varint_decode(section)
-        deltas, tfs, dls = vals[:count], vals[count : 2 * count], vals[2 * count : 3 * count]
-        pos = span_end
-    elif codec in (CODEC_FOR, CODEC_PFOR):
-        dec = for_decode if codec == CODEC_FOR else pfor_decode
-        deltas, used = dec(postings_blob, pos)
-        pos += used
-        tfs, used = dec(postings_blob, pos)
-        pos += used
-        dls, used = dec(postings_blob, pos)
-        pos += used
-    else:
-        raise ValueError(f"unknown codec {codec}")
+    if codec not in (CODEC_FOR, CODEC_PFOR):
+        raise ValueError(f"decode_block reads FOR/PFOR blocks, not codec {codec}")
+    dec = for_decode if codec == CODEC_FOR else pfor_decode
+    _, pos = _decode_one_varint(memoryview(postings_blob), offset)
+    deltas, used = dec(postings_blob, pos)
+    pos += used
+    tfs, used = dec(postings_blob, pos)
+    pos += used
+    dls, used = dec(postings_blob, pos)
+    pos += used
     doc_ids = np.cumsum(deltas.astype(np.int64)) + prev_last_docid
     return doc_ids, tfs.astype(np.int64), dls.astype(np.int64), pos
 
@@ -492,38 +477,6 @@ def _varint_lists(payload: np.ndarray, C: np.ndarray, dfs: np.ndarray
     return doc_ids, tfs, dls
 
 
-def decode_many(blobs, skips_blobs) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Batch-decode MANY varint posting blobs in ONE vectorized pass.
-
-    The merge side of ``encode_many`` (the blob-shuffle merge decodes
-    millions of small partials; per-call overhead is the entire cost at
-    that shape), built on ``_varint_lists``.
-
-    Returns ``(doc_ids, tfs, dls, dfs)``: the concatenated postings of every
-    blob in input order plus the per-blob posting count. Raises ValueError
-    for any non-varint blob (callers fall back to decode_postings)."""
-    n_blobs = len(blobs)
-    e = np.zeros(0, dtype=np.int64)
-    if n_blobs == 0:
-        return e, e.copy(), e.copy(), e.copy()
-    counts_l = []
-    dfs = np.empty(n_blobs, dtype=np.int64)
-    for i, sk in enumerate(skips_blobs):
-        arr = np.frombuffer(sk, dtype=np.int64)
-        nb = int(arr[0])
-        c = arr[1 + 2 * nb : 1 + 3 * nb]
-        counts_l.append(c)
-        dfs[i] = int(c.sum())
-    payloads = []
-    for bl in blobs:
-        if bl[0] != CODEC_VARINT:
-            raise ValueError("decode_many handles the varint codec only")
-        payloads.append(np.frombuffer(bl, dtype=np.uint8)[1:])
-    ids, tfs, dls = _varint_lists(np.concatenate(payloads),
-                                  np.concatenate(counts_l), dfs)
-    return ids, tfs, dls, dfs
-
-
 class PostingsColumns(NamedTuple):
     """Many posting lists decoded into CSR form (compressed sparse rows:
     flat arrays plus per-list start offsets) — the resident layout a
@@ -555,7 +508,7 @@ def _binary_buffers(col) -> tuple[np.ndarray, np.ndarray]:
     """(value offsets rebased to 0, value bytes) of a binary Arrow array
     or chunked array, read straight from its buffers. Cast to large_binary
     first, so the joined chunks may exceed 2 GiB."""
-    if not pa.types.is_binary(col.type):
+    if not (pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type)):
         raise TypeError(f"posting column of type {col.type}, not binary")
     arr = col.cast(pa.large_binary())
     if isinstance(arr, pa.ChunkedArray):
@@ -573,18 +526,27 @@ def _binary_buffers(col) -> tuple[np.ndarray, np.ndarray]:
     return off - off[0], data
 
 
-def decode_generation(postings, skips, blockmax) -> PostingsColumns:
-    """Decode a whole generation's ``postings`` / ``skips`` / ``blockmax``
-    binary Arrow columns (one posting list per row) into
-    :class:`PostingsColumns`, with a constant number of numpy calls.
+def _flat_blobs(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """``_binary_buffers`` for an Arrow binary column or a sequence of
+    bytes-like blobs (joined into one buffer)."""
+    if isinstance(blobs, (pa.Array, pa.ChunkedArray)):
+        return _binary_buffers(blobs)
+    lens = np.fromiter(map(len, blobs), dtype=np.int64, count=len(blobs))
+    return (np.concatenate(([0], np.cumsum(lens))),
+            np.frombuffer(b"".join(blobs), dtype=np.uint8))
 
-    The skip and block-max tables are gathered from the columns' flat data
-    buffers; every varint row's payload joins ONE ``_varint_lists`` pass.
-    FOR/PFOR rows go through ``decode_postings``, one call per row."""
-    poff, pdata = _binary_buffers(postings)
-    soff, sdata = _binary_buffers(skips)
-    _, bdata = _binary_buffers(blockmax)
-    n = poff.size - 1
+
+def _decode_lists(poff, pdata, soff, sdata):
+    """Decode many posting lists held as flat buffers — blob ``i`` is
+    ``pdata[poff[i]:poff[i+1]]``, its skip table ``sdata[soff[i]:
+    soff[i+1]]`` — with a constant number of numpy calls.
+
+    The skip tables are gathered from the flat buffer; every varint row's
+    payload joins ONE ``_varint_lists`` pass and FOR/PFOR rows go through
+    ``decode_postings``, one call per row, scattered into place. Returns
+    the lists' concatenated ``(doc_ids, tfs, dls)`` as int64 plus
+    ``offsets`` (posting offsets per list), ``block_offsets`` (block-table
+    offsets per list), ``block_last`` and ``counts`` (per block)."""
     # skip tables, concatenated: [n_blocks, last_ids.., offsets.., counts..]
     sk = np.frombuffer(sdata, dtype=np.int64)
     sstart = soff[:-1] // 8
@@ -598,11 +560,6 @@ def decode_generation(postings, skips, blockmax) -> PostingsColumns:
     ccum = np.concatenate(([0], np.cumsum(counts))).astype(np.int64)
     offsets = ccum[block_offsets]
     dfs = np.diff(offsets)
-    block_end = ccum[1:] - np.repeat(offsets[:-1], nb)
-    block_max = np.frombuffer(bdata, dtype=np.float64)
-    if block_max.size != n_blk:
-        raise ValueError(f"{block_max.size} block-max bounds for "
-                         f"{n_blk} blocks")
 
     # postings: strip each blob's codec byte, decode every varint row at once
     starts = poff[:-1]
@@ -624,6 +581,34 @@ def decode_generation(postings, skips, blockmax) -> PostingsColumns:
             for part, v in zip(parts, dec):
                 part[offsets[i]:offsets[i + 1]] = v
         ids, tfs, dls = parts
+    return ids, tfs, dls, offsets, block_offsets, block_last, counts
+
+
+def decode_many(blobs, skips_blobs) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Batch-decode MANY posting blobs of any codec — a sequence of bytes
+    or a binary Arrow column each — through ``_decode_lists``.
+
+    Returns ``(doc_ids, tfs, dls, dfs)``: the concatenated postings of every
+    blob in input order plus the per-blob posting count."""
+    ids, tfs, dls, offsets, *_ = _decode_lists(*_flat_blobs(blobs),
+                                               *_flat_blobs(skips_blobs))
+    return ids, tfs, dls, np.diff(offsets)
+
+
+def decode_generation(postings, skips, blockmax) -> PostingsColumns:
+    """Decode a whole generation's ``postings`` / ``skips`` / ``blockmax``
+    binary Arrow columns (one posting list per row) into
+    :class:`PostingsColumns`, with a constant number of numpy calls
+    (``_decode_lists``) plus one per FOR/PFOR row."""
+    _, bdata = _binary_buffers(blockmax)
+    ids, tfs, dls, offsets, block_offsets, block_last, counts = _decode_lists(
+        *_binary_buffers(postings), *_binary_buffers(skips))
+    block_max = np.frombuffer(bdata, dtype=np.float64)
+    if block_max.size != block_last.size:
+        raise ValueError(f"{block_max.size} block-max bounds for "
+                         f"{block_last.size} blocks")
+    block_end = np.cumsum(counts) - np.repeat(offsets[:-1],
+                                              np.diff(block_offsets))
     return PostingsColumns(ids, tfs.astype(np.int32), dls.astype(np.int32),
                            offsets, block_offsets, block_last, block_end,
                            block_max)
@@ -638,16 +623,21 @@ def encode_many(
     avgdl_per_row: np.ndarray,
     k1: float = 1.2,
     b: float = 0.75,
+    codec: int = CODEC_VARINT,
 ) -> tuple[list, list, list]:
-    """Encode MANY posting groups in one vectorized pass (varint codec).
+    """Encode MANY posting groups: ``doc_ids[starts[g]:ends[g]]`` is group
+    g, already sorted ascending.
 
-    ``doc_ids[starts[g]:ends[g]]`` is group g, already sorted ascending.
-    The three varint streams are produced by single whole-array calls;
-    per-group work is pure slicing — this is what makes tens of thousands
-    of small terms cheap (no per-group numpy-call overhead).
+    For the varint codec the three varint streams are produced by single
+    whole-array calls; per-group work is pure slicing — this is what makes
+    tens of thousands of small terms cheap (no per-group numpy-call
+    overhead). FOR/PFOR groups go through ``encode_postings``, one call
+    per group.
 
     Returns (postings_blobs, skips_blobs, blockmax_blobs) lists.
     """
+    if codec not in (CODEC_VARINT, CODEC_FOR, CODEC_PFOR):
+        raise ValueError(f"unknown codec {codec}")
     n = doc_ids.size
     n_groups = starts.size
     doc_ids = doc_ids.astype(np.int64, copy=False)
@@ -655,8 +645,13 @@ def encode_many(
         # all groups empty: one zero-block triple per group (the same
         # representation decode_many's zero-df clamp exists to survive)
         zskip = np.array([0], dtype=np.int64).tobytes()
-        return ([bytes([CODEC_VARINT])] * n_groups,
+        return ([bytes([codec])] * n_groups,
                 [zskip] * n_groups, [b""] * n_groups)
+    if codec != CODEC_VARINT:
+        triples = [encode_postings(doc_ids[lo:hi], tfs[lo:hi], dls[lo:hi],
+                                   avgdl_per_row[lo:hi], k1, b, codec)
+                   for lo, hi in zip(starts.tolist(), ends.tolist())]
+        return tuple(map(list, zip(*triples)))
 
     # deltas with reset at group starts (delta = doc_id + 1 there).
     # An EMPTY group has starts[g] == ends[g]; when that offset is n
@@ -718,3 +713,23 @@ def encode_many(
         bmax = np.maximum.reduceat(tfn[lo:hi], block_starts - lo)
         bmax_l.append(bmax.astype(np.float64).tobytes())
     return blobs, skips_l, bmax_l
+
+
+def merge_postings(blobs, skips_blobs, group: np.ndarray,
+                   avgdl_per_group: np.ndarray, codec: int = CODEC_VARINT
+                   ) -> tuple[list, list, list]:
+    """THE postings merge: partial lists → ``decode_many`` → order by
+    (group, doc_id) → ``encode_many``.
+
+    Partial ``i`` belongs to ``group[i]`` (``0 <= group[i] < G``, with
+    ``G = avgdl_per_group.size``); the partials may be of any codec and
+    the merged lists are written in ``codec``. Equal doc ids keep their
+    partials' input order (stable sort). Returns the G merged
+    (postings, skips, blockmax) blob lists."""
+    ids, tfs, dls, dfs = decode_many(blobs, skips_blobs)
+    of_post = np.repeat(np.asarray(group, dtype=np.int64), dfs)
+    order = np.lexsort((ids, of_post))
+    g_df = np.bincount(of_post, minlength=avgdl_per_group.size)
+    ends = np.cumsum(g_df)
+    return encode_many(ids[order], tfs[order], dls[order], ends - g_df, ends,
+                       np.repeat(avgdl_per_group, g_df), codec=codec)

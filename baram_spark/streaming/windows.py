@@ -1,4 +1,4 @@
-"""Streaming windowed aggregations + custom stateful sessionization.
+"""Streaming windowed aggregations + event-time sessionization.
 
 The trend/window operators of SURVEY §2.6 in their streaming form:
 
@@ -8,23 +8,13 @@ The trend/window operators of SURVEY §2.6 in their streaming form:
   native ``session_window`` + watermark — out-of-order/late events merge
   into the right session; a session closes when the watermark passes
   last_event + gap. This is the semantics the reference's time-slot
-  grouping implies, and the default choice.
-- ``sessionize``: custom stateful operator via ``applyInPandasWithState``
-  (the engine's escape hatch shape for semantics Spark lacks natively).
-  NOTE its timeout is PROCESSING-time inactivity: session bounds are
-  event-time min/max, but the close trigger is wall-clock silence — the
-  demonstration of the custom-stateful-operator pattern, not an
-  event-time-gap implementation (use ``sessionize_event_time`` for that).
+  grouping implies. Its open sessions live in the streaming engine's
+  state store, evicted by the watermark.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType, TimestampType,
-)
 
 
 def windowed_counts(
@@ -96,89 +86,5 @@ def sessionize_event_time(
             F.col("w.end").alias("session_end"),
             "n_events",
             "value_sum",
-        )
-    )
-
-
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("value_sum", DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n_events", LongType()),
-        StructField("value_sum", DoubleType()),
-    ]
-)
-
-
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Close a user session after ``gap_minutes`` of processing-time
-    inactivity; emit (user, start, end, n_events, value_sum) per session."""
-    gap_ms = gap_minutes * 60 * 1000
-
-    def update(key, pdfs, state: GroupState):
-        user_id = key[0]
-        if state.hasTimedOut:
-            start_us, last_us, n, vsum = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [pd.Timestamp(last_us, unit="us")],
-                    "n_events": [n],
-                    "value_sum": [vsum],
-                }
-            )
-            return
-        start_us = last_us = None
-        n, vsum = 0, 0.0
-        if state.exists:
-            start_us, last_us, n, vsum = state.get
-        for pdf in pdfs:
-            ts_us = (pdf[ts_col].astype("int64") // 1_000).tolist()  # microseconds
-            if start_us is None:
-                start_us = min(ts_us)
-                last_us = max(ts_us)
-            else:
-                start_us = min(start_us, min(ts_us))
-                last_us = max(last_us, max(ts_us))
-            n += len(pdf)
-            vsum += float(pdf[value_col].sum())
-        state.update((start_us, last_us, n, vsum))
-        state.setTimeoutDuration(gap_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": pd.Series([], dtype="int64"),
-                "session_start": pd.Series([], dtype="datetime64[ns]"),
-                "session_end": pd.Series([], dtype="datetime64[ns]"),
-                "n_events": pd.Series([], dtype="int64"),
-                "value_sum": pd.Series([], dtype="float64"),
-            }
-        )
-
-    return (
-        events.groupBy(user_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
         )
     )

@@ -86,18 +86,26 @@ def test_postings_roundtrip(codec, n):
 
 
 def test_skip_pointers_single_block_seek():
+    """The block-packed codecs seek straight to one block; varint lists
+    decode whole, so decode_block refuses them."""
     rng = np.random.default_rng(9)
     n = 1000
     ids = np.sort(rng.choice(10_000_000, size=n, replace=False)).astype(np.int64)
     tfs = rng.integers(1, 5, size=n).astype(np.int64)
     dls = rng.integers(10, 100, size=n).astype(np.int64)
-    blob, skips, _ = encode_postings(ids, tfs, dls, avgdl=50.0)
-    last_ids, offsets, counts = decode_skips(skips)
-    # seek straight to block 3 without touching blocks 0-2
-    bi, bt, bd, _ = decode_block(blob, int(offsets[3]), int(last_ids[2]))
     lo, hi = 3 * BLOCK, 4 * BLOCK
-    assert np.array_equal(bi, ids[lo:hi])
-    assert np.array_equal(bt, tfs[lo:hi])
+    for codec in (CODEC_FOR, CODEC_PFOR):
+        blob, skips, _ = encode_postings(ids, tfs, dls, avgdl=50.0,
+                                         codec=codec)
+        last_ids, offsets, counts = decode_skips(skips)
+        # seek straight to block 3 without touching blocks 0-2
+        bi, bt, bd, _ = decode_block(blob, int(offsets[3]), int(last_ids[2]))
+        assert np.array_equal(bi, ids[lo:hi])
+        assert np.array_equal(bt, tfs[lo:hi])
+        assert np.array_equal(bd, dls[lo:hi])
+    blob, skips, _ = encode_postings(ids, tfs, dls, avgdl=50.0)
+    with pytest.raises(ValueError, match="FOR/PFOR"):
+        decode_block(blob, int(decode_skips(skips)[1][3]), 0)
 
 
 def test_blockmax_is_upper_bound():
@@ -291,7 +299,7 @@ ZERO_BLOCK = (bytes([CODEC_VARINT]), np.array([0], np.int64).tobytes(), b"")
 @pytest.mark.parametrize("codec", [CODEC_VARINT, CODEC_FOR, CODEC_PFOR,
                                    "mixed"])
 def test_decode_generation_matches_per_list_decode(codec):
-    from baram_spark.index.codec import decode_generation
+    from baram_spark.index.codec import decode_generation, decode_many
 
     rng = np.random.default_rng(21)
     sizes = [1, 2, BLOCK - 1, BLOCK, BLOCK + 1, 1000, 3, 700]
@@ -300,8 +308,15 @@ def test_decode_generation_matches_per_list_decode(codec):
     triples = _triples(rng, codecs, sizes)
     # a zero-block list (every doc of the term compacted away) in the middle
     triples.insert(3, ZERO_BLOCK)
-    _assert_matches_per_list(decode_generation(*_gen_columns(triples)),
-                             triples)
+    cols = decode_generation(*_gen_columns(triples))
+    _assert_matches_per_list(cols, triples)
+    # decode_many reads the same lists, from bytes and from Arrow columns
+    blobs, skips = [t[0] for t in triples], [t[1] for t in triples]
+    for args in ((blobs, skips), _gen_columns(triples)[:2]):
+        ids, tfs, dls, dfs = decode_many(*args)
+        assert np.array_equal(dfs, np.diff(cols.offsets))
+        assert np.array_equal(ids, cols.ids)
+        assert np.array_equal(tfs, cols.tfs) and np.array_equal(dls, cols.dls)
 
 
 def test_decode_generation_empty_generation():

@@ -206,8 +206,8 @@ def test_salting_was_exercised(spark, index_dir, work_dir):
     out2 = f"{work_dir}/idx_rows"
     rows_builder = IndexBuilder(
         spark, out2, n_shards=4, salt_threshold=100, shard_concurrency=2,
-        shuffle_mode="rows",
     )
+    assert rows_builder.shuffle_mode == "rows"
     rows_builder.build(pages_df(spark, N_DOCS, partitions=8),
                        fingerprint=f"{FP}-rows")
     e1 = SearchEngine(spark, index_dir)

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from baram_spark.corpus import pages_df
 from baram_spark.index.build import build_postings, shard_expr, tokenize_docs
 from baram_spark.index.builder import IndexBuilder
+from baram_spark.index.codec import CODEC_FOR, CODEC_PFOR, CODEC_VARINT
 
 
 def _plan(df, mode: str = "formatted") -> str:
@@ -69,14 +70,16 @@ def test_rows_salted_postings_is_two_shuffles_plus_broadcast(spark, doc_terms):
     assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan, plan
 
 
-def test_blob_and_row_strategies_byte_identical(spark, doc_terms):
+@pytest.mark.parametrize("codec", [CODEC_VARINT, CODEC_FOR, CODEC_PFOR])
+def test_blob_and_row_strategies_byte_identical(spark, doc_terms, codec):
     """The two physical strategies must produce the SAME index: one row per
-    (shard, field, term), identical df and identical packed bytes."""
+    (shard, field, term), identical df and identical packed bytes — in
+    every codec."""
     avgdl = {"title": 5.0, "content": 130.0}
     blob = build_postings(spark, doc_terms, avgdl, salt_plan={},
-                          out_partitions=4).collect()
+                          codec=codec, out_partitions=4).collect()
     rows = build_postings(spark, doc_terms, avgdl,
-                          salt_plan={("content", "the"): 4},
+                          salt_plan={("content", "the"): 4}, codec=codec,
                           out_partitions=4, row_shuffle=True).collect()
 
     def key(rs):
@@ -140,41 +143,50 @@ def test_exact_dedup_has_partial_aggregate(spark):
 
 
 def test_resolve_shuffle_mode():
-    """auto = rows on a single-box local master (shuffle never crosses a
-    network), blob on any cluster master; explicit modes pass through."""
+    """rows on a single-box local master (shuffle never crosses a
+    network), blob on any cluster master."""
     from baram_spark.index.build import resolve_shuffle_mode
 
     assert resolve_shuffle_mode("local[32]") == "rows"
-    assert resolve_shuffle_mode("local[*]", "auto") == "rows"
+    assert resolve_shuffle_mode("local[*]") == "rows"
     for cluster in ("yarn", "spark://host:7077", "k8s://https://api:6443"):
         assert resolve_shuffle_mode(cluster) == "blob"
     assert resolve_shuffle_mode(None) == "blob"
-    assert resolve_shuffle_mode("yarn", "rows") == "rows"
-    assert resolve_shuffle_mode("local[8]", "blob") == "blob"
-    with pytest.raises(ValueError, match="rows|blob|auto"):
-        resolve_shuffle_mode("local[8]", "fast")
 
 
-def test_builder_resolves_auto_mode(spark):
-    """On the test session's local master the default builder must land on
-    rows (and expose the resolved mode, not the sentinel)."""
-    b = IndexBuilder(spark, "/tmp/_mode_probe", n_shards=2)
+def test_builder_resolves_auto_mode(spark, tmp_path):
+    """On the test session's local master the builder must land on rows
+    (and expose the resolved mode)."""
+    b = IndexBuilder(spark, str(tmp_path / "mode_probe"), n_shards=2)
     assert b.shuffle_mode == "rows"
-    b2 = IndexBuilder(spark, "/tmp/_mode_probe", n_shards=2,
-                      shuffle_mode="blob")
-    assert b2.shuffle_mode == "blob"
+
+
+def _pack_runs(pdf, avgdl_by_field: dict, codec: int) -> dict:
+    """Reference packer: one encode_postings call per (shard, field, term,
+    salt) group of a frame sorted by those columns and doc_id →
+    {group: (df, postings, skips, blockmax)}."""
+    from baram_spark.index.codec import encode_postings
+
+    out = {}
+    for (shard, field, term, salt), g in pdf.groupby(
+            ["shard", "field", "term", "salt"], sort=False):
+        blob, skips, bmax = encode_postings(
+            g["doc_id"].to_numpy(), g["tf"].to_numpy(), g["dl"].to_numpy(),
+            avgdl=avgdl_by_field.get(field, 1.0), codec=codec)
+        out[(int(shard), field, term, int(salt))] = (len(g), blob, skips,
+                                                      bmax)
+    return out
 
 
 def test_arrow_packer_matches_legacy_packer_kernel():
     """_pack_partition_arrow (unsorted arrow input, production) must emit
-    byte-identical groups to _pack_runs (the legacy sorted-pandas kernel)
-    — both codecs, salted groups included."""
+    byte-identical groups to _pack_runs (a per-group encode_postings
+    reference) — every codec, salted groups included."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
 
-    from baram_spark.index.build import _pack_partition_arrow, _pack_runs
-    from baram_spark.index.codec import CODEC_FOR, CODEC_VARINT
+    from baram_spark.index.build import _pack_partition_arrow
 
     rng = np.random.default_rng(7)
     n = 20_000
@@ -193,7 +205,7 @@ def test_arrow_packer_matches_legacy_packer_kernel():
         }
     )
     avgdl = {"title": 5.0, "content": 130.0}
-    for codec in (CODEC_VARINT, CODEC_FOR):
+    for codec in (CODEC_VARINT, CODEC_FOR, CODEC_PFOR):
         run = _pack_partition_arrow(avgdl, codec)
         batches = [
             pa.RecordBatch.from_pandas(chunk, preserve_index=False)
@@ -211,14 +223,7 @@ def test_arrow_packer_matches_legacy_packer_kernel():
         sorted_pdf = pdf.sort_values(
             ["shard", "field", "term", "salt", "doc_id"], kind="stable"
         ).reset_index(drop=True)
-        ref = _pack_runs(sorted_pdf, avgdl, codec)
-        want = {
-            (int(r.shard), r.field, r.term, int(r.salt)): (
-                int(r.df), bytes(r.postings), bytes(r.skips),
-                bytes(r.blockmax),
-            )
-            for r in ref.itertuples()
-        }
+        want = _pack_runs(sorted_pdf, avgdl, codec)
         got = {
             k: (int(df_), bytes(p), bytes(s), bytes(b))
             for k, (df_, p, s, b) in got.items()
@@ -230,13 +235,12 @@ def test_arrow_packer_chunked_matches_whole_partition():
     """A partition spanning several pack chunks must emit byte-identical
     groups to the single-chunk pack (and hence to _pack_runs): split
     groups are decoded, stable-sorted, re-encoded; unsplit groups pass
-    through untouched. Both codecs."""
+    through untouched. Every codec."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
 
-    from baram_spark.index.build import _pack_partition_arrow, _pack_runs
-    from baram_spark.index.codec import CODEC_FOR, CODEC_VARINT
+    from baram_spark.index.build import _pack_partition_arrow
 
     rng = np.random.default_rng(11)
     n = 30_000
@@ -262,7 +266,7 @@ def test_arrow_packer_chunked_matches_whole_partition():
     sorted_pdf = pdf.sort_values(
         ["shard", "field", "term", "salt", "doc_id"], kind="stable"
     ).reset_index(drop=True)
-    for codec in (CODEC_VARINT, CODEC_FOR):
+    for codec in (CODEC_VARINT, CODEC_FOR, CODEC_PFOR):
         # chunk_rows forces ~6 chunks of ~2-3 batches each
         run = _pack_partition_arrow(avgdl, codec, chunk_rows=5_000)
         got = {}
@@ -274,14 +278,7 @@ def test_arrow_packer_chunked_matches_whole_partition():
                 assert k not in got, f"duplicate group {k}"
                 got[k] = (t["df"][i], bytes(t["postings"][i]),
                           bytes(t["skips"][i]), bytes(t["blockmax"][i]))
-        ref = _pack_runs(sorted_pdf, avgdl, codec)
-        want = {
-            (int(r.shard), r.field, r.term, int(r.salt)): (
-                int(r.df), bytes(r.postings), bytes(r.skips),
-                bytes(r.blockmax),
-            )
-            for r in ref.itertuples()
-        }
+        want = _pack_runs(sorted_pdf, avgdl, codec)
         got = {k: (int(d), p, s, b) for k, (d, p, s, b) in got.items()}
         assert got == want, f"codec {codec} mismatch"
 
@@ -298,7 +295,6 @@ def test_arrow_packer_slices_emit_at_bytes_cap(monkeypatch):
 
     from baram_spark.index import build
     from baram_spark.index.build import _pack_partition_arrow
-    from baram_spark.index.codec import CODEC_VARINT
 
     rng = np.random.default_rng(23)
     n = 8_000
@@ -356,7 +352,6 @@ def test_arrow_packer_emit_cap_counts_term_bytes(monkeypatch):
 
     from baram_spark.index import build
     from baram_spark.index.build import _pack_partition_arrow
-    from baram_spark.index.codec import CODEC_VARINT
 
     rng = np.random.default_rng(29)
     n = 3_000

@@ -1,10 +1,10 @@
-"""Streaming windowed aggregation + stateful sessionization."""
+"""Streaming windowed aggregation + event-time sessionization."""
 
 import time
 
 from pyspark.sql import functions as F
 
-from baram_spark.streaming.windows import sessionize, windowed_counts
+from baram_spark.streaming.windows import windowed_counts
 
 
 def _events_stream(spark, tmp_path, name="ev"):
@@ -48,45 +48,6 @@ def test_windowed_counts_match_batch(spark, tmp_path):
     assert got, "no windows emitted"
     for k, v in got.items():
         assert exp[k] == v
-
-
-def test_sessionize_stateful(spark, tmp_path):
-    stream, src = _events_stream(spark, tmp_path, "ev2")
-    q = (
-        sessionize(stream, gap_minutes=1)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    # one micro-batch ingests everything; then the processing-time timeout
-    # fires on the NEXT batch after the gap elapses
-    deadline = time.time() + 120
-    rows = []
-    while time.time() < deadline:
-        rows = spark.sql("select * from sessions").collect()
-        if rows:
-            break
-        time.sleep(5)
-    q.stop()
-    assert rows, "no sessions emitted before timeout"
-    by_user = {r["user_id"]: r for r in rows}
-    batch = (
-        spark.read.parquet(src)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("ts").alias("lo"),
-            F.max("ts").alias("hi"),
-        )
-        .collect()
-    )
-    exp = {r["user_id"]: r for r in batch}
-    for uid, r in by_user.items():
-        assert r["n_events"] == exp[uid]["n"]
-        assert r["session_start"] == exp[uid]["lo"]
-        assert r["session_end"] == exp[uid]["hi"]
 
 
 def test_sessionize_event_time_out_of_order(spark, tmp_path):
