@@ -10,7 +10,10 @@ Lucene-segment-style GENERATIONS for incremental ingest:
       gen_meta/                   per-(gen, field): n_docs, dl_sum and the
                                   avgdl the generation was PACKED with
                                   (block-max bound correction at query time)
-      term_stats/                 GLOBAL per-(field, term) df (overwritten)
+      term_stats/v_K/             GLOBAL per-(field, term) df, summed on the
+                                  driver over the postings df column of
+                                  exactly the generations the version
+                                  records in its schema metadata
       postings/gen=G/shard=K/     packed posting lists
       lineage/                    the resume + metrics ledger
 
@@ -30,7 +33,9 @@ partition overwrite).
 
 from __future__ import annotations
 
+import re
 import time
+import zlib
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -75,6 +80,22 @@ def postings_partitions(rows: int, n_shards: int) -> int:
     a small wave pays for few tasks, and at most 4 per shard (the fixed
     layout large builds keep)."""
     return max(1, min(4 * n_shards, -(-rows // POSTINGS_ROWS_PER_PARTITION)))
+
+
+# schema-metadata key of a term_stats version: the generations it folds
+_FOLDED_GENS = b"baram.folded_gens"
+
+_VERSION_RE = re.compile(r"v_(\d+)$")
+
+
+def _versions(base: str) -> list[int]:
+    """Version numbers of a versioned stats table (its v_K dirs), ascending."""
+    return sorted(int(m.group(1)) for d in fs.listdir(base)
+                  if (m := _VERSION_RE.match(d)))
+
+
+def _gens_key(gens) -> str:
+    return ",".join(str(g) for g in sorted({int(g) for g in gens}))
 
 
 def _parquet_rows(path: str) -> int:
@@ -333,14 +354,8 @@ class IndexBuilder:
     # never treats versions as partitions of one table.
     @staticmethod
     def _latest_version(base: str) -> int | None:
-        import re
-
-        vs = [
-            int(m.group(1))
-            for d in fs.listdir(base)
-            if (m := re.match(r"v_(\d+)$", d))
-        ]
-        return max(vs) if vs else None
+        vs = _versions(base)
+        return vs[-1] if vs else None
 
     def _latest_stats_dir(self, base: str) -> str:
         """Read side (builder-internal): newest version, else the bare dir
@@ -474,7 +489,14 @@ class IndexBuilder:
                 # consumer overlaps from the start.
                 tasks = [write_docs, write_attrs]
                 if self.shuffle_mode == "rows":
-                    tasks.append(plan_salts_task)
+                    if n_pages > self.salt_threshold:
+                        tasks.append(plan_salts_task)
+                        metrics["salt_plan"] = "sampled"
+                    else:
+                        # exact, not an estimate: df <= docs <= pages, so
+                        # no term of this wave can pass plan_salts'
+                        # df > salt_threshold
+                        self._salt_plans[gen] = {}
                 if not emb_done:
                     tasks.append(write_embeddings)
                 if n_pages >= PHASE_THRESHOLD:
@@ -709,20 +731,10 @@ class IndexBuilder:
         the other's generation; the union exists across versions). The
         per-gen avgdl_pack is preserved — it records what that gen's
         postings were packed with, which a refold must not rewrite."""
-        import re
-
         needed = {int(g) for g in gens}
         rows: dict[tuple[int, str], tuple[int, int, float]] = {}
-        versions = sorted(
-            (
-                int(m.group(1))
-                for d in fs.listdir(self.gen_meta_path)
-                if (m := re.match(r"v_(\d+)$", d))
-            ),
-            reverse=True,
-        )
         found: set[int] = set()
-        for v in versions:
+        for v in reversed(_versions(self.gen_meta_path)):
             if found >= needed:
                 break
             try:
@@ -809,12 +821,13 @@ class IndexBuilder:
                 self._latest_stats_dir(self.corpus_stats_path)
             ).to_pylist()
         }
+        salt_plan = {}
         if self.shuffle_mode == "rows":
             salt_plan = self._salt_plans.pop(gen, None)
             if salt_plan is None:
                 salt_plan = self._salt_plan(gen)
-        else:
-            salt_plan = {}
+                metrics["salt_plan"] = "sampled"
+        metrics.setdefault("salt_plan", "skipped")
         groups = [
             todo[i : i + self.shards_per_job]
             for i in range(0, len(todo), self.shards_per_job)
@@ -907,37 +920,82 @@ class IndexBuilder:
 
     def _stage_term_stats(self, stage, fingerprint, done, metrics,
                           gens: list[int] | None = None):
-        """Exact GLOBAL term_stats (query idf) from packed rows across the
-        generations ABOUT TO BE COMMITTED — (n_terms × n_shards × n_gens)
-        rows, far smaller than doc_terms. Reading the committed list (not
-        the postings dir) keeps partial gens from crashed builds and
-        retained-but-superseded gens out of the global df.
+        """Exact GLOBAL term_stats (query idf): per (field, term), the sum
+        of df over the postings of exactly the generations ABOUT TO BE
+        COMMITTED (``None``: the committed snapshot, else every on-disk
+        generation). Reading the committed list (not the postings dir)
+        keeps partial gens from crashed builds and retained-but-superseded
+        gens out of the global df.
 
-        The ledger part number encodes the generation UNION the aggregate
-        covered, so a resume only skips the stage when the about-to-commit
-        union is the one already computed — a retry after a concurrent
-        writer advanced the snapshot (different union) recomputes instead
-        of committing stale global df."""
-        import zlib
+        The fold runs on the driver with pyarrow — no Spark job. It reads
+        only the (field, term, df) columns: n_terms × n_shards rows per
+        generation, far smaller than doc_terms, and the serving node holds
+        the folded table in a driver dict anyway. It sums ``gens`` from
+        scratch (no base version plus a delta), so the df is right however
+        versions race. The version records ``gens`` in its schema metadata
+        and the commit pins the version folded over exactly the committed
+        list (see _term_stats_version).
 
-        part = zlib.crc32(
-            ",".join(str(int(g)) for g in sorted(gens or [])).encode()
-        ) & 0x7FFFFFFF  # ledger part column is int32
+        The ledger part number encodes the generation UNION, so a resume
+        only skips the stage when the about-to-commit union is the one
+        already folded (and its version is still on disk) — a retry after
+        a concurrent writer advanced the snapshot (different union)
+        refolds instead of committing stale global df."""
+        import pyarrow as pa
+
+        from .lineage import write_small_parquet
+
+        if gens is None:
+            gens = self.committed_generations()
+        key = _gens_key(gens)
+        part = zlib.crc32(key.encode()) & 0x7FFFFFFF  # ledger part is int32
         if (stage, part) in done:
-            metrics["resumed_stages"].append(stage)
-            return
-        src = read_gen_table(self.spark, self.out, "postings", gens=gens)
+            v = self._term_stats_version(gens)
+            if v is not None:
+                metrics["resumed_stages"].append(stage)
+                metrics["term_stats_rows"] = _parquet_rows(
+                    f"{self.term_stats_path}/v_{v}")
+                return
+        schema = pa.schema([("field", pa.string()), ("term", pa.string()),
+                            ("df", pa.int64())])
         with StageTimer() as t:
-            (
-                src
-                .groupBy("field", "term")
-                .agg(F.sum("df").alias("df"))
-                .sort("term")
-                .write.mode("overwrite")
-                .parquet(_sp(self._next_stats_dir(self.term_stats_path)))
+            dirs = [f"{self.postings_path}/gen={g}"
+                    for g in sorted({int(g) for g in gens})]
+            parts = [fs.read_parquet(d, columns=schema.names) for d in dirs
+                     if fs.exists(d)]
+            postings = (pa.concat_tables(parts) if parts
+                        else schema.empty_table())
+            stats = (
+                postings.group_by(["field", "term"])
+                .aggregate([("df", "sum")])
+                .rename_columns(schema.names)
+                .sort_by([("term", "ascending"), ("field", "ascending")])
+                .replace_schema_metadata({_FOLDED_GENS: key.encode()})
             )
-        self.ledger.record(stage, part, fingerprint, 0, 0, t.seconds)
+            # dictionary pages only where values repeat: the all-unique
+            # term column stays plain, as Spark's writer leaves it
+            write_small_parquet(
+                self._next_stats_dir(self.term_stats_path), stats,
+                overwrite=True, use_dictionary=["field", "df"],
+            )
+        self.ledger.record(stage, part, fingerprint, 0, stats.num_rows,
+                           t.seconds)
         metrics["term_stats_seconds"] = t.seconds
+        metrics["term_stats_rows"] = stats.num_rows
+
+    def _term_stats_version(self, gens) -> int | None:
+        """The newest term_stats version folded over exactly ``gens``,
+        else None (also for versions that predate the recorded list)."""
+        want = _gens_key(gens).encode()
+        for v in reversed(_versions(self.term_stats_path)):
+            try:
+                meta = fs.read_parquet(f"{self.term_stats_path}/v_{v}",
+                                       columns=[]).schema.metadata
+            except (OSError, ValueError):  # being rewritten by its writer
+                continue
+            if (meta or {}).get(_FOLDED_GENS) == want:
+                return v
+        return None
 
     def _read_manifest(self) -> dict | None:
         return fs.read_manifest(self.out)
@@ -1038,29 +1096,31 @@ class IndexBuilder:
         for name, base in (
             ("corpus_stats", self.corpus_stats_path),
             ("gen_meta", self.gen_meta_path),
-            ("term_stats", self.term_stats_path),
         ):
             v = self._latest_version(base)
             if v is not None:
                 m[f"{name}_v"] = v
+        # term_stats: the version folded over exactly `gens` — the newest
+        # on disk may be a concurrent writer's staged fold over another
+        # generation list. A commit that folded nothing (an empty wave, a
+        # no-op compact) keeps its generation list, so it keeps the pin.
+        v = self._term_stats_version(gens)
+        if v is None:
+            v = (prev or {}).get("term_stats_v")
+        if v is not None:
+            m["term_stats_v"] = int(v)
         fs.publish_manifest(self.out, json.dumps(m))
         # GC stats versions no snapshot can reference: keep everything
         # from the PREVIOUS manifest's committed pointer onward (a
         # multi-generation compact writes several versions before its one
         # commit — blindly keeping 'last 2' would delete the version a
         # pinned reader resolves), else fall back to last-2.
-        import re
-
         for name, base in (
             ("corpus_stats", self.corpus_stats_path),
             ("gen_meta", self.gen_meta_path),
             ("term_stats", self.term_stats_path),
         ):
-            vs = sorted(
-                int(mt.group(1))
-                for d in fs.listdir(base)
-                if (mt := re.match(r"v_(\d+)$", d))
-            )
+            vs = _versions(base)
             prev_v = (prev or {}).get(f"{name}_v")
             if prev_v is not None:
                 drop = [v for v in vs if v < int(prev_v)]

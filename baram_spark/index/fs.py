@@ -251,11 +251,12 @@ def read_parquet(path: str, columns: list[str] | None = None):
     return pq.read_table(p, columns=columns, filesystem=fs)
 
 
-def write_parquet_file(path: str, table) -> None:
+def write_parquet_file(path: str, table, **write_opts) -> None:
+    """``write_opts`` go to ``pyarrow.parquet.write_table``."""
     import pyarrow.parquet as pq
 
     fs, p = resolve(path)
-    pq.write_table(table, p, filesystem=fs)
+    pq.write_table(table, p, filesystem=fs, **write_opts)
 
 
 # -- manifest commit protocol (see module docstring) ------------------------

@@ -46,16 +46,18 @@ _ARROW_SCHEMA = pa.schema(
 )
 
 
-def write_small_parquet(path: str, table: pa.Table, overwrite: bool = False):
+def write_small_parquet(path: str, table: pa.Table, overwrite: bool = False,
+                        **write_opts):
     """Driver-side parquet write for tiny tables (no Spark job): atomic via
     tmp + rename (through the fs abstraction, so the ledger works on any
-    pyarrow.fs store); ``overwrite`` clears the directory first."""
+    pyarrow.fs store); ``overwrite`` clears the directory first.
+    ``write_opts`` go to ``pyarrow.parquet.write_table``."""
     if overwrite and fs.exists(path):
         fs.rmtree(path)
     fs.makedirs(path)
     name = f"part-{uuid.uuid4().hex}.parquet"
     tmp = f"{path}/.{name}.tmp"
-    fs.write_parquet_file(tmp, table)
+    fs.write_parquet_file(tmp, table, **write_opts)
     fs.rename(tmp, f"{path}/{name}")
 
 

@@ -28,6 +28,22 @@ def _norm(hits):
     return [(d, round(s, 9)) for d, s in hits]
 
 
+def _assert_term_stats_exact(spark, out):
+    """The term_stats version a reader resolves (the manifest's pin)
+    equals the direct Spark aggregate over the committed postings."""
+    from baram_spark.index.builder import committed_gens, read_gen_table
+
+    stats = spark.read.parquet(
+        SearchEngine(spark, out)._stats_path("term_stats"))
+    expect = (
+        read_gen_table(spark, out, "postings", gens=committed_gens(out))
+        .groupBy("field", "term").agg(F.sum("df").alias("df"))
+    )
+    assert stats.count() == expect.count()
+    assert stats.exceptAll(expect).isEmpty()
+    assert expect.exceptAll(stats).isEmpty()
+
+
 @pytest.fixture(scope="module")
 def inc_index(spark, work_dir):
     out = f"{work_dir}/inc"
@@ -367,22 +383,7 @@ def test_occ_conflict_retry(spark, tmp_path):
 
     # committed term_stats cover ALL generations: df equals the direct
     # aggregate over the committed postings (incl. the concurrent gen)
-    stats = spark.read.parquet(
-        b1._latest_stats_dir(b1.term_stats_path)
-    )
-    expect = (
-        read_gen_table(spark, out, "postings", gens=gens)
-        .groupBy("field", "term").agg(F.sum("df").alias("df"))
-    )
-    mismatch = (
-        stats.alias("s").join(expect.alias("e"), ["field", "term"],
-                              "full_outer")
-        .filter(
-            F.col("s.df").isNull() | F.col("e.df").isNull()
-            | (F.col("s.df") != F.col("e.df"))
-        ).count()
-    )
-    assert mismatch == 0
+    _assert_term_stats_exact(spark, out)
 
     # no duplicate urls across generations (anti-join still held)
     docs = read_gen_table(spark, out, "docs", gens=gens)
@@ -733,3 +734,159 @@ def test_resume_reruns_shard_whose_postings_were_deleted(spark, tmp_path):
     assert os.path.exists(f"{out}/postings/gen=0/shard=0")
     after = SearchEngine(spark, out).search(q, k=10)
     assert after == before, "re-run shard must restore identical results"
+
+
+def test_commit_pins_its_own_term_stats_version(spark, tmp_path):
+    """A commit pins the term_stats version folded over exactly the
+    generations it commits — never the newest on disk, which may be a
+    concurrent writer's staged fold over another generation list. A folds
+    {0, 1}; B then stages a wave (gen 2, a fold over {0, 2}) and is held
+    before its commit; A commits [0, 1]. A's df must cover {0, 1}, or idf
+    and with it BM25 oracle identity break."""
+    from baram_spark.index import fs as fsmod
+
+    out = f"{tmp_path}/pin_idx"
+    a = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    a.build(pages_df(spark, 120, partitions=2), fingerprint="p0")
+    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+
+    class Held(Exception):
+        pass
+
+    def held_commit(*args, **kw):
+        raise Held
+
+    b._commit_manifest = held_commit
+    orig = a._stage_term_stats
+    staged = {}
+
+    def hooked(*args, **kw):
+        orig(*args, **kw)
+        if not staged:
+            with pytest.raises(Held):
+                b.build_incremental(pages_df(spark, 260, partitions=2),
+                                    fingerprint="p-held")
+            staged["v"] = b._latest_version(b.term_stats_path)
+
+    a._stage_term_stats = hooked
+    a.build_incremental(pages_df(spark, 190, partitions=2), fingerprint="p1")
+    assert a.committed_generations() == [0, 1]
+    # B's staged fold is the newest version on disk, and is not pinned
+    assert staged["v"] == a._latest_version(a.term_stats_path)
+    assert fsmod.read_manifest(out)["term_stats_v"] != staged["v"]
+    _assert_term_stats_exact(spark, out)
+
+    # B's retry discards its staged gen (A indexed some of its urls) and
+    # commits the union, over a fold of all three generations
+    del b._commit_manifest
+    b.build_incremental(pages_df(spark, 260, partitions=2),
+                        fingerprint="p-held", occ_retries=1)
+    assert len(b.committed_generations()) == 3
+    _assert_term_stats_exact(spark, out)
+    q = make_query_set()[0]["query_text"]
+    assert _norm(SearchEngine(spark, out).search(q, k=10, mode="local")) \
+        == _norm(_oracle(spark, out).search(q, k=10))
+
+
+def test_term_stats_fold_is_exact_and_spark_free(spark, tmp_path):
+    """build -> wave -> delete + compact -> merge, and build_docs: after
+    each commit the pinned term_stats equal the direct Spark aggregate
+    over the committed postings, the fold starts no Spark job, and its
+    ledger row and metrics record the rows it wrote."""
+    from baram_spark.index.build import extract_docs
+    from baram_spark.index.lineage import LineageLedger
+    from tests.conftest import spark_jobs
+
+    def counting(builder, jobs):
+        orig = builder._stage_term_stats
+
+        def stage(*args, **kw):
+            with spark_jobs(spark) as started:
+                orig(*args, **kw)
+            jobs.append(started)
+
+        builder._stage_term_stats = stage
+
+    out = f"{tmp_path}/fold_idx"
+    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=100)
+    jobs: list = []
+    counting(b, jobs)
+    m = b.build(pages_df(spark, 150, partitions=2), fingerprint="f0")
+    _assert_term_stats_exact(spark, out)
+    assert m["term_stats_rows"] > 0
+    ledger = LineageLedger(spark, f"{out}/lineage").read()
+    row = ledger.filter(F.col("stage") == "term_stats").first()
+    assert row["rows_out"] == m["term_stats_rows"]
+
+    m = b.build_incremental(pages_df(spark, 220, partitions=2),
+                            fingerprint="f1")
+    _assert_term_stats_exact(spark, out)
+    q = make_query_set()[0]["query_text"]
+    victims = [d for d, _ in
+               SearchEngine(spark, out).search(q, k=3, mode="local")]
+    b.delete_docs(victims)
+    assert b.compact(fingerprint="f-compact")["compacted_gens"]
+    _assert_term_stats_exact(spark, out)
+    b.build_incremental(pages_df(spark, 260, partitions=2),
+                        fingerprint="f2")
+    _assert_term_stats_exact(spark, out)
+    b.merge_generations(fingerprint="f-merge")
+    assert len(b.committed_generations()) == 1
+    _assert_term_stats_exact(spark, out)
+    assert _norm(SearchEngine(spark, out).search(q, k=10, mode="local")) \
+        == _norm(_oracle(spark, out).search(q, k=10))
+
+    out2 = f"{tmp_path}/fold_docs_idx"
+    b2 = IndexBuilder(spark, out2, n_shards=2, salt_threshold=100)
+    counting(b2, jobs)
+    b2.build_docs(extract_docs(pages_df(spark, 90, partitions=2)),
+                  fingerprint="fd")
+    _assert_term_stats_exact(spark, out2)
+    assert len(jobs) == 6 and jobs == [[]] * 6
+
+
+def test_small_wave_skips_salt_sample(spark, tmp_path):
+    """A wave of at most salt_threshold pages cannot hold a term with df
+    above the threshold (df <= docs <= pages), so it plans no salts
+    without sampling — and packs the same postings rows as that wave
+    built with a sampled salt plan. A larger wave still samples."""
+    def postings_rows(out, gen):
+        rows = (
+            spark.read.parquet(f"{out}/postings/gen={gen}")
+            .select("shard", "field", "term", "df", "postings", "skips",
+                    "blockmax")
+            .collect()
+        )
+        return sorted(tuple(r) for r in rows)
+
+    def refuse(*args, **kw):
+        raise AssertionError("salt sample ran for a small wave")
+
+    base = pages_df(spark, 150, partitions=2)
+    wave = pages_df(spark, 200, partitions=2)  # 50 new pages
+    skip_out = f"{tmp_path}/salt_skip"
+    b = IndexBuilder(spark, skip_out, n_shards=2, salt_threshold=100)
+    m0 = b.build(base, fingerprint="s0")
+    assert m0["salt_plan"] == "sampled"  # 150 pages > 100
+    b._salt_plan_from_docs = refuse
+    b._salt_plan = refuse
+    m = b.build_incremental(wave, fingerprint="s1")
+    assert m["pages_in"] <= b.salt_threshold
+    assert m["salt_plan"] == "skipped"
+
+    sampled_out = f"{tmp_path}/salt_sampled"
+    b2 = IndexBuilder(spark, sampled_out, n_shards=2, salt_threshold=100)
+    b2.build(base, fingerprint="s0")
+    b2.salt_threshold = 20  # the same 50-page wave now samples (and salts)
+    plans = []
+    orig = b2._salt_plan_from_docs
+
+    def spy(docs):
+        plans.append(orig(docs))
+        return plans[-1]
+
+    b2._salt_plan_from_docs = spy
+    m2 = b2.build_incremental(wave, fingerprint="s1")
+    assert m2["salt_plan"] == "sampled" and len(plans) == 1
+    assert postings_rows(skip_out, m["gen"]) \
+        == postings_rows(sampled_out, m2["gen"])
