@@ -300,7 +300,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             except KeyboardInterrupt:
                 server.shutdown()
     elif args.cmd == "stats":
-        from baram_spark.index.builder import IndexBuilder, read_gen_table
+        from baram_spark.index.builder import read_gen_table
 
         idx = args.index.rstrip("/")
         # manifest-committed snapshot only: retained-but-superseded gens
@@ -319,13 +319,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             "generations": gens,
             "posting_lists": post.count(),
             "postings": int(post.agg(F.sum("df")).collect()[0][0] or 0),
-            "terms": spark.read.parquet(
-                fs.spark_url(
-                    IndexBuilder(spark, idx)._latest_stats_dir(
-                        f"{idx}/term_stats"
-                    )
-                )
-            ).count(),
+            # distinct over generations: each holds its own df rows
+            "terms": read_gen_table(spark, idx, "term_stats")
+            .select("field", "term").distinct().count(),
         }
         if fs.exists(f"{idx}/deletes"):
             stats["pending_tombstones"] = (

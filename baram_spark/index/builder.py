@@ -6,14 +6,11 @@ Lucene-segment-style GENERATIONS for incremental ingest:
     out_dir/
       docs/gen=G/                 extraction output per generation
       doc_terms/gen=G/shard=K/    tokenized rows (doc-sharded)
-      corpus_stats/               GLOBAL per-field N + avgdl (overwritten)
-      gen_meta/                   per-(gen, field): n_docs, dl_sum and the
-                                  avgdl the generation was PACKED with
-                                  (block-max bound correction at query time)
-      term_stats/v_K/             GLOBAL per-(field, term) df, summed on the
-                                  driver over the postings df column of
-                                  exactly the generations the version
-                                  records in its schema metadata
+      gen_meta/gen=G/             per field: n_docs, dl_sum and the avgdl
+                                  G's postings were PACKED with (block-max
+                                  bound correction at query time)
+      term_stats/gen=G/           per (field, term): G's df, summed over
+                                  its shards, sorted by term
       postings/gen=G/shard=K/     packed posting lists
       lineage/                    the resume + metrics ledger
 
@@ -26,6 +23,12 @@ generation, so a query scores every generation's postings independently and
 exactly; only the block-max BOUNDS need a safety factor when the global
 avgdl has grown since a generation was packed (see query/engine.py).
 
+A generation writes its own gen_meta and term_stats once and never
+rewrites them, as a Lucene segment carries its own statistics. The
+manifest's generation list is the whole snapshot: a reader sums n_docs,
+dl_sum and df over the listed generations, so its global stats can never
+belong to another operation.
+
 Each postings shard is an independent lineage entry; a re-run skips
 completed shards and rebuilds only missing ones (idempotent dynamic
 partition overwrite).
@@ -33,9 +36,7 @@ partition overwrite).
 
 from __future__ import annotations
 
-import re
 import time
-import zlib
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -54,17 +55,14 @@ from . import fs
 from .fs import spark_url as _sp
 from .lineage import LineageLedger, StageTimer
 
-GEN_META_SCHEMA = (
-    "gen int, field string, n_docs long, dl_sum long, avgdl_pack double"
-)
-
 # extract-stage phasing crossover in pages: at and above it the tokenize
 # job runs alone before the other extraction consumers (see
 # _stage_extract_tokenize)
 PHASE_THRESHOLD = 100_000
 
 # data dirs that carry gen=G partitions (GC / next-gen scans)
-_GEN_TABLES = ("docs", "doc_terms", "postings", "embeddings", "doc_attrs")
+_GEN_TABLES = ("docs", "doc_terms", "postings", "embeddings", "doc_attrs",
+               "gen_meta", "term_stats")
 
 # doc_terms rows per postings reduce partition (see postings_partitions):
 # where a reduce task's packing time matches its fixed cost. Measured at
@@ -80,22 +78,6 @@ def postings_partitions(rows: int, n_shards: int) -> int:
     a small wave pays for few tasks, and at most 4 per shard (the fixed
     layout large builds keep)."""
     return max(1, min(4 * n_shards, -(-rows // POSTINGS_ROWS_PER_PARTITION)))
-
-
-# schema-metadata key of a term_stats version: the generations it folds
-_FOLDED_GENS = b"baram.folded_gens"
-
-_VERSION_RE = re.compile(r"v_(\d+)$")
-
-
-def _versions(base: str) -> list[int]:
-    """Version numbers of a versioned stats table (its v_K dirs), ascending."""
-    return sorted(int(m.group(1)) for d in fs.listdir(base)
-                  if (m := _VERSION_RE.match(d)))
-
-
-def _gens_key(gens) -> str:
-    return ",".join(str(g) for g in sorted({int(g) for g in gens}))
 
 
 def _parquet_rows(path: str) -> int:
@@ -158,19 +140,22 @@ def _normalize_docs(docs: DataFrame) -> DataFrame:
 
 
 def index_n_shards(index_dir: str, default: int = 8) -> int:
-    """The shard count an existing index was built with, from its
-    ``index_meta`` table. Maintenance operations MUST open the builder
-    with this value — merging with a different n_shards would silently
-    re-shard the layout out from under ``index_meta`` and the engine's
-    filter-cogroup shard math."""
+    """The shard count an existing index was built with: the committed
+    manifest's, as ``SearchEngine._detect_n_shards`` reads it (every
+    build overwrites ``index_meta`` at its start, so only the manifest
+    is snapshot-consistent), else ``index_meta`` when nothing is
+    committed yet, else ``default``. Maintenance operations MUST open the
+    builder with this value — merging with a different n_shards would
+    silently re-shard the layout out from under the engine's
+    filter-cogroup shard math — so a read error raises."""
+    m = fs.read_manifest(index_dir)
+    if m is not None:
+        return int(m["n_shards"])
     meta = f"{index_dir.rstrip('/')}/index_meta"
     if fs.exists(meta):
-        try:
-            t = fs.read_parquet(meta, columns=["n_shards"])
-            if t.num_rows:
-                return int(t["n_shards"][0].as_py())
-        except Exception:
-            pass
+        t = fs.read_parquet(meta, columns=["n_shards"])
+        if t.num_rows:
+            return int(t["n_shards"][0].as_py())
     return default
 
 
@@ -265,10 +250,6 @@ class IndexBuilder:
         return f"{self.out}/doc_terms"
 
     @property
-    def corpus_stats_path(self):
-        return f"{self.out}/corpus_stats"
-
-    @property
     def gen_meta_path(self):
         return f"{self.out}/gen_meta"
 
@@ -345,37 +326,16 @@ class IndexBuilder:
             )
         return out
 
-    # -- versioned stats (MVCC for the small global tables) ---------------
-    # corpus_stats / gen_meta / term_stats are rewritten by every build;
-    # writing IN PLACE would yank files from under a reader pinned to the
-    # previous snapshot. Writers instead create a fresh `v_K` subdir and
-    # the manifest records the committed K per table (readers resolve
-    # through it; see SearchEngine._stats_path). `v_` (not `v=`) so Spark
-    # never treats versions as partitions of one table.
-    @staticmethod
-    def _latest_version(base: str) -> int | None:
-        vs = _versions(base)
-        return vs[-1] if vs else None
-
-    def _latest_stats_dir(self, base: str) -> str:
-        """Read side (builder-internal): newest version, else the bare dir
-        (pre-versioning layout)."""
-        v = self._latest_version(base)
-        return f"{base}/v_{v}" if v is not None else base
-
-    def _next_stats_dir(self, base: str) -> str:
-        v = self._latest_version(base)
-        return f"{base}/v_{(v or 0) + 1}"
-
     # -- stage helpers ----------------------------------------------------
     def _stage_extract_tokenize(self, pages, gen, stage_docs, stage_terms,
-                                fingerprint, done, metrics):
+                                fingerprint, done, metrics, others):
         """Fused extract+tokenize: ONE pass over the pages html.
 
         The extraction output is persisted (memory, spill to disk) and two
         jobs consume it concurrently — the docs-table write and the
         tokenize→doc_terms write — so the expensive HTML parse happens once
         and the docs parquet round-trip between the stages disappears.
+        ``others``: see _stage_tokenize_from.
         """
         stage_emb = f"{stage_docs}.embed"
         docs_done = (stage_docs, 0) in done
@@ -401,7 +361,7 @@ class IndexBuilder:
             on_disk = self.spark.read.parquet(_sp(f"{self.docs_path}/gen={gen}"))
             if not terms_done:
                 self._stage_tokenize_from(
-                    on_disk, gen, stage_terms, fingerprint, metrics
+                    on_disk, gen, stage_terms, fingerprint, metrics, others
                 )
             if not emb_done:
                 self._stage_embeddings(on_disk, gen, stage_emb, fingerprint)
@@ -440,7 +400,7 @@ class IndexBuilder:
                         if not terms_done:
                             self._stage_tokenize_from(
                                 extracted, gen, stage_terms, fingerprint,
-                                metrics,
+                                metrics, others,
                             )
                     except Exception as e:
                         errs.append(e)
@@ -516,7 +476,14 @@ class IndexBuilder:
         metrics["docs_out"] = n_out
 
     def _stage_tokenize_from(self, docs, gen, stage, fingerprint, metrics,
-                             drop_gens=(), extra_committed=()):
+                             others):
+        """Tokenize ``docs`` into doc_terms/gen=G and write G's gen_meta.
+
+        ``others``: the generations this operation commits beside ``gen``
+        (a wave: the snapshot it started from; a compact: the generations
+        it has not retired so far and the replacements it staged before
+        this one; a merge: none).
+        G is packed with the avgdl over them plus G (see _write_gen_meta)."""
         # per-field corpus stats ride along as write observations on the
         # `first` flag — no separate pass over the much larger doc_terms.
         obs = Observation(f"doc_terms_{gen}")
@@ -549,12 +516,10 @@ class IndexBuilder:
             self._doc_terms_rows[gen] = {
                 k: int(got[f"rows_{k}"] or 0) for k in range(self.n_shards)
             }
-            gen_rows = [
-                (gen, f, int(got[f"n_{f}"] or 0), int(got[f"dl_{f}"] or 0))
+            self._write_gen_meta(gen, {
+                f: (int(got[f"n_{f}"] or 0), int(got[f"dl_{f}"] or 0))
                 for f in INDEX_FIELDS
-            ]
-            self._update_stats(gen, gen_rows, drop_gens=drop_gens,
-                               extra_committed=extra_committed)
+            }, others)
         self.ledger.record(stage, 0, fingerprint, 0, n_out, t.seconds)
         metrics["tokenize_seconds"] = t.seconds
 
@@ -618,146 +583,42 @@ class IndexBuilder:
             )
         self.ledger.record(stage, 0, fingerprint, 0, 0, t.seconds)
 
-    def _update_stats(self, gen: int, gen_rows: list[tuple],
-                      drop_gens=(), extra_committed=()) -> None:
-        """Fold this generation into global corpus_stats + gen_meta.
+    def _gen_meta(self, gen: int) -> list[dict]:
+        """One generation's gen_meta rows (field, n_docs, dl_sum,
+        avgdl_pack) — a tiny driver-side pyarrow read, no Spark job."""
+        return fs.read_parquet(f"{self.gen_meta_path}/gen={gen}").to_pylist()
 
-        ``drop_gens``: generations being RETIRED by this operation
-        (compact/merge rewrite docs into a fresh gen number) — their rows
-        leave gen_meta and the global totals along with the update.
+    def _write_gen_meta(self, gen: int, counts: dict, others) -> None:
+        """Write generation ``gen``'s own gen_meta: per field its
+        (n_docs, dl_sum) from ``counts``, and avgdl_pack — the avgdl over
+        ``others`` plus ``gen``, which ``gen``'s postings are packed with.
 
-        Only COMMITTED generations fold into the carried-forward totals:
-        a concurrent writer's in-flight staging (or a discarded wave's
-        leftover rows) must not inflate the global n_docs/avgdl this
-        generation's postings are packed and scored with.
-        ``extra_committed``: generations THIS operation already staged
-        toward its own commit (a multi-generation compact rewriting gen
-        after gen) — they count as committed for the fold, or the later
-        iterations would drop the earlier replacements' stats."""
-        drop = {int(g) for g in drop_gens}
-        committed = {int(g) for g in self.committed_generations()}
-        committed |= {int(g) for g in extra_committed}
-        prior: dict[tuple[int, str], tuple[int, int, float]] = {}
-        gm_read = self._latest_stats_dir(self.gen_meta_path)
-        if self._exists(gm_read):
-            # tiny table: driver-side pyarrow read, no Spark job on the
-            # build critical path
-            for r in fs.read_parquet(gm_read).to_pylist():
-                if (r["gen"] != gen and int(r["gen"]) not in drop
-                        and int(r["gen"]) in committed):
-                    prior[(r["gen"], r["field"])] = (
-                        r["n_docs"], r["dl_sum"], r["avgdl_pack"]
-                    )
-        # global avgdl including this generation — also the avgdl this
-        # generation's postings will be packed with
-        totals: dict[str, tuple[int, int]] = {}
-        for (g, f), (n, dl, _) in prior.items():
-            tn, tdl = totals.get(f, (0, 0))
-            totals[f] = (tn + n, tdl + dl)
-        for g, f, n, dl in gen_rows:
-            tn, tdl = totals.get(f, (0, 0))
-            totals[f] = (tn + n, tdl + dl)
-        avgdl_now = {
-            f: (dl / n if n else 0.0) for f, (n, dl) in totals.items()
-        }
-        meta_rows = [
-            (g, f, n, dl, p) for (g, f), (n, dl, p) in prior.items()
-        ] + [(gen, f, n, dl, avgdl_now[f]) for g, f, n, dl in gen_rows]
-        self._write_stats_tables(meta_rows, totals)
-
-    def _write_stats_tables(self, meta_rows, totals) -> None:
-        """Write fresh gen_meta + corpus_stats versions from folded rows."""
+        The rows are immutable: a resumed or retried operation packs with
+        the avgdl recorded here, whatever has been committed since, and
+        the query-time bound factor corrects for the drift."""
         import pyarrow as pa
 
         from .lineage import write_small_parquet
 
-        avgdl_now = {
-            f: (dl / n if n else 0.0) for f, (n, dl) in totals.items()
-        }
+        totals = dict(counts)
+        for g in set(others) - {gen}:
+            for r in self._gen_meta(g):
+                n, dl = totals.get(r["field"], (0, 0))
+                totals[r["field"]] = (n + r["n_docs"], dl + r["dl_sum"])
+        avgdl = {f: (dl / n if n else 0.0) for f, (n, dl) in totals.items()}
         write_small_parquet(
-            self._next_stats_dir(self.gen_meta_path),
-            pa.table(
-                {
-                    "gen": pa.array([r[0] for r in meta_rows], pa.int32()),
-                    "field": pa.array([r[1] for r in meta_rows], pa.string()),
-                    "n_docs": pa.array([r[2] for r in meta_rows], pa.int64()),
-                    "dl_sum": pa.array([r[3] for r in meta_rows], pa.int64()),
-                    "avgdl_pack": pa.array(
-                        [float(r[4]) for r in meta_rows], pa.float64()
-                    ),
-                }
-            ),
+            f"{self.gen_meta_path}/gen={gen}",
+            pa.table({
+                "field": pa.array(list(counts), pa.string()),
+                "n_docs": pa.array([n for n, _ in counts.values()],
+                                   pa.int64()),
+                "dl_sum": pa.array([dl for _, dl in counts.values()],
+                                   pa.int64()),
+                "avgdl_pack": pa.array([avgdl[f] for f in counts],
+                                       pa.float64()),
+            }),
             overwrite=True,
         )
-        stats_rows = [
-            (f, totals[f][0], avgdl_now[f]) for f in INDEX_FIELDS
-            if f in totals and totals[f][0] > 0
-        ]
-        write_small_parquet(
-            self._next_stats_dir(self.corpus_stats_path),
-            pa.table(
-                {
-                    "field": pa.array([r[0] for r in stats_rows], pa.string()),
-                    "n_docs": pa.array([r[1] for r in stats_rows], pa.int64()),
-                    "avgdl": pa.array(
-                        [float(r[2]) for r in stats_rows], pa.float64()
-                    ),
-                }
-            ),
-            overwrite=True,
-        )
-
-    def _stats_coverage_ok(self, gens: list[int]) -> bool:
-        """True iff the NEWEST gen_meta version covers exactly ``gens`` —
-        the pre-commit guard against a concurrent writer's stats version
-        (which excludes OUR generation) being the latest at commit time."""
-        gm = self._latest_stats_dir(self.gen_meta_path)
-        have: set[int] = set()
-        if fs.exists(gm):
-            try:
-                have = {
-                    int(g)
-                    for g in fs.read_parquet(gm, columns=["gen"])
-                    ["gen"].to_pylist()
-                }
-            except Exception:
-                return False
-        return have == {int(g) for g in gens}
-
-    def _refold_stats(self, gens: list[int]) -> None:
-        """Rebuild gen_meta/corpus_stats for exactly ``gens`` by gathering
-        each generation's per-field rows from the NEWEST stats version
-        that carries it (concurrent appends each wrote a version missing
-        the other's generation; the union exists across versions). The
-        per-gen avgdl_pack is preserved — it records what that gen's
-        postings were packed with, which a refold must not rewrite."""
-        needed = {int(g) for g in gens}
-        rows: dict[tuple[int, str], tuple[int, int, float]] = {}
-        found: set[int] = set()
-        for v in reversed(_versions(self.gen_meta_path)):
-            if found >= needed:
-                break
-            try:
-                tbl = fs.read_parquet(f"{self.gen_meta_path}/v_{v}")
-            except Exception:
-                continue
-            for r in tbl.to_pylist():
-                g = int(r["gen"])
-                if g in needed and g not in found and \
-                        (g, r["field"]) not in rows:
-                    rows[(g, r["field"])] = (
-                        int(r["n_docs"]), int(r["dl_sum"]),
-                        float(r["avgdl_pack"]),
-                    )
-            found |= {g for (g, _f) in rows}
-        totals: dict[str, tuple[int, int]] = {}
-        for (_g, f), (n, dl, _p) in rows.items():
-            tn, tdl = totals.get(f, (0, 0))
-            totals[f] = (tn + n, tdl + dl)
-        meta_rows = [
-            (g, f, n, dl, p) for (g, f), (n, dl, p) in rows.items()
-        ]
-        self._write_stats_tables(meta_rows, totals)
 
     def _salt_plan(self, gen: int) -> dict:
         """Salt planning needs only the Zipf head — a 5% sample finds it at
@@ -815,12 +676,9 @@ class IndexBuilder:
             # doc_terms 5% sampling job the salt plan would otherwise run
             metrics["postings_built"] = 0
             return
-        avgdl_by_field = {
-            r["field"]: float(r["avgdl"])
-            for r in fs.read_parquet(
-                self._latest_stats_dir(self.corpus_stats_path)
-            ).to_pylist()
-        }
+        # the avgdl this generation recorded when it was tokenized
+        avgdl_by_field = {r["field"]: r["avgdl_pack"]
+                          for r in self._gen_meta(gen)}
         salt_plan = {}
         if self.shuffle_mode == "rows":
             salt_plan = self._salt_plans.pop(gen, None)
@@ -919,83 +777,53 @@ class IndexBuilder:
             )
 
     def _stage_term_stats(self, stage, fingerprint, done, metrics,
-                          gens: list[int] | None = None):
-        """Exact GLOBAL term_stats (query idf): per (field, term), the sum
-        of df over the postings of exactly the generations ABOUT TO BE
-        COMMITTED (``None``: the committed snapshot, else every on-disk
-        generation). Reading the committed list (not the postings dir)
-        keeps partial gens from crashed builds and retained-but-superseded
-        gens out of the global df.
+                          gens: list[int]):
+        """Each generation in ``gens`` (the ones this operation staged)
+        writes its own term_stats/gen=G: per (field, term), the df of G's
+        postings summed over its shards, sorted by term. A reader sums
+        them over the committed generations — the global df for idf.
 
-        The fold runs on the driver with pyarrow — no Spark job. It reads
-        only the (field, term, df) columns: n_terms × n_shards rows per
-        generation, far smaller than doc_terms, and the serving node holds
-        the folded table in a driver dict anyway. It sums ``gens`` from
-        scratch (no base version plus a delta), so the df is right however
-        versions race. The version records ``gens`` in its schema metadata
-        and the commit pins the version folded over exactly the committed
-        list (see _term_stats_version).
-
-        The ledger part number encodes the generation UNION, so a resume
-        only skips the stage when the about-to-commit union is the one
-        already folded (and its version is still on disk) — a retry after
-        a concurrent writer advanced the snapshot (different union)
-        refolds instead of committing stale global df."""
+        Runs on the driver with pyarrow — no Spark job. It reads only the
+        (field, term, df) columns of G's postings: n_terms × n_shards rows,
+        far smaller than doc_terms. The ledger part is the generation, and
+        a resume skips a generation whose stats are on disk: they depend
+        on G's postings alone, so no concurrent commit can stale them."""
         import pyarrow as pa
 
         from .lineage import write_small_parquet
 
-        if gens is None:
-            gens = self.committed_generations()
-        key = _gens_key(gens)
-        part = zlib.crc32(key.encode()) & 0x7FFFFFFF  # ledger part is int32
-        if (stage, part) in done:
-            v = self._term_stats_version(gens)
-            if v is not None:
-                metrics["resumed_stages"].append(stage)
-                metrics["term_stats_rows"] = _parquet_rows(
-                    f"{self.term_stats_path}/v_{v}")
-                return
         schema = pa.schema([("field", pa.string()), ("term", pa.string()),
                             ("df", pa.int64())])
-        with StageTimer() as t:
-            dirs = [f"{self.postings_path}/gen={g}"
-                    for g in sorted({int(g) for g in gens})]
-            parts = [fs.read_parquet(d, columns=schema.names) for d in dirs
-                     if fs.exists(d)]
-            postings = (pa.concat_tables(parts) if parts
-                        else schema.empty_table())
-            stats = (
-                postings.group_by(["field", "term"])
-                .aggregate([("df", "sum")])
-                .rename_columns(schema.names)
-                .sort_by([("term", "ascending"), ("field", "ascending")])
-                .replace_schema_metadata({_FOLDED_GENS: key.encode()})
-            )
-            # dictionary pages only where values repeat: the all-unique
-            # term column stays plain, as Spark's writer leaves it
-            write_small_parquet(
-                self._next_stats_dir(self.term_stats_path), stats,
-                overwrite=True, use_dictionary=["field", "df"],
-            )
-        self.ledger.record(stage, part, fingerprint, 0, stats.num_rows,
-                           t.seconds)
-        metrics["term_stats_seconds"] = t.seconds
-        metrics["term_stats_rows"] = stats.num_rows
-
-    def _term_stats_version(self, gens) -> int | None:
-        """The newest term_stats version folded over exactly ``gens``,
-        else None (also for versions that predate the recorded list)."""
-        want = _gens_key(gens).encode()
-        for v in reversed(_versions(self.term_stats_path)):
-            try:
-                meta = fs.read_parquet(f"{self.term_stats_path}/v_{v}",
-                                       columns=[]).schema.metadata
-            except (OSError, ValueError):  # being rewritten by its writer
+        n_rows, seconds, built = 0, 0.0, False
+        for g in gens:
+            out = f"{self.term_stats_path}/gen={g}"
+            if (stage, g) in done and fs.exists(out):
+                n_rows += _parquet_rows(out)
                 continue
-            if (meta or {}).get(_FOLDED_GENS) == want:
-                return v
-        return None
+            with StageTimer() as t:
+                d = f"{self.postings_path}/gen={g}"
+                postings = (fs.read_parquet(d, columns=schema.names)
+                            if fs.exists(d) else schema.empty_table())
+                stats = (
+                    postings.group_by(["field", "term"])
+                    .aggregate([("df", "sum")])
+                    .rename_columns(schema.names)
+                    .sort_by([("term", "ascending"), ("field", "ascending")])
+                )
+                # dictionary pages only where values repeat: the all-unique
+                # term column stays plain, as Spark's writer leaves it
+                write_small_parquet(out, stats, overwrite=True,
+                                    use_dictionary=["field", "df"])
+            self.ledger.record(stage, g, fingerprint, 0, stats.num_rows,
+                               t.seconds)
+            n_rows += stats.num_rows
+            seconds += t.seconds
+            built = True
+        if built:
+            metrics["term_stats_seconds"] = seconds
+        else:
+            metrics["resumed_stages"].append(stage)
+        metrics["term_stats_rows"] = n_rows
 
     def _read_manifest(self) -> dict | None:
         return fs.read_manifest(self.out)
@@ -1013,26 +841,17 @@ class IndexBuilder:
         return int((self._read_manifest() or {}).get("snapshot_id", 0))
 
     def _next_gen(self) -> int:
-        """First generation number unused by ANY on-disk dir or gen_meta
-        row — never reuses a number a pinned reader might still resolve."""
+        """First generation number unused by ANY on-disk gen dir — never
+        reuses a number a pinned reader might still resolve."""
         used = set()
         for t in _GEN_TABLES:
             used.update(
                 int(d.split("=")[1]) for d in fs.listdir(f"{self.out}/{t}")
                 if d.startswith("gen=")
             )
-        gm = self._latest_stats_dir(self.gen_meta_path)
-        if fs.exists(gm):
-            try:
-                used.update(
-                    int(g) for g in fs.read_parquet(gm, columns=["gen"])
-                    ["gen"].to_pylist()
-                )
-            except Exception:
-                pass
         return (max(used) + 1) if used else 0
 
-    def _commit_manifest(self, gens: list[int] | None = None,
+    def _commit_manifest(self, gens: list[int],
                          base_sid: int | None = None) -> None:
         """Snapshot-atomic commit point (the Iceberg-manifest analog for
         the parquet layout): a single ``_manifest.json`` swapped via
@@ -1079,9 +898,6 @@ class IndexBuilder:
                 f"snapshot advanced {base_sid} → {cur_sid} during this "
                 f"operation; re-open the index and retry"
             )
-        if gens is None:
-            # legacy/back-compat path: directory listing
-            gens = self.generations()
         gens = sorted({int(g) for g in gens})
         sid = cur_sid + 1
         history = list((prev or {}).get("history", []))
@@ -1093,41 +909,7 @@ class IndexBuilder:
             "snapshot_id": sid,
             "history": history,
         }
-        for name, base in (
-            ("corpus_stats", self.corpus_stats_path),
-            ("gen_meta", self.gen_meta_path),
-        ):
-            v = self._latest_version(base)
-            if v is not None:
-                m[f"{name}_v"] = v
-        # term_stats: the version folded over exactly `gens` — the newest
-        # on disk may be a concurrent writer's staged fold over another
-        # generation list. A commit that folded nothing (an empty wave, a
-        # no-op compact) keeps its generation list, so it keeps the pin.
-        v = self._term_stats_version(gens)
-        if v is None:
-            v = (prev or {}).get("term_stats_v")
-        if v is not None:
-            m["term_stats_v"] = int(v)
         fs.publish_manifest(self.out, json.dumps(m))
-        # GC stats versions no snapshot can reference: keep everything
-        # from the PREVIOUS manifest's committed pointer onward (a
-        # multi-generation compact writes several versions before its one
-        # commit — blindly keeping 'last 2' would delete the version a
-        # pinned reader resolves), else fall back to last-2.
-        for name, base in (
-            ("corpus_stats", self.corpus_stats_path),
-            ("gen_meta", self.gen_meta_path),
-            ("term_stats", self.term_stats_path),
-        ):
-            vs = _versions(base)
-            prev_v = (prev or {}).get(f"{name}_v")
-            if prev_v is not None:
-                drop = [v for v in vs if v < int(prev_v)]
-            else:
-                drop = vs[:-2]
-            for v in drop:
-                fs.rmtree(f"{base}/v_{v}")
         # GC at commit reclaims ONLY generations that just fell out of the
         # retained history (superseded by merge/compact and past retention).
         # Never-referenced dirs are left alone: they are either crashed
@@ -1226,14 +1008,13 @@ class IndexBuilder:
         done = self.ledger.completed(fingerprint) if resume else set()
         metrics: dict = {"fingerprint": fingerprint, "gen": 0,
                          "resumed_stages": []}
+        others = [g for g in self.committed_generations() if g != 0]
         self._stage_extract_tokenize(
-            pages, 0, "docs", "doc_terms", fingerprint, done, metrics
+            pages, 0, "docs", "doc_terms", fingerprint, done, metrics, others
         )
         self._stage_postings(0, "postings", fingerprint, done, metrics)
-        gens = sorted(set(self.committed_generations()) | {0})
-        self._stage_term_stats("term_stats", fingerprint, done, metrics,
-                               gens=gens)
-        self._commit_manifest(gens, base_sid=base_sid)
+        self._stage_term_stats("term_stats", fingerprint, done, metrics, [0])
+        self._commit_manifest(others + [0], base_sid=base_sid)
         return metrics
 
     def build_docs(self, docs: DataFrame, fingerprint: str,
@@ -1273,17 +1054,17 @@ class IndexBuilder:
         # the docs-on-disk branch finishes tokenize/embeddings/attrs; it
         # marks "docs" resumed unconditionally, so correct the signal for
         # the fresh-write case
+        others = [g for g in self.committed_generations() if g != gen]
         self._stage_extract_tokenize(
             None, gen, "docs", "doc_terms", fingerprint,
-            done | {("docs", 0)}, metrics,
+            done | {("docs", 0)}, metrics, others,
         )
         if wrote_docs and "docs" in metrics["resumed_stages"]:
             metrics["resumed_stages"].remove("docs")
         self._stage_postings(gen, "postings", fingerprint, done, metrics)
-        gens = sorted(set(self.committed_generations()) | {gen})
         self._stage_term_stats("term_stats", fingerprint, done, metrics,
-                               gens=gens)
-        self._commit_manifest(gens, base_sid=base_sid)
+                               [gen])
+        self._commit_manifest(others + [gen], base_sid=base_sid)
         return metrics
 
     def build_incremental(self, pages: DataFrame, fingerprint: str,
@@ -1299,11 +1080,11 @@ class IndexBuilder:
         ``occ_retries``: if another writer advances the snapshot while this
         wave runs (``SnapshotConflictError`` at the commit), retry up to N
         times. A retry resumes this wave's staged generation from the
-        ledger, re-reads the NEW committed list, and recomputes term_stats
-        over the union (the stats ledger key encodes the union, so the
-        stale aggregate never resumes). Appends compose under retry; a
-        concurrent merge/compact that RETIRED generations still commits
-        correctly (the union is taken against its new list). If the
+        ledger (its gen_meta and term_stats are its own, so nothing is
+        refolded), re-reads the NEW committed list and commits the union.
+        Appends compose under retry; a concurrent merge/compact that
+        RETIRED generations still commits correctly (the union is taken
+        against its new list). If the
         concurrent writer indexed some of the SAME urls, the staged
         generation is discarded and the wave re-runs against the new
         snapshot, so the no-duplicate-url invariant survives the race.
@@ -1429,7 +1210,7 @@ class IndexBuilder:
         stage = lambda name: f"{name}.g{gen}"
         self._stage_extract_tokenize(
             pages, gen, stage("docs"), stage("doc_terms"), fingerprint, done,
-            metrics,
+            metrics, committed_before,
         )
         if metrics.get("docs_out") == 0 or not self._exists(
             f"{self.docs_path}/gen={gen}"
@@ -1444,17 +1225,10 @@ class IndexBuilder:
             self._commit_manifest(committed_before, base_sid=base_sid)
             return metrics
         self._stage_postings(gen, stage("postings"), fingerprint, done, metrics)
-        gens = sorted(set(committed_before) | {gen})
         self._stage_term_stats(stage("term_stats"), fingerprint, done,
-                               metrics, gens=gens)
-        # pre-commit guard: a concurrent append's stats version (folded
-        # WITHOUT our generation) may be the newest on disk — or on an
-        # OCC retry, our resumed stage never refolded over the new union.
-        # Either way the committed pointer must cover exactly `gens`.
-        if not self._stats_coverage_ok(gens):
-            self._refold_stats(gens)
-            metrics["stats_refolded"] = True
-        self._commit_manifest(gens, base_sid=base_sid)
+                               metrics, [gen])
+        self._commit_manifest(sorted(set(committed_before) | {gen}),
+                              base_sid=base_sid)
         return metrics
 
     # -- deletion (delete_by_query analog, mod.rs:768-818) -----------------
@@ -1530,8 +1304,8 @@ class IndexBuilder:
     def compact(self, fingerprint: str | None = None) -> dict:
         """Physically remove tombstoned docs: each affected generation's
         surviving docs are rewritten into a FRESH generation number (docs +
-        doc_terms + postings + embeddings), global stats and term_stats are
-        refreshed, the manifest commits the swap, and the tombstone set is
+        doc_terms + postings + embeddings + its own gen_meta and
+        term_stats), the manifest commits the swap, and the tombstone set is
         cleared. Generations containing no tombstoned doc are untouched
         (per-generation compaction — the Lucene segment-merge shape).
 
@@ -1566,8 +1340,6 @@ class IndexBuilder:
             if kept.isEmpty():
                 # every doc in the generation was tombstoned: the gen
                 # simply leaves the snapshot (no replacement gen)
-                self._update_stats(gen, [], drop_gens={gen},
-                                   extra_committed=result["new_gens"])
                 result["dropped_gens"].append(gen)
                 continue
             g2 = next_gen
@@ -1576,11 +1348,10 @@ class IndexBuilder:
                 _sp(f"{self.docs_path}/gen={g2}")
             )
             kept_disk = self.spark.read.parquet(_sp(f"{self.docs_path}/gen={g2}"))
+            # packed with the avgdl over the generations not retired so
+            # far and the replacements staged before this one
             self._stage_tokenize_from(
-                kept_disk, g2, f"doc_terms.g{g2}", fp, {}, drop_gens={gen},
-                # replacement gens staged EARLIER in this same compaction
-                # must keep their stats rows through this fold
-                extra_committed=result["new_gens"],
+                kept_disk, g2, f"doc_terms.g{g2}", fp, {}, new_committed,
             )
             self._stage_postings(g2, f"postings.g{g2}", fp, set(), {})
             self._stage_doc_attrs(kept_disk, g2)
@@ -1594,14 +1365,11 @@ class IndexBuilder:
                 )
             new_committed.append(g2)
             result["new_gens"].append(g2)
-        new_committed = sorted(new_committed)
-        if result["compacted_gens"]:
+        if result["new_gens"]:
             self._stage_term_stats(f"term_stats.{fp}", fp, set(), {},
-                                   gens=new_committed)
+                                   result["new_gens"])
         # commit FIRST: a crash before the manifest swap must leave the
         # old snapshot live WITH its tombstones still excluding docs
-        if not self._stats_coverage_ok(new_committed):
-            self._refold_stats(new_committed)
         self._commit_manifest(new_committed, base_sid=base_sid)
         self._clear_tombstones(del_files)
         return result
@@ -1646,17 +1414,9 @@ class IndexBuilder:
             _sp(f"{self.docs_path}/gen={new_gen}")
         )
         merged = self.spark.read.parquet(_sp(f"{self.docs_path}/gen={new_gen}"))
-        # retire EVERY other gen_meta row (stale rows from crashed builds
-        # included) — the merged gen is the whole corpus by definition
-        old_meta_gens = set()
-        gm_read = self._latest_stats_dir(self.gen_meta_path)
-        if self._exists(gm_read):
-            old_meta_gens = {
-                int(g) for g in
-                fs.read_parquet(gm_read, columns=["gen"])["gen"].to_pylist()
-            }
+        # the merged gen is the whole corpus: it commits alone
         self._stage_tokenize_from(merged, new_gen, f"doc_terms.{fp}", fp, {},
-                                  drop_gens=old_meta_gens - {new_gen})
+                                  [])
         self._stage_postings(new_gen, f"postings.{fp}", fp, set(), {})
         self._stage_doc_attrs(merged, new_gen)
         emb = None
@@ -1672,10 +1432,7 @@ class IndexBuilder:
             emb.write.mode("overwrite").parquet(
                 _sp(f"{self.embeddings_path}/gen={new_gen}")
             )
-        self._stage_term_stats(f"term_stats.{fp}", fp, set(), {},
-                               gens=[new_gen])
-        if not self._stats_coverage_ok([new_gen]):
-            self._refold_stats([new_gen])
+        self._stage_term_stats(f"term_stats.{fp}", fp, set(), {}, [new_gen])
         self._commit_manifest([new_gen], base_sid=base_sid)
         self._clear_tombstones(del_files)
         return {"merged_gens": gens, "new_gen": new_gen,

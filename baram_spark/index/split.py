@@ -7,13 +7,14 @@ resident and a thin router (``baram_spark.router``) fans out / k-merges.
 ``split_index`` materializes those per-node index directories from one
 committed index:
 
-* **global stats are copied verbatim** — ``term_stats`` (df),
-  ``corpus_stats`` (n_docs, avgdl), ``gen_meta`` (bound factors) and the
-  snapshot manifest. BM25 idf/avgdl are therefore the GLOBAL values on
-  every node, so a node's per-shard scores equal the single-engine scores
+* **global stats are copied verbatim** — every generation's
+  ``term_stats`` (df over all its shards) and ``gen_meta`` (n_docs,
+  dl_sum, avgdl_pack) and the snapshot manifest. A node sums them over
+  the committed generations, so BM25 idf/avgdl are the GLOBAL values on
+  every node, a node's per-shard scores equal the single-engine scores
   exactly and the router's k-merge is rank- AND score-identical (the DFS
   query-then-fetch property, for free, because the stats tables are tiny
-  and immutable per snapshot).
+  and immutable per generation).
 * **postings are file-copied by shard directory** — the layout is already
   ``postings/gen=G/shard=K``, so a node's shard-set is a byte-identical
   subset of the parent index; no Spark rewrite, no re-encode.
@@ -39,8 +40,8 @@ from . import fs
 from .fs import spark_url as _sp
 
 #: small tables copied verbatim to every node (global stats + metadata)
-_GLOBAL_DIRS = ("term_stats", "corpus_stats", "gen_meta", "index_meta",
-                "deletes", "clusters")
+_GLOBAL_DIRS = ("term_stats", "gen_meta", "index_meta", "deletes",
+                "clusters")
 
 
 def _copy_tree(src: str, dst: str) -> None:

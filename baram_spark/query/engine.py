@@ -5,8 +5,10 @@ Query lifecycle (the Spark-native analog of ``baram search`` →
 + ``src/commands/search.rs:95-159``):
 
 1. analyze the query with the SEARCH analyzer (driver-side, tiny).
-2. idf weights from ``term_stats`` (parquet scan, predicate pushdown on the
-   term-sorted files) + cached ``corpus_stats``.
+2. idf weights from the committed generations' ``term_stats`` (df per
+   generation, summed; a parquet scan with predicate pushdown on the
+   term-sorted files, or resident dicts when preloaded) + ``corpus_stats``
+   summed from their ``gen_meta`` rows when the engine opens.
 3. postings lookup: ``term IN (...)`` over ``postings/shard=K`` — the index
    is DOCUMENT-sharded (every doc lives in exactly one shard, the
    OpenSearch/Lucene shard model), so each shard holds all query terms for
@@ -74,20 +76,28 @@ class _GenPostings:
     on the driver: ``cols`` holds every posting list of the generation as
     flat CSR arrays (``codec.decode_generation``) and
     ``lists[(field, term)] = [(shard, row), ...]`` indexes them. The
-    compressed blobs are not kept.
+    compressed blobs are not kept. ``df[(field, term)]`` is the
+    generation's own term_stats (``stats``: its dir, or None) — global
+    over all shards, so a split node's idf stays global.
 
     Immutable once loaded, so consecutive snapshots of a serving node
     share it: a refresh loads only generations it does not already hold.
     ``files`` is the part-file listing it was read from — the reuse key."""
 
-    __slots__ = ("files", "lists", "cols")
+    __slots__ = ("files", "lists", "cols", "df")
 
-    def __init__(self, d: str, files: tuple):
+    def __init__(self, d: str, files: tuple, stats: str | None):
         import pyarrow.dataset as ds
 
         self.files = files
         self.lists: dict = {}
         self.cols = None
+        self.df: dict = {}
+        if stats is not None:
+            ts = fs.read_parquet(stats, columns=["field", "term", "df"])
+            self.df = dict(zip(zip(ts["field"].to_pylist(),
+                                   ts["term"].to_pylist()),
+                               ts["df"].to_pylist()))
         if not files:
             return
         pa_fs, root = fs.resolve(d)
@@ -111,9 +121,9 @@ class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str,
                  preload: bool = False,
                  reuse: "SearchEngine | None" = None):
-        """``preload=True`` pins term stats + postings in driver memory,
-        each generation decoded once into flat arrays (the 'open index'
-        serving mode — an OpenSearch node keeps exactly this resident);
+        """``preload=True`` pins each generation's df + postings in driver
+        memory, decoded once into flat arrays (the 'open index' serving
+        mode — an OpenSearch node keeps exactly this resident);
         the open and every query then run with zero Spark jobs. Default
         is the cluster mode: parquet-pruned lookups + per-shard scoring.
 
@@ -155,18 +165,13 @@ class SearchEngine:
         # snapshot isolation: when the builder's _manifest.json exists, read
         # ONLY the committed generations — a crashed/in-flight build's
         # partial gen dirs are invisible (the Iceberg-manifest analog) —
-        # and the committed VERSION of each small stats table (writers
-        # create fresh v_K dirs instead of overwriting, so a pinned reader
-        # never has files yanked from under it mid-build). Everything here
-        # is a driver-side pyarrow read; the Spark relations of the cluster
-        # mode are built on first use (see _postings / _term_stats).
+        # and ONLY their stats: every generation writes its own immutable
+        # gen_meta and term_stats, so the snapshot's global stats are the
+        # sum over its generation list. Everything here is a driver-side
+        # pyarrow read; the Spark relations of the cluster mode are built
+        # on first use (see _postings / _term_stats).
         self._manifest = self._load_manifest()
         self._committed = self._manifest_gens()
-        self.corpus_stats = {
-            r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
-            for r in fs.read_parquet(
-                self._stats_path("corpus_stats")).to_pylist()
-        }
         post_dir = f"{self.index_dir}/postings"
         if self._committed is not None:
             gens = self._committed
@@ -176,17 +181,22 @@ class SearchEngine:
         self._has_gens = self._committed is not None or bool(gens)
         self._postings_df: DataFrame | None = None
         self._term_stats_df: DataFrame | None = None
+        meta = [(g, r) for g in gens for r in fs.read_parquet(
+            f"{self.index_dir}/gen_meta/gen={g}").to_pylist()]
+        totals: dict = {}
+        for _g, r in meta:
+            n, dl = totals.get(r["field"], (0, 0))
+            totals[r["field"]] = (n + r["n_docs"], dl + r["dl_sum"])
+        self.corpus_stats = {f: (n, dl / n)
+                             for f, (n, dl) in totals.items() if n}
         # block-max bound correction per (gen, field): avgdl_now/avgdl_pack
         # capped below at 1 (see wand.TermPostings)
         self._bound_factor: dict = {}
-        gm_path = self._stats_path("gen_meta")
-        if self._has_gens and fs.exists(gm_path):
-            for r in fs.read_parquet(gm_path).to_pylist():
-                _, avgdl_now = self.corpus_stats.get(r["field"], (0, 0.0))
-                pack = float(r["avgdl_pack"]) or avgdl_now
-                self._bound_factor[(int(r["gen"]), r["field"])] = max(
-                    1.0, avgdl_now / pack if pack else 1.0
-                )
+        for g, r in meta:
+            _, avgdl_now = self.corpus_stats.get(r["field"], (0, 0.0))
+            pack = r["avgdl_pack"] or avgdl_now
+            self._bound_factor[(g, r["field"])] = max(
+                1.0, avgdl_now / pack if pack else 1.0)
         # a committed gen MISSING its bound row cannot prove pack-time
         # avgdl == current, so its blobs must never be pruned: the default
         # becomes a large FINITE factor (inf would turn a 0.0 block-max
@@ -203,18 +213,12 @@ class SearchEngine:
         # is small by contract (deleted-docs-bitmap regime) so it rides to
         # executors inside the task closure.
         self._denied = self._load_denied()
-        self._mem_df: dict | None = None
-        # generation -> its resident postings, in generation order
+        # generation -> its resident postings and df, in generation order
         self._resident: dict[int, _GenPostings] = {}
         self._pa_ds = None  # lazily-built pyarrow dataset (local mode)
         if self._preload:
-            ts = fs.read_parquet(self._stats_path("term_stats"),
-                                 columns=["field", "term", "df"])
-            self._mem_df = dict(zip(
-                zip(ts["field"].to_pylist(), ts["term"].to_pylist()),
-                ts["df"].to_pylist()))
-            # per-generation resident postings: a generation the previous
-            # snapshot held with the same part files is shared, not re-read
+            # a generation the previous snapshot held with the same part
+            # files is shared, df and all, not re-read
             dirs = ({g: f"{post_dir}/gen={g}" for g in gens}
                     if self._has_gens else {0: post_dir})
             for g, d in sorted(dirs.items()):
@@ -222,7 +226,9 @@ class SearchEngine:
                 prev = held.get(g)
                 self._resident[g] = (
                     prev if prev is not None and prev.files == files
-                    else _GenPostings(d, files))
+                    else _GenPostings(
+                        d, files, f"{self.index_dir}/term_stats/gen={g}"
+                        if self._has_gens else None))
 
     @property
     def _postings(self) -> DataFrame:
@@ -233,9 +239,11 @@ class SearchEngine:
 
     @property
     def _term_stats(self) -> DataFrame:
+        """The committed generations' term_stats as a Spark relation
+        (cluster mode): one (field, term, df) row per generation."""
         if self._term_stats_df is None:
-            self._term_stats_df = self.spark.read.parquet(
-                _sp(self._stats_path("term_stats")))
+            self._term_stats_df = self._gen_read(
+                f"{self.index_dir}/term_stats")
         return self._term_stats_df
 
     def refresh(self) -> "SearchEngine":
@@ -263,26 +271,6 @@ class SearchEngine:
         # read as an empty index, never fall back to the whole dir where
         # retained superseded generations would resurrect deleted docs
         return sorted(int(g) for g in gens) if gens is not None else None
-
-    def _stats_path(self, name: str) -> str:
-        """Resolve a small stats table to its committed version (manifest),
-        else the newest on-disk version, else the bare pre-versioning dir."""
-        import re
-
-        base = f"{self.index_dir}/{name}"
-        v = (self._manifest or {}).get(f"{name}_v")
-        if v is not None:
-            cand = f"{base}/v_{int(v)}"
-            if fs.exists(cand):
-                return cand
-        vs = [
-            int(m.group(1))
-            for d in fs.listdir(base)
-            if (m := re.match(r"v_(\d+)$", d))
-        ]
-        if vs:
-            return f"{base}/v_{max(vs)}"
-        return base
 
     #: explicit schemas for EMPTY snapshots: a compact-to-empty index
     #: whose gen dirs were vacuumed has nothing left for parquet schema
@@ -424,13 +412,13 @@ class SearchEngine:
 
     def _weights(self, terms: list[str]) -> dict:
         """{(field, term): boost * idf} from global df (one pruned scan,
-        or the in-memory dictionary when preloaded)."""
+        or the resident generations' df dicts when preloaded)."""
         if not terms:
             return {}
-        if self._mem_df is not None:
+        if self._preload:
             return self._idf_weights(
-                (f, t, self._mem_df.get((f, t))) for f in FIELDS
-                for t in terms)
+                (f, t, gp.df.get((f, t))) for gp in self._resident.values()
+                for f in FIELDS for t in terms)
         rows = (
             self._term_stats.filter(F.col("term").isin(terms))
             .select("field", "term", "df")

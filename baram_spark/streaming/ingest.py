@@ -48,8 +48,9 @@ def stream_build(
     ``occ_retries``: a maintenance job (merge/vacuum) may commit between a
     micro-batch's base read and its manifest swap; the batch's commit then
     aborts with ``SnapshotConflictError`` and is retried against the new
-    snapshot (staged work resumes from the ledger, term_stats recomputed
-    over the union) — the stream never loses a batch to upkeep jobs.
+    snapshot (staged work resumes from the ledger and commits with the
+    new snapshot's generations) — the stream never loses a batch to
+    upkeep jobs.
 
     ``bloom_prefilter``: maintain a driver-side
     :class:`~baram_spark.operators.bloom.CommittedUrlBloom` — the

@@ -25,18 +25,36 @@ def work_dir(tmp_path_factory):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def stats_dir(index_dir: str, name: str) -> str:
-    """Resolve a versioned stats table (v_K subdirs) to its newest version."""
-    import os
-    import re as _re
+def snapshot_stats(spark, index_dir: str):
+    """The committed snapshot's stats as a reader resolves them: the
+    term_stats and gen_meta rows of exactly the manifest's generations,
+    as Spark relations carrying a ``gen`` column, and the global df and
+    corpus stats summed from them::
 
-    base = f"{index_dir}/{name}"
-    if os.path.exists(base):
-        vs = [int(m.group(1)) for d in os.listdir(base)
-              if (m := _re.match(r"v_(\d+)$", d))]
-        if vs:
-            return f"{base}/v_{max(vs)}"
-    return base
+        st = snapshot_stats(spark, out)
+        st.term_stats   # gen, field, term, df (per generation)
+        st.gen_meta     # gen, field, n_docs, dl_sum, avgdl_pack
+        st.df           # field, term, df (summed over generations)
+        st.corpus       # {field: (n_docs, avgdl)} for fields with docs
+    """
+    from types import SimpleNamespace
+
+    from pyspark.sql import functions as F
+
+    from baram_spark.index.builder import read_gen_table
+
+    ts = read_gen_table(spark, index_dir, "term_stats")
+    gm = read_gen_table(spark, index_dir, "gen_meta")
+    totals = {}
+    for r in gm.collect():
+        n, dl = totals.get(r["field"], (0, 0))
+        totals[r["field"]] = (n + r["n_docs"], dl + r["dl_sum"])
+    return SimpleNamespace(
+        term_stats=ts,
+        gen_meta=gm,
+        df=ts.groupBy("field", "term").agg(F.sum("df").alias("df")),
+        corpus={f: (n, dl / n) for f, (n, dl) in totals.items() if n},
+    )
 
 
 @contextlib.contextmanager

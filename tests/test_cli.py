@@ -7,6 +7,7 @@ good (index / search / search --hybrid / stats / cluster / serve --check).
 """
 
 import json
+import os
 
 import pytest
 
@@ -71,6 +72,39 @@ def test_cli_stats(capsys, spark, cli_index):
     assert out["postings"] > 0
     assert out["terms"] > 0
     assert out["generations"] == [0]
+
+
+def test_cli_stats_terms_follow_the_manifest(capsys, spark, tmp_path):
+    """`stats` counts terms as the distinct (field, term) pairs of the
+    committed generations — not of a staged, uncommitted wave whose
+    term_stats are already on disk."""
+    from baram_spark.index.builder import IndexBuilder, read_gen_table
+
+    out = f"{tmp_path}/statsidx"
+    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b.build(pages_df(spark, 60, partitions=2), fingerprint="t0")
+    b.build_incremental(pages_df(spark, 100, partitions=2),
+                        fingerprint="t1")
+
+    class Held(Exception):
+        pass
+
+    def held(*a, **kw):
+        raise Held
+
+    staged = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    staged._commit_manifest = held
+    with pytest.raises(Held):
+        staged.build_incremental(pages_df(spark, 300, partitions=2),
+                                 fingerprint="t2")
+    assert os.path.isdir(f"{out}/term_stats/gen=2")
+
+    rep = _run(capsys, spark, ["stats", "--index", out])
+    assert rep["generations"] == [0, 1]
+    post = read_gen_table(spark, out, "postings")
+    assert rep["terms"] == post.select("field", "term").distinct().count()
+    # a term in both generations counts once
+    assert rep["terms"] < read_gen_table(spark, out, "term_stats").count()
 
 
 def test_cli_cluster(capsys, spark, cli_index):
@@ -161,6 +195,38 @@ def test_cli_maintenance_preserves_shard_count(capsys, spark, tmp_path):
     local = eng.search(q, k=5, mode="local", category="sports")
     dist = eng.search(q, k=5, mode="distributed", category="sports")
     assert local == dist
+
+
+def test_index_n_shards_reads_the_committed_manifest(spark, tmp_path):
+    """index_n_shards answers with the committed manifest's n_shards:
+    every build overwrites index_meta at its start, so a build that has
+    not committed (or crashed) must not re-shard a maintenance run.
+    index_meta counts only before the first commit, the default only on
+    an empty dir, and an unreadable index_meta raises."""
+    import pytest
+
+    from baram_spark.index.builder import IndexBuilder, index_n_shards
+
+    out = f"{tmp_path}/committed"
+    IndexBuilder(spark, out, n_shards=4, salt_threshold=10**9).build(
+        pages_df(spark, 60, partitions=2), fingerprint="n4")
+    assert index_n_shards(out) == 4
+    # an uncommitted 8-shard build has started over the same dir
+    IndexBuilder(spark, out, n_shards=8)._write_index_meta()
+    assert index_n_shards(out) == 4
+
+    fresh = f"{tmp_path}/uncommitted"
+    IndexBuilder(spark, fresh, n_shards=3)._write_index_meta()
+    assert index_n_shards(fresh) == 3
+    assert index_n_shards(f"{tmp_path}/empty") == 8
+    assert index_n_shards(f"{tmp_path}/empty", 5) == 5
+
+    bad = f"{tmp_path}/bad/index_meta"
+    os.makedirs(bad)
+    with open(f"{bad}/part-0.parquet", "wb") as f:
+        f.write(b"not parquet")
+    with pytest.raises(Exception):
+        index_n_shards(f"{tmp_path}/bad")
 
 
 def test_cli_maintenance_notify_failure_keeps_report(capsys, spark,

@@ -101,8 +101,8 @@ def test_compact_physically_removes(spark, del_index):
     after = fresh.search(q, k=5)
     assert all(d != victim for d, _ in after)
     post = spark.read.parquet(f"{out}/postings")
-    from tests.conftest import stats_dir
-    ts = spark.read.parquet(stats_dir(out, "term_stats"))
+    from tests.conftest import snapshot_stats
+    ts = snapshot_stats(spark, out).df
     agg = post.groupBy("field", "term").agg(F.sum("df").alias("df_sum"))
     bad = (
         agg.join(ts, ["field", "term"], "full")
@@ -136,15 +136,14 @@ def test_multi_generation_compact_stats(spark, tmp_path):
 
     # corpus stats must equal a direct recount over the committed docs
     from baram_spark.index.builder import read_gen_table
-    from tests.conftest import stats_dir
+    from tests.conftest import snapshot_stats
 
     committed = read_gen_table(spark, out, "docs")
     n_docs = committed.count()
-    stats = {r["field"]: (r["n_docs"], r["avgdl"])
-             for r in spark.read.parquet(
-                 stats_dir(out, "corpus_stats")).collect()}
+    stats = snapshot_stats(spark, out).corpus
     assert stats["title"][0] == n_docs, (stats, n_docs)
     assert stats["content"][0] == n_docs
+    assert SearchEngine(spark, out).corpus_stats == stats
 
     # and the engine still ranks identically to brute force
     from baram_spark.query.bm25 import BruteForceIndex

@@ -24,24 +24,37 @@ def _oracle(spark, index_dir):
     )
 
 
+def _committed_oracle(spark, index_dir):
+    """Brute force over the committed docs only (staged waves excluded)."""
+    from baram_spark.index.builder import read_gen_table
+
+    docs = read_gen_table(spark, index_dir, "docs").select(
+        "doc_id", "title", "text").toPandas()
+    return BruteForceIndex.build(
+        [(int(r.doc_id), r.title, r.text) for r in docs.itertuples()]
+    )
+
+
 def _norm(hits):
     return [(d, round(s, 9)) for d, s in hits]
 
 
 def _assert_term_stats_exact(spark, out):
-    """The term_stats version a reader resolves (the manifest's pin)
-    equals the direct Spark aggregate over the committed postings."""
+    """The term_stats a reader resolves (those of the manifest's
+    generations) equal the direct Spark aggregate over the committed
+    postings: per generation, and summed into the global df."""
     from baram_spark.index.builder import committed_gens, read_gen_table
+    from tests.conftest import snapshot_stats
 
-    stats = spark.read.parquet(
-        SearchEngine(spark, out)._stats_path("term_stats"))
-    expect = (
-        read_gen_table(spark, out, "postings", gens=committed_gens(out))
-        .groupBy("field", "term").agg(F.sum("df").alias("df"))
-    )
-    assert stats.count() == expect.count()
-    assert stats.exceptAll(expect).isEmpty()
-    assert expect.exceptAll(stats).isEmpty()
+    stats = snapshot_stats(spark, out)
+    post = read_gen_table(spark, out, "postings", gens=committed_gens(out))
+    for got, keys in ((stats.term_stats, ["gen", "field", "term"]),
+                      (stats.df, ["field", "term"])):
+        expect = post.groupBy(*keys).agg(F.sum("df").alias("df"))
+        got = got.select(*keys, "df")
+        assert got.count() == expect.count()
+        assert got.exceptAll(expect).isEmpty()
+        assert expect.exceptAll(got).isEmpty()
 
 
 @pytest.fixture(scope="module")
@@ -222,8 +235,8 @@ def test_merge_generations(spark, tmp_path):
     assert res["docs"] == docs.count()
     # gen_meta holds exactly one generation per field, packed at current
     # avgdl (bound factor 1)
-    from tests.conftest import stats_dir
-    gm = spark.read.parquet(stats_dir(out, "gen_meta")).collect()
+    from tests.conftest import snapshot_stats
+    gm = snapshot_stats(spark, out).gen_meta.collect()
     assert {r["gen"] for r in gm} == {new_gen}
 
     fresh = SearchEngine(spark, out)
@@ -595,11 +608,11 @@ def test_tombstones_added_during_merge_survive(spark, tmp_path):
     assert early not in got and late not in got
 
 
-def test_stats_coverage_refold_on_concurrent_append(spark, tmp_path):
-    """Writer A committing while writer B's stats version (folded WITHOUT
-    A's generation) is newest on disk: the pre-commit coverage guard
-    refolds, so committed corpus stats always cover exactly the committed
-    generations and BM25 stays oracle-identical."""
+def test_concurrent_append_commits_stats_of_every_gen(spark, tmp_path):
+    """Writer B commits a disjoint wave while writer A's wave is in
+    flight; A's retry commits the union, and the stats a reader resolves
+    cover exactly the committed generations, so BM25 stays
+    oracle-identical."""
     out = f"{tmp_path}/cover_idx"
     b1 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
     b1.build(pages_df(spark, 120, partitions=2), fingerprint="c0")
@@ -611,8 +624,7 @@ def test_stats_coverage_refold_on_concurrent_append(spark, tmp_path):
     def hooked(*a, **kw):
         if fired["n"] == 0:
             fired["n"] = 1
-            # concurrent writer commits a DISJOINT wave mid-flight,
-            # leaving ITS stats (without b1's staged gen) newest on disk
+            # concurrent writer commits a DISJOINT wave mid-flight
             b2.build_incremental(pages_df(spark, 170, partitions=2),
                                  fingerprint="c-conc")
         return orig(*a, **kw)
@@ -622,16 +634,15 @@ def test_stats_coverage_refold_on_concurrent_append(spark, tmp_path):
                              fingerprint="c1", occ_retries=2)
     gens = b1.committed_generations()
     assert len(gens) == 3
-    # committed gen_meta covers every committed generation
-    from baram_spark.index import fs as fsmod
+    # committed gen_meta and term_stats cover every committed generation
+    from tests.conftest import snapshot_stats
 
+    stats = snapshot_stats(spark, out)
+    for t in (stats.gen_meta, stats.term_stats):
+        covered = {int(r["gen"]) for r in t.select("gen").distinct().collect()}
+        assert covered == set(gens), (covered, gens)
+    _assert_term_stats_exact(spark, out)
     eng = SearchEngine(spark, out)
-    gm = eng._stats_path("gen_meta")
-    covered = {
-        int(g) for g in
-        fsmod.read_parquet(gm, columns=["gen"])["gen"].to_pylist()
-    }
-    assert covered == set(gens), (covered, gens)
     # and the engine ranks identically to brute force over the union
     q = make_query_set()[0]["query_text"]
     assert _norm(eng.search(q, k=10, mode="local")) == _norm(
@@ -651,7 +662,8 @@ def test_empty_wave_leaves_no_orphan_dirs(spark, tmp_path):
     m = b.build_incremental(pages_df(spark, 100, partitions=2),
                             fingerprint="o1")
     assert m["postings_built"] == 0
-    for t in ("docs", "doc_terms", "doc_attrs", "postings", "embeddings"):
+    for t in ("docs", "doc_terms", "doc_attrs", "postings", "embeddings",
+              "gen_meta", "term_stats"):
         base = f"{out}/{t}"
         gens = [d for d in (os.listdir(base) if os.path.isdir(base) else [])
                 if d.startswith("gen=")]
@@ -737,13 +749,13 @@ def test_resume_reruns_shard_whose_postings_were_deleted(spark, tmp_path):
 
 
 def test_commit_pins_its_own_term_stats_version(spark, tmp_path):
-    """A commit pins the term_stats version folded over exactly the
-    generations it commits — never the newest on disk, which may be a
-    concurrent writer's staged fold over another generation list. A folds
-    {0, 1}; B then stages a wave (gen 2, a fold over {0, 2}) and is held
-    before its commit; A commits [0, 1]. A's df must cover {0, 1}, or idf
-    and with it BM25 oracle identity break."""
-    from baram_spark.index import fs as fsmod
+    """A commit's term_stats are those of exactly the generations it
+    commits — never a concurrent writer's staged generation, whose stats
+    are on disk too. A stages gen 1; B then stages a wave (gen 2, with
+    its own term_stats) and is held before its commit; A commits [0, 1].
+    The df a reader resolves must cover {0, 1}, or idf and with it BM25
+    oracle identity break."""
+    import os
 
     out = f"{tmp_path}/pin_idx"
     a = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
@@ -766,14 +778,13 @@ def test_commit_pins_its_own_term_stats_version(spark, tmp_path):
             with pytest.raises(Held):
                 b.build_incremental(pages_df(spark, 260, partitions=2),
                                     fingerprint="p-held")
-            staged["v"] = b._latest_version(b.term_stats_path)
+            staged["dirs"] = sorted(os.listdir(f"{out}/term_stats"))
 
     a._stage_term_stats = hooked
     a.build_incremental(pages_df(spark, 190, partitions=2), fingerprint="p1")
     assert a.committed_generations() == [0, 1]
-    # B's staged fold is the newest version on disk, and is not pinned
-    assert staged["v"] == a._latest_version(a.term_stats_path)
-    assert fsmod.read_manifest(out)["term_stats_v"] != staged["v"]
+    # B's staged generation wrote its stats, and no reader counts them
+    assert staged["dirs"] == ["gen=0", "gen=1", "gen=2"]
     _assert_term_stats_exact(spark, out)
 
     # B's retry discards its staged gen (A indexed some of its urls) and
@@ -783,6 +794,103 @@ def test_commit_pins_its_own_term_stats_version(spark, tmp_path):
                         fingerprint="p-held", occ_retries=1)
     assert len(b.committed_generations()) == 3
     _assert_term_stats_exact(spark, out)
+    q = make_query_set()[0]["query_text"]
+    assert _norm(SearchEngine(spark, out).search(q, k=10, mode="local")) \
+        == _norm(_oracle(spark, out).search(q, k=10))
+
+
+def test_commit_pins_its_own_corpus_stats(spark, tmp_path):
+    """A wave's commit carries the corpus stats of exactly the
+    generations it commits. Writer B stages a wave from inside A's
+    _commit_manifest — after any pre-commit check A made — and is held
+    before its own commit; A commits [0, 1]. The engine's corpus_stats
+    must equal a direct recount over the committed docs, and BM25 the
+    oracle."""
+    from tests.test_serving_refresh import _pages
+
+    out = f"{tmp_path}/race_idx"
+    a = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    a.build(_pages(spark, 0, 120), fingerprint="r0")
+    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+
+    class Held(Exception):
+        pass
+
+    def held_commit(*args, **kw):
+        raise Held
+
+    b._commit_manifest = held_commit
+    orig = a._commit_manifest
+
+    def racing_commit(*args, **kw):
+        with pytest.raises(Held):
+            b.build_incremental(_pages(spark, 190, 400),
+                                fingerprint="r-held")
+        return orig(*args, **kw)
+
+    a._commit_manifest = racing_commit
+    a.build_incremental(_pages(spark, 120, 190), fingerprint="r1")
+    assert a.committed_generations() == [0, 1]
+
+    from baram_spark.index.builder import read_gen_table
+
+    rows = (
+        read_gen_table(spark, out, "doc_terms").filter(F.col("first") == 1)
+        .groupBy("field").agg(F.count(F.lit(1)).alias("n"),
+                              F.sum("dl").alias("dl"))
+        .collect()
+    )
+    expect = {r["field"]: (r["n"], r["dl"] / r["n"]) for r in rows}
+    assert SearchEngine(spark, out).corpus_stats == expect
+    q = make_query_set()[0]["query_text"]
+    assert _norm(SearchEngine(spark, out).search(q, k=10, mode="local")) \
+        == _norm(_committed_oracle(spark, out).search(q, k=10))
+
+
+def test_resumed_wave_packs_with_its_recorded_avgdl(spark, tmp_path):
+    """Wave A dies at _stage_postings (the test_crash_recovery kill);
+    a disjoint wave B commits; A resumes and commits. A's postings must
+    be the pack of its doc_terms with the avgdl_pack its gen_meta row
+    records — the avgdl the query-time bound factor trusts — not with
+    whatever corpus stats B left behind."""
+    from tests.conftest import snapshot_stats
+    from tests.test_crash_recovery import _Crash, _kill_first_call
+    from tests.test_plan_shape import _pack_runs
+    from tests.test_serving_refresh import _pages
+
+    out = f"{tmp_path}/resume_idx"
+    IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9).build(
+        _pages(spark, 0, 120), fingerprint="k0")
+    a = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    _kill_first_call(a, "_stage_postings")
+    with pytest.raises(_Crash):
+        a.build_incremental(_pages(spark, 120, 190), fingerprint="k-a")
+    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    assert b.build_incremental(_pages(spark, 190, 400),
+                               fingerprint="k-b")["gen"] == 2
+    a2 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    assert a2.build_incremental(_pages(spark, 120, 190),
+                                fingerprint="k-a")["gen"] == 1
+    assert a2.committed_generations() == [0, 1, 2]
+
+    avgdl = {r["field"]: r["avgdl_pack"] for r in
+             snapshot_stats(spark, out).gen_meta
+             .filter(F.col("gen") == 1).collect()}
+    terms = (
+        spark.read.parquet(f"{out}/doc_terms/gen=1")
+        .select("shard", "field", "term", "doc_id", "tf", "dl")
+        .toPandas()
+        .assign(salt=0)
+        .sort_values(["shard", "field", "term", "salt", "doc_id"])
+    )
+    want = _pack_runs(terms, avgdl, a2.codec)
+    got = {
+        (int(r["shard"]), r["field"], r["term"], int(r["salt"])):
+            (int(r["df"]), bytes(r["postings"]), bytes(r["skips"]),
+             bytes(r["blockmax"]))
+        for r in spark.read.parquet(f"{out}/postings/gen=1").collect()
+    }
+    assert got == want
     q = make_query_set()[0]["query_text"]
     assert _norm(SearchEngine(spark, out).search(q, k=10, mode="local")) \
         == _norm(_oracle(spark, out).search(q, k=10))

@@ -161,9 +161,9 @@ def test_chunk_text_third_field(spark, tmp_path):
     # write docs-with-chunks as the docs table and run tokenize+postings
     with_chunks.write.mode("overwrite").parquet(f"{out2}/docs/gen=0")
     b2._write_index_meta()
-    b2._stage_tokenize_from(with_chunks, 0, "doc_terms", "fp2", {})
+    b2._stage_tokenize_from(with_chunks, 0, "doc_terms", "fp2", {}, [])
     b2._stage_postings(0, "postings", "fp2", set(), {})
-    b2._stage_term_stats("term_stats", "fp2", set(), {})
+    b2._stage_term_stats("term_stats", "fp2", set(), {}, [0])
 
     pdf = with_chunks.select(
         "doc_id", "title", "text", "chunk_text"
@@ -216,8 +216,8 @@ def test_salting_was_exercised(spark, index_dir, work_dir):
         assert _norm(e1.search(q["query_text"], k=10, mode="local")) == _norm(
             e2.search(q["query_text"], k=10, mode="local")
         )
-    from tests.conftest import stats_dir
-    ts = spark.read.parquet(stats_dir(out2, "term_stats"))
+    from tests.conftest import snapshot_stats
+    ts = snapshot_stats(spark, out2).df
     heavy = ts.filter(F.col("df") > 100).count()
     assert heavy > 0, "corpus should have Zipf-head terms above threshold"
     post = spark.read.parquet(f"{out2}/postings")
@@ -235,8 +235,8 @@ def test_salting_was_exercised(spark, index_dir, work_dir):
 def test_postings_df_matches_term_stats(spark, index_dir):
     """Σ per-shard df == global df from term_stats for every term."""
     post = spark.read.parquet(f"{index_dir}/postings")
-    from tests.conftest import stats_dir
-    ts = spark.read.parquet(stats_dir(index_dir, "term_stats"))
+    from tests.conftest import snapshot_stats
+    ts = snapshot_stats(spark, index_dir).df
     agg = post.groupBy("field", "term").agg(F.sum("df").alias("df_sum"))
     bad = (
         agg.join(ts, ["field", "term"], "full")

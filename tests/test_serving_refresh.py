@@ -75,7 +75,7 @@ def test_refresh_matches_fresh_open_through_index_lifecycle(spark, tmp_path):
             assert shared == {0}  # the wave left generation 0 untouched
         for g in shared:
             # a generation whose part files did not change is shared,
-            # decoded arrays and all: nothing is decoded again
+            # decoded arrays and df and all: nothing is read again
             assert resident[g] is held[g], (name, g)
             assert resident[g].cols is held_cols[g], (name, g)
             assert all(a is b for a, b in zip(resident[g].cols,
@@ -84,7 +84,9 @@ def test_refresh_matches_fresh_open_through_index_lifecycle(spark, tmp_path):
             fresh = ServingContext(spark, out)
         assert jobs == [], f"{name}: preloaded open started {jobs}"
         assert _answers(ctx) == _answers(fresh), name
-        assert ctx.engine._mem_df == fresh.engine._mem_df, name
+        assert ({g: gp.df for g, gp in resident.items()}
+                == {g: gp.df for g, gp in fresh.engine._resident.items()}), name
+        assert ctx.engine.corpus_stats == fresh.engine.corpus_stats, name
         assert ctx.engine._bound_factor == fresh.engine._bound_factor, name
         assert (ctx.engine._denied is None) == (fresh.engine._denied is None)
         assert sorted(ctx.meta) == sorted(fresh.meta), name
