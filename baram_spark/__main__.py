@@ -236,16 +236,17 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         )
         if args.hybrid:
             from baram_spark.index import fs
+            from baram_spark.index.builder import read_gen_table
             from baram_spark.query.hybrid import embed_docs, hybrid_search, knn_search
 
             emb_dir = f"{args.index}/embeddings"
-            if fs.exists(emb_dir):
+            emb_gens = [g for g in engine._committed
+                        if fs.exists(f"{emb_dir}/gen={g}")]
+            if emb_gens:
                 # build-time artifact at the COMMITTED snapshot: one
                 # parquet read, zero embedding jobs
-                from baram_spark.index.builder import read_gen_table
-
                 emb = read_gen_table(spark, args.index, "embeddings",
-                                     gens=engine._committed)
+                                     emb_gens)
             else:
                 print(
                     "warning: no build-time embeddings at "
@@ -253,9 +254,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                     "scan; rebuild with build_embeddings=True",
                     file=sys.stderr,
                 )
-                emb = embed_docs(
-                    spark.read.parquet(fs.spark_url(f"{args.index}/docs"))
-                )
+                emb = embed_docs(read_gen_table(spark, args.index, "docs",
+                                                engine._committed))
             # filter context applies to BOTH fusion inputs: an
             # out-of-filter doc must not enter through the knn side
             allowed = engine._allowed_docs(args.category, args.date_from,
@@ -300,27 +300,24 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             except KeyboardInterrupt:
                 server.shutdown()
     elif args.cmd == "stats":
+        from pyspark.sql import functions as F
+
+        from baram_spark.index import fs
         from baram_spark.index.builder import read_gen_table
 
         idx = args.index.rstrip("/")
         # manifest-committed snapshot only: retained-but-superseded gens
         # (merge/compact retention) must not double-count
-        docs = read_gen_table(spark, idx, "docs")
-        post = read_gen_table(spark, idx, "postings")
-        from pyspark.sql import functions as F
-
-        from baram_spark.index import fs
-
-        gens = sorted(
-            int(r["gen"]) for r in docs.select("gen").distinct().collect()
-        ) if "gen" in docs.columns else [0]
+        gens = fs.committed_gens(fs.read_manifest(idx))
+        docs = read_gen_table(spark, idx, "docs", gens)
+        post = read_gen_table(spark, idx, "postings", gens)
         stats = {
             "documents": docs.count(),
             "generations": gens,
             "posting_lists": post.count(),
             "postings": int(post.agg(F.sum("df")).collect()[0][0] or 0),
             # distinct over generations: each holds its own df rows
-            "terms": read_gen_table(spark, idx, "term_stats")
+            "terms": read_gen_table(spark, idx, "term_stats", gens)
             .select("field", "term").distinct().count(),
         }
         if fs.exists(f"{idx}/deletes"):
@@ -376,19 +373,21 @@ def _run_cluster(spark, index: str, threshold: float, min_size: int,
     the S13 cluster JSON sink — default location is what the serving
     tier's /api/events reads (the clusters.json analog, serve.rs:570-627).
     Returns (n_clusters, out_path)."""
+    from baram_spark.index import fs
     from baram_spark.index.builder import read_gen_table
     from baram_spark.operators.clustering import (
         cluster_embeddings,
         event_clusters,
     )
 
-    emb = read_gen_table(spark, index, "embeddings")
+    gens = fs.committed_gens(fs.read_manifest(index))
+    emb = read_gen_table(spark, index, "embeddings", gens)
     dim = len(emb.select("embedding").first()[0])
     clusters = cluster_embeddings(
         emb, dim=dim, threshold=threshold, min_size=min_size,
         id_col="doc_id",
     )
-    docs = read_gen_table(spark, index, "docs")
+    docs = read_gen_table(spark, index, "docs", gens)
     events = event_clusters(clusters, docs)
     out = out or f"{index.rstrip('/')}/clusters"
     events.write.mode("overwrite").json(out)

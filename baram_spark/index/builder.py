@@ -91,14 +91,6 @@ def _parquet_rows(path: str) -> int:
         return 0
 
 
-def committed_gens(index_dir: str) -> list[int] | None:
-    """Generations listed by the committed manifest, or None when the
-    index predates manifests (callers fall back to a directory listing)."""
-    m = fs.read_manifest(index_dir)
-    gens = (m or {}).get("generations")
-    return sorted(int(g) for g in gens) if gens is not None else None
-
-
 _DOC_COLS = ("doc_id", "url", "oid", "aid", "title", "text", "category",
              "published_at", "publisher", "author", "format",
              "content_hash", "warc_ts", "lang")
@@ -141,7 +133,7 @@ def _normalize_docs(docs: DataFrame) -> DataFrame:
 
 def index_n_shards(index_dir: str, default: int = 8) -> int:
     """The shard count an existing index was built with: the committed
-    manifest's, as ``SearchEngine._detect_n_shards`` reads it (every
+    manifest's, as ``SearchEngine`` reads it (every
     build overwrites ``index_meta`` at its start, so only the manifest
     is snapshot-consistent), else ``index_meta`` when nothing is
     committed yet, else ``default``. Maintenance operations MUST open the
@@ -160,32 +152,21 @@ def index_n_shards(index_dir: str, default: int = 8) -> int:
 
 
 def read_gen_table(spark: SparkSession, index_dir: str, table: str,
-                   gens: list[int] | None = None) -> DataFrame:
-    """Read a gen-partitioned index table at the COMMITTED snapshot.
+                   gens: list[int]) -> DataFrame:
+    """Read generations ``gens`` of a gen-partitioned index table — the
+    committed snapshot's, from ``fs.committed_gens``.
 
     Superseded generations may linger on disk until GC (retention keeps
-    pinned readers alive), so any consumer that reads a whole table dir —
-    CLI stats/cluster, hybrid search, dedup prefilters — must go through
-    the manifest's generation list or it double-counts merged docs."""
+    pinned readers alive), so a consumer reads exactly the listed
+    generation dirs, never the table dir, or it double-counts merged
+    docs; a missing listed dir raises. An empty list (every doc
+    tombstoned then compacted away) is an EMPTY relation with the
+    table's schema."""
     base = f"{index_dir.rstrip('/')}/{table}"
-    if gens is None:
-        gens = committed_gens(index_dir)
-    if gens is not None:
-        # a committed snapshot EXISTS: read exactly its generations. An
-        # empty list (e.g. every doc tombstoned then compacted away) is
-        # an EMPTY relation — never a fallback to the whole directory,
-        # which may hold retained superseded generations.
-        dirs = [
-            f"{base}/gen={g}" for g in gens
-            if fs.exists(f"{base}/gen={g}")
-        ]
-        if dirs:
-            return spark.read.option("basePath", _sp(base)).parquet(
-                *[_sp(d) for d in dirs]
-            )
-        if fs.exists(base):
-            return spark.read.parquet(_sp(base)).filter(F.lit(False))
-    return spark.read.parquet(_sp(base))
+    if not gens:
+        return spark.read.parquet(_sp(base)).filter(F.lit(False))
+    return spark.read.option("basePath", _sp(base)).parquet(
+        *[_sp(f"{base}/gen={g}") for g in gens])
 
 
 class SnapshotConflictError(RuntimeError):
@@ -829,11 +810,10 @@ class IndexBuilder:
         return fs.read_manifest(self.out)
 
     def committed_generations(self) -> list[int]:
-        """The snapshot's generation list — from the manifest when one
-        exists (a crashed earlier build's partial gen dirs are invisible),
-        else the on-disk listing (pre-manifest layouts)."""
-        gens = committed_gens(self.out)
-        return gens if gens is not None else self.generations()
+        """The snapshot's generation list: the manifest's, [] before the
+        first commit. A crashed earlier build's partial gen dirs are
+        never part of it."""
+        return fs.committed_gens(self._read_manifest())
 
     def _begin(self) -> int:
         """Snapshot id this operation bases its commit on (optimistic
@@ -1298,7 +1278,8 @@ class IndexBuilder:
         docs table (the ``delete_by_query`` analog, mod.rs:768-818) —
         e.g. ``"category = 'sports'"`` or ``"url = '...'"``. The predicate
         is a pushed-down parquet filter; returns the number tombstoned."""
-        docs = read_gen_table(self.spark, self.out, "docs").filter(predicate)
+        docs = read_gen_table(self.spark, self.out, "docs",
+                              self.committed_generations()).filter(predicate)
         return self.delete_docs(docs.select("doc_id"))
 
     def compact(self, fingerprint: str | None = None) -> dict:
@@ -1399,9 +1380,7 @@ class IndexBuilder:
             return {"merged_gens": gens, "docs": None}
         fp = fingerprint or f"merge-{int(_time.time())}"
         new_gen = self._next_gen()
-        docs = read_gen_table(self.spark, self.out, "docs", gens=gens)
-        if "gen" in docs.columns:
-            docs = docs.drop("gen")
+        docs = read_gen_table(self.spark, self.out, "docs", gens).drop("gen")
         del_df = None
         if deleted:
             del_df = F.broadcast(
@@ -1419,14 +1398,11 @@ class IndexBuilder:
                                   [])
         self._stage_postings(new_gen, f"postings.{fp}", fp, set(), {})
         self._stage_doc_attrs(merged, new_gen)
-        emb = None
-        if any(
-            self._exists(f"{self.embeddings_path}/gen={g}") for g in gens
-        ):
+        emb_gens = [g for g in gens
+                    if self._exists(f"{self.embeddings_path}/gen={g}")]
+        if emb_gens:
             emb = read_gen_table(self.spark, self.out, "embeddings",
-                                 gens=gens)
-            if "gen" in emb.columns:
-                emb = emb.drop("gen")
+                                 emb_gens).drop("gen")
             if del_df is not None:
                 emb = emb.join(del_df, "doc_id", "left_anti")
             emb.write.mode("overwrite").parquet(

@@ -57,10 +57,11 @@ from pyarrow import fs as pafs
 
 __all__ = [
     "register_filesystem", "unregister_filesystem", "resolve", "spark_url",
-    "exists", "isdir", "listdir", "walk_dir_names", "read_text",
+    "exists", "isdir", "listdir", "read_text",
     "write_text", "rename", "remove", "makedirs", "rmtree",
     "read_json", "read_parquet", "write_parquet_file",
-    "read_manifest", "publish_manifest", "commit_lock", "CommitLockError",
+    "read_manifest", "committed_gens", "publish_manifest", "commit_lock",
+    "CommitLockError",
 ]
 
 _URI_RE = re.compile(r"^([A-Za-z][A-Za-z0-9+.-]*)://")
@@ -180,17 +181,6 @@ def listdir(path: str) -> list[str]:
     return [i.base_name for i in infos]
 
 
-def walk_dir_names(path: str) -> list[str]:
-    """Base names of every DIRECTORY under ``path``, recursively."""
-    fs, p = resolve(path)
-    try:
-        infos = fs.get_file_info(pafs.FileSelector(p, recursive=True))
-    except FileNotFoundError:
-        return []  # see listdir: not-found only
-    return [i.base_name for i in infos
-            if i.type == pafs.FileType.Directory]
-
-
 def read_text(path: str) -> str:
     fs, p = resolve(path)
     with fs.open_input_stream(p) as f:
@@ -298,6 +288,14 @@ def read_manifest(index_dir: str) -> dict | None:
         if m is not None:
             return m
     return read_json(f"{base}/{_MANIFEST}")
+
+
+def committed_gens(manifest: dict | None) -> list[int]:
+    """The generations a snapshot holds: its manifest's list, sorted, and
+    [] when nothing is committed. The only answer every reader and writer
+    uses — a gen dir on disk that the manifest does not list (a crashed
+    build's, a retained superseded one) is never read."""
+    return sorted(int(g) for g in (manifest or {}).get("generations", []))
 
 
 def publish_manifest(index_dir: str, payload: str, retain: int = 4) -> None:

@@ -37,6 +37,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import SparkSession, functions as F
 
 from . import fs
+from .builder import _parquet_rows
 from .fs import spark_url as _sp
 
 #: small tables copied verbatim to every node (global stats + metadata)
@@ -57,34 +58,6 @@ def _copy_tree(src: str, dst: str) -> None:
                 dfs.create_dir(f"{dp}/{rel}", recursive=True)
     pafs.copy_files(sp, dp, source_filesystem=sfs,
                     destination_filesystem=dfs)
-
-
-def _committed_gens(index_dir: str, table: str) -> list[int]:
-    """Generations to ship: the manifest's committed list, else the gen
-    directories present on disk for ``table``."""
-    manifest = fs.read_manifest(index_dir)
-    gens = (manifest or {}).get("generations")
-    if gens is not None:
-        return sorted(int(g) for g in gens)
-    base = f"{index_dir}/{table}"
-    if not fs.exists(base):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in fs.listdir(base)
-        if d.startswith("gen=")
-    )
-
-
-def _n_shards(index_dir: str) -> int:
-    manifest = fs.read_manifest(index_dir)
-    v = (manifest or {}).get("n_shards")
-    if v is not None:
-        return int(v)
-    raise ValueError(
-        f"{index_dir} has no snapshot manifest with n_shards; "
-        "split_index requires a manifest-committed index"
-    )
 
 
 def _any_parquet_file(root: str) -> str | None:
@@ -184,9 +157,7 @@ def split_index(
 
     from .build import shard_expr
 
-    gens = sorted(int(g) for g in manifest.get("generations") or [])
-    if manifest.get("generations") is None:
-        gens = _committed_gens(index_dir, "postings")
+    gens = fs.committed_gens(manifest)
     post_schema_file = _any_parquet_file(f"{index_dir}/postings")
     post_schema = None
     if post_schema_file is not None:
@@ -200,19 +171,8 @@ def split_index(
     # (when present) instead of the node-local matrix size, so a split
     # topology and the unsplit engine flip to approximate vector serving
     # at the SAME corpus size (see router.py's identity contract).
-    n_emb_global = 0
-    emb_base = f"{index_dir}/embeddings"
-    if fs.exists(emb_base):
-        import pyarrow.dataset as ds
-
-        efs, ep = fs.resolve(emb_base)
-        emb_ds = ds.dataset(ep, format="parquet", partitioning="hive",
-                            filesystem=efs)
-        if gens and "gen" in emb_ds.schema.names:
-            n_emb_global = emb_ds.count_rows(
-                filter=ds.field("gen").isin([int(g) for g in gens]))
-        else:
-            n_emb_global = emb_ds.count_rows()
+    n_emb_global = sum(_parquet_rows(f"{index_dir}/embeddings/gen={g}")
+                       for g in gens)
 
     for node_dir in node_dirs:
         nd = node_dir.rstrip("/")

@@ -6,18 +6,21 @@ Query lifecycle (the Spark-native analog of ``baram search`` →
 
 1. analyze the query with the SEARCH analyzer (driver-side, tiny).
 2. idf weights from the committed generations' ``term_stats`` (df per
-   generation, summed; a parquet scan with predicate pushdown on the
-   term-sorted files, or resident dicts when preloaded) + ``corpus_stats``
-   summed from their ``gen_meta`` rows when the engine opens.
+   generation, summed; the resident generations' dicts in local mode, a
+   parquet scan with predicate pushdown on the term-sorted files in
+   distributed mode) + ``corpus_stats`` summed from their ``gen_meta``
+   rows when the engine opens. The committed generations are exactly the
+   manifest's list (``fs.committed_gens``); no gen dir is ever listed.
 3. postings lookup: ``term IN (...)`` over ``postings/shard=K`` — the index
    is DOCUMENT-sharded (every doc lives in exactly one shard, the
    OpenSearch/Lucene shard model), so each shard holds all query terms for
    its doc subset and can compute exact local BM25 scores.
-4. per-shard block-max-WAND top-k inside an Arrow-batched ``applyInPandas``
-   (or driver-side for ``mode="local"`` low-latency paths). A looked-up
-   posting list is decoded once into a ``wand.TermPostings``; a preloaded
-   engine instead holds every generation decoded since it loaded
-   (``_GenPostings``), so its queries gather blocks and decode nothing.
+4. ``mode="distributed"``: per-shard block-max-WAND top-k inside an
+   Arrow-batched ``applyInPandas``, each looked-up posting list decoded
+   from its blobs into a ``wand.TermPostings``. ``mode="local"``: the
+   same WAND on the driver over the resident generations
+   (``_GenPostings``, each decoded once when it loads), so a query
+   gathers blocks and decodes nothing.
 5. global k-merge of the per-shard top-k lists (k·n_shards rows — O(k)
    driver work), deterministic tie-break (score desc, doc_id asc).
 
@@ -71,14 +74,37 @@ def _part_files(d: str) -> tuple[tuple[str, int], ...]:
     return tuple(sorted(out))
 
 
+def _read_parts(d: str, files, columns: list[str]):
+    """``columns`` of the parquet parts ``files`` (a ``_part_files``
+    listing) under ``d`` as one pyarrow table; the hive partition
+    columns below ``d`` (``gen``, ``shard``) can be selected too."""
+    import pyarrow.dataset as ds
+
+    pa_fs, root = fs.resolve(d)
+    return ds.dataset([f"{root}/{rel}" for rel, _ in files],
+                      format="parquet", filesystem=pa_fs,
+                      partitioning="hive", partition_base_dir=root
+                      ).to_table(columns=columns)
+
+
+def read_gens(table_dir: str, gens: list[int], columns: list[str]):
+    """``columns`` of exactly generations ``gens`` of a gen-partitioned
+    table, read with pyarrow from each generation dir's part-file
+    listing. A missing generation dir raises."""
+    return _read_parts(table_dir, [
+        (f"gen={g}/{rel}", n)
+        for g in gens for rel, n in _part_files(f"{table_dir}/gen={g}")
+    ], columns)
+
+
 class _GenPostings:
     """One generation's postings, decoded once when it loads and resident
     on the driver: ``cols`` holds every posting list of the generation as
     flat CSR arrays (``codec.decode_generation``) and
     ``lists[(field, term)] = [(shard, row), ...]`` indexes them. The
     compressed blobs are not kept. ``df[(field, term)]`` is the
-    generation's own term_stats (``stats``: its dir, or None) — global
-    over all shards, so a split node's idf stays global.
+    generation's own term_stats (``stats``: its dir) — global over all
+    shards, so a split node's idf stays global.
 
     Immutable once loaded, so consecutive snapshots of a serving node
     share it: a refresh loads only generations it does not already hold.
@@ -86,31 +112,21 @@ class _GenPostings:
 
     __slots__ = ("files", "lists", "cols", "df")
 
-    def __init__(self, d: str, files: tuple, stats: str | None):
-        import pyarrow.dataset as ds
-
+    def __init__(self, d: str, files: tuple, stats: str):
         self.files = files
         self.lists: dict = {}
         self.cols = None
-        self.df: dict = {}
-        if stats is not None:
-            ts = fs.read_parquet(stats, columns=["field", "term", "df"])
-            self.df = dict(zip(zip(ts["field"].to_pylist(),
-                                   ts["term"].to_pylist()),
-                               ts["df"].to_pylist()))
+        ts = fs.read_parquet(stats, columns=["field", "term", "df"])
+        self.df = dict(zip(zip(ts["field"].to_pylist(),
+                               ts["term"].to_pylist()),
+                           ts["df"].to_pylist()))
         if not files:
             return
-        pa_fs, root = fs.resolve(d)
-        dset = ds.dataset([f"{root}/{rel}" for rel, _ in files],
-                          format="parquet", filesystem=pa_fs,
-                          partitioning="hive", partition_base_dir=root)
-        cols = ["field", "term", "postings", "skips", "blockmax"]
-        has_shard = "shard" in dset.schema.names
-        tbl = dset.to_table(columns=cols + (["shard"] if has_shard else []))
+        tbl = _read_parts(d, files, ["field", "term", "postings", "skips",
+                                     "blockmax", "shard"])
         self.cols = decode_generation(tbl["postings"], tbl["skips"],
                                       tbl["blockmax"])
-        shards = (tbl["shard"].to_pylist() if has_shard
-                  else [0] * tbl.num_rows)
+        shards = tbl["shard"].to_pylist()
         lists = self.lists
         for row, key in enumerate(zip(tbl["field"].to_pylist(),
                                       tbl["term"].to_pylist())):
@@ -121,15 +137,17 @@ class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str,
                  preload: bool = False,
                  reuse: "SearchEngine | None" = None):
-        """``preload=True`` pins each generation's df + postings in driver
-        memory, decoded once into flat arrays (the 'open index' serving
-        mode — an OpenSearch node keeps exactly this resident);
-        the open and every query then run with zero Spark jobs. Default
-        is the cluster mode: parquet-pruned lookups + per-shard scoring.
+        """Local queries score the committed generations' df + postings
+        resident in driver memory, decoded once into flat arrays (the
+        'open index' serving mode — an OpenSearch node keeps exactly this
+        resident), with zero Spark jobs. ``preload=True`` loads them at
+        open and refresh, so no query pays for a load; otherwise the first
+        local query loads them. Distributed queries read parquet-pruned
+        postings and score per shard in executors.
 
-        ``reuse``: an earlier preloaded engine over the same index whose
-        resident generations this one may share (the serving refresh):
-        only generations whose part files it does not hold are read.
+        ``reuse``: an earlier engine over the same index whose resident
+        generations this one may share (the serving refresh): only
+        generations whose part files it does not hold are read.
 
         The engine reads the snapshot that was committed when it was
         created; call :meth:`refresh` (the OpenSearch refresh analog) to
@@ -161,27 +179,20 @@ class SearchEngine:
     def _open(self, reuse: "SearchEngine | None" = None) -> None:
         # taken before _resident is rebound below (an in-place refresh
         # passes reuse=self)
-        held = reuse._resident if reuse is not None else {}
-        # snapshot isolation: when the builder's _manifest.json exists, read
-        # ONLY the committed generations — a crashed/in-flight build's
-        # partial gen dirs are invisible (the Iceberg-manifest analog) —
-        # and ONLY their stats: every generation writes its own immutable
-        # gen_meta and term_stats, so the snapshot's global stats are the
-        # sum over its generation list. Everything here is a driver-side
-        # pyarrow read; the Spark relations of the cluster mode are built
-        # on first use (see _postings / _term_stats).
+        held = (reuse._resident or reuse._held) if reuse is not None else {}
+        # snapshot isolation: read ONLY the committed generations — a
+        # crashed/in-flight build's partial gen dirs are invisible (the
+        # Iceberg-manifest analog) — and ONLY their stats: every
+        # generation writes its own immutable gen_meta and term_stats, so
+        # the snapshot's global stats are the sum over its generation
+        # list. Everything here is a driver-side pyarrow read; the Spark
+        # relations of the distributed mode are built on first use (see
+        # _postings / _term_stats).
         self._manifest = self._load_manifest()
-        self._committed = self._manifest_gens()
-        post_dir = f"{self.index_dir}/postings"
-        if self._committed is not None:
-            gens = self._committed
-        else:  # pre-manifest layout: every on-disk generation, if any
-            gens = sorted(int(d.split("=", 1)[1]) for d in fs.listdir(post_dir)
-                          if d.startswith("gen="))
-        self._has_gens = self._committed is not None or bool(gens)
+        self._committed = fs.committed_gens(self._manifest)
         self._postings_df: DataFrame | None = None
         self._term_stats_df: DataFrame | None = None
-        meta = [(g, r) for g in gens for r in fs.read_parquet(
+        meta = [(g, r) for g in self._committed for r in fs.read_parquet(
             f"{self.index_dir}/gen_meta/gen={g}").to_pylist()]
         totals: dict = {}
         for _g, r in meta:
@@ -190,45 +201,45 @@ class SearchEngine:
         self.corpus_stats = {f: (n, dl / n)
                              for f, (n, dl) in totals.items() if n}
         # block-max bound correction per (gen, field): avgdl_now/avgdl_pack
-        # capped below at 1 (see wand.TermPostings)
+        # capped below at 1 (see wand.TermPostings). Every committed
+        # generation has a row per index field.
         self._bound_factor: dict = {}
         for g, r in meta:
             _, avgdl_now = self.corpus_stats.get(r["field"], (0, 0.0))
             pack = r["avgdl_pack"] or avgdl_now
             self._bound_factor[(g, r["field"])] = max(
                 1.0, avgdl_now / pack if pack else 1.0)
-        # a committed gen MISSING its bound row cannot prove pack-time
-        # avgdl == current, so its blobs must never be pruned: the default
-        # becomes a large FINITE factor (inf would turn a 0.0 block-max
-        # into 0*inf = NaN, whose comparisons are all False — the block
-        # would be wrongly SKIPPED, not kept). Single-generation layouts
-        # without gen_meta packed with the same stats they score with.
-        self._bound_missing = (
-            1e12 if self._has_gens and len(self._committed or []) > 1
-            else 1.0
-        )
-        self.n_shards = self._detect_n_shards()
+        # the doc -> shard modulus of the pinned snapshot
+        self.n_shards = int((self._manifest or {}).get("n_shards", 1))
         # tombstones (delete_by_query analog): excluded pre-ranking like
         # Lucene deleted docs; reclaimed by IndexBuilder.compact(). The set
         # is small by contract (deleted-docs-bitmap regime) so it rides to
         # executors inside the task closure.
         self._denied = self._load_denied()
-        # generation -> its resident postings and df, in generation order
-        self._resident: dict[int, _GenPostings] = {}
-        self._pa_ds = None  # lazily-built pyarrow dataset (local mode)
+        # generation -> its resident postings and df, in generation order;
+        # None until loaded (at open when preloaded, else by the first
+        # local query). ``_held`` is what a load may share.
+        self._resident: dict[int, _GenPostings] | None = None
+        self._held = held
         if self._preload:
-            # a generation the previous snapshot held with the same part
-            # files is shared, df and all, not re-read
-            dirs = ({g: f"{post_dir}/gen={g}" for g in gens}
-                    if self._has_gens else {0: post_dir})
-            for g, d in sorted(dirs.items()):
+            self._load_resident()
+
+    def _load_resident(self) -> dict[int, "_GenPostings"]:
+        """The committed generations' resident postings, loading them on
+        first use. A generation the previous snapshot held with the same
+        part files is shared, df and all, not re-read."""
+        if self._resident is None:
+            resident = {}
+            for g in self._committed:
+                d = f"{self.index_dir}/postings/gen={g}"
                 files = _part_files(d)
-                prev = held.get(g)
-                self._resident[g] = (
+                prev = self._held.get(g)
+                resident[g] = (
                     prev if prev is not None and prev.files == files
                     else _GenPostings(
-                        d, files, f"{self.index_dir}/term_stats/gen={g}"
-                        if self._has_gens else None))
+                        d, files, f"{self.index_dir}/term_stats/gen={g}"))
+            self._resident, self._held = resident, {}
+        return self._resident
 
     @property
     def _postings(self) -> DataFrame:
@@ -251,7 +262,7 @@ class SearchEngine:
         generations, deletions, compactions become visible) — the S11
         'refresh' analog. Re-runs __init__ in place; resident generations
         whose part files are unchanged are kept, everything else (stats,
-        tombstones, file listings, the pyarrow dataset) is re-read."""
+        tombstones, file listings) is re-read."""
         self.__init__(self.spark, self.index_dir, preload=self._preload,
                       reuse=self)
         return self
@@ -261,16 +272,6 @@ class SearchEngine:
         # pointer-protocol aware (object stores) with the single-file
         # _manifest.json as the local/legacy path — see fs.read_manifest
         return fs.read_manifest(self.index_dir)
-
-    def _manifest_gens(self) -> list[int] | None:
-        """Generations listed by the builder's snapshot manifest, or None
-        when the index predates manifests (fall back to directory listing)."""
-        gens = (self._manifest or {}).get("generations")
-        # an EMPTY committed list (everything tombstoned then compacted)
-        # is a real snapshot state, distinct from "no manifest": it must
-        # read as an empty index, never fall back to the whole dir where
-        # retained superseded generations would resurrect deleted docs
-        return sorted(int(g) for g in gens) if gens is not None else None
 
     #: explicit schemas for EMPTY snapshots: a compact-to-empty index
     #: whose gen dirs were vacuumed has nothing left for parquet schema
@@ -302,8 +303,6 @@ class SearchEngine:
     def _gen_read(self, d: str, empty_schema: str | None = None) -> DataFrame:
         """Read a gen-partitioned table at the committed snapshot; an
         empty committed list is an EMPTY relation, not a whole-dir read."""
-        if self._committed is None:
-            return self.spark.read.parquet(_sp(d))
         if self._committed:
             return self.spark.read.option("basePath", _sp(d)).parquet(
                 *[_sp(f"{d}/gen={g}") for g in self._committed]
@@ -313,28 +312,6 @@ class SearchEngine:
     def _docs(self) -> DataFrame:
         return self._gen_read(f"{self.index_dir}/docs",
                               empty_schema=self._DOCS_EMPTY)
-
-    def _detect_n_shards(self) -> int:
-        """n_shards of the PINNED snapshot: the manifest records the
-        committing builder's value (snapshot-isolated — index_meta is
-        overwritten at the START of a build, so reading it mid-build
-        could hand a different modulus to the doc→shard cogroup math);
-        pre-manifest layouts fall back to index_meta, then to listing the
-        postings shard directories."""
-        v = (self._manifest or {}).get("n_shards")
-        if v is not None:
-            return int(v)
-        meta = f"{self.index_dir}/index_meta"
-        if fs.exists(meta):
-            rows = fs.read_parquet(meta, columns=["n_shards"]).to_pylist()
-            if rows:
-                return int(rows[0]["n_shards"])
-        shards = {
-            int(d.split("=", 1)[1])
-            for d in fs.walk_dir_names(f"{self.index_dir}/postings")
-            if d.startswith("shard=")
-        }
-        return (max(shards) + 1) if shards else 1
 
     def _load_denied(self):
         deletes = f"{self.index_dir}/deletes"
@@ -362,20 +339,13 @@ class SearchEngine:
         pruning skips non-matching groups — the index-time keyword/date
         field analog (mod.rs:237-330). None on pre-attrs layouts."""
         d = f"{self.index_dir}/doc_attrs"
-        if not fs.exists(d):
+        dirs = [f"{d}/gen={g}" for g in self._committed]
+        if not all(fs.exists(p) for p in dirs):
+            # mixed layout (e.g. pre-attrs gens next to new waves):
+            # a partial attribute index would silently DROP candidates
+            # from the uncovered generations — fall back to docs
             return None
-        if self._committed:
-            dirs = [f"{d}/gen={g}" for g in self._committed]
-            if not all(fs.exists(p) for p in dirs):
-                # mixed layout (e.g. pre-attrs gens next to new waves):
-                # a partial attribute index would silently DROP candidates
-                # from the uncovered generations — fall back to docs
-                return None
-            return self.spark.read.option("basePath", _sp(d)).parquet(
-                *[_sp(p) for p in dirs])
-        if self._committed is not None:  # empty snapshot: empty attrs
-            return self._empty_rel(d, self._ATTRS_EMPTY)
-        return self.spark.read.parquet(_sp(d))
+        return self._gen_read(d, empty_schema=self._ATTRS_EMPTY)
 
     def _allowed_docs(self, category, date_from, date_to, publisher=None):
         """Filter-context candidate set (doc_id, shard) — the reference's
@@ -411,11 +381,11 @@ class SearchEngine:
         )
 
     def _weights(self, terms: list[str]) -> dict:
-        """{(field, term): boost * idf} from global df (one pruned scan,
-        or the resident generations' df dicts when preloaded)."""
+        """{(field, term): boost * idf} from global df (the resident
+        generations' df dicts once loaded, else one pruned scan)."""
         if not terms:
             return {}
-        if self._preload:
+        if self._resident is not None:
             return self._idf_weights(
                 (f, t, gp.df.get((f, t))) for gp in self._resident.values()
                 for f in FIELDS for t in terms)
@@ -440,53 +410,11 @@ class SearchEngine:
                 weights[(f, t)] = FIELD_BOOSTS[f] * idf(n_docs, d)
         return weights
 
-    def _postings_rows_local(self, terms: list[str]) -> list[tuple]:
-        """Driver-side pruned postings lookup — ZERO Spark jobs.
-
-        local mode collects the matching posting blobs to the driver anyway,
-        so the lookup goes through a pyarrow dataset with the same
-        (field, term) predicate the Spark path pushes down (file/row-group
-        min-max pruning on the term-sorted files). The dataset's file
-        listing is cached like the Spark FileIndex; rebuilds need a fresh
-        engine (documented engine contract)."""
-        import pyarrow.dataset as ds
-
-        if self._pa_ds is None:
-            pa_fs, pa_path = fs.resolve(f"{self.index_dir}/postings")
-            self._pa_ds = ds.dataset(
-                pa_path,
-                format="parquet",
-                partitioning="hive",
-                filesystem=pa_fs,
-            )
-        names = set(self._pa_ds.schema.names)
-        filt = ds.field("term").isin(terms) & ds.field("field").isin(
-            list(FIELDS)
-        )
-        if self._committed is not None and "gen" in names:
-            filt = filt & ds.field("gen").isin(self._committed)
-        cols = ["field", "term", "df", "postings", "skips", "blockmax"]
-        cols += [c for c in ("gen", "shard") if c in names]
-        tbl = self._pa_ds.to_table(filter=filt, columns=cols)
-        d = tbl.to_pydict()
-        n = tbl.num_rows
-        gens = d.get("gen", [0] * n)
-        shards = d.get("shard", [0] * n)
-        return [
-            (d["field"][i], d["term"][i], int(d["df"][i]),
-             bytes(d["postings"][i]), bytes(d["skips"][i]),
-             bytes(d["blockmax"][i]), int(gens[i]), int(shards[i]))
-            for i in range(n)
-        ]
-
     def _postings_rows(self, terms: list[str]) -> DataFrame:
         cols = ["shard", "field", "term", "df", "postings", "skips", "blockmax"]
-        sel = self._postings.filter(
+        return self._postings.filter(
             F.col("term").isin(terms) & F.col("field").isin(list(FIELDS))
-        )
-        if self._has_gens:
-            return sel.select(*cols, "gen")
-        return sel.select(*cols).withColumn("gen", F.lit(0))
+        ).select(*cols, "gen")
 
     # ------------------------------------------------------------------
     def search(
@@ -522,7 +450,7 @@ class SearchEngine:
         terms = sorted(set(analyze_search(query_text)))
         if not terms:
             return []
-        if self._committed == []:  # empty snapshot: nothing to score
+        if not self._committed:  # empty snapshot: nothing to score
             return []
         avgdls = {f: self.corpus_stats[f][1] for f in self.corpus_stats}
         scorer = score_blockmax if prune else score_exhaustive
@@ -574,54 +502,20 @@ class SearchEngine:
                     s: np.sort(np.asarray(ids, dtype=np.int64))
                     for s, ids in tmp.items()
                 }
-            # preloaded: weights from the resident df dictionary and
-            # TermPostings over the resident generations' decoded arrays —
-            # zero Spark jobs, nothing decoded per query. Otherwise ONE
-            # lookup whose rows carry the blobs AND the per-row df (global
-            # df is their sum over all shards+generations of a term).
+            # weights from the resident df dictionary and TermPostings over
+            # the resident generations' decoded arrays — zero Spark jobs,
+            # nothing decoded per query
+            resident = self._load_resident()
+            weights = self._weights(terms)
             by_shard: dict[int, list] = {}
-            if self._preload:
-                weights = self._weights(terms)
-                for (field, term), w in weights.items():
-                    for gen, gp in self._resident.items():
-                        bf = self._bound_factor.get((gen, field),
-                                                    self._bound_missing)
-                        for shard, row in gp.lists.get((field, term), ()):
-                            by_shard.setdefault(shard, []).append(
-                                TermPostings(field, term, w,
-                                             *gp.cols.list_arrays(row),
-                                             avgdls[field], bf))
-            else:
-                try:
-                    rows = self._postings_rows_local(terms)
-                except Exception:
-                    # fall back to the one-job Spark path (e.g. a remote
-                    # FS pyarrow can't reach) — but SAY so: a corrupt
-                    # footer silently costing a Spark job per query is an
-                    # operator problem, not a code path
-                    log.warning(
-                        "local postings lookup failed; falling back to "
-                        "the Spark path for this query", exc_info=True,
-                    )
-                    collected = self._postings_rows(terms).collect()
-                    rows = [
-                        (r["field"], r["term"], int(r["df"]),
-                         bytes(r["postings"]), bytes(r["skips"]),
-                         bytes(r["blockmax"]), int(r["gen"]),
-                         int(r["shard"]))
-                        for r in collected
-                    ]
-                weights = self._idf_weights(r[:3] for r in rows)
-                for field, term, _, blob, skips, bmax, gen, shard in rows:
-                    w = weights.get((field, term))
-                    if w is None:
-                        continue
-                    by_shard.setdefault(shard, []).append(
-                        TermPostings.from_blobs(
-                            field, term, w, blob, skips, bmax,
-                            avgdls[field],
-                            self._bound_factor.get((gen, field),
-                                                   self._bound_missing)))
+            for (field, term), w in weights.items():
+                for gen, gp in resident.items():
+                    bf = self._bound_factor[(gen, field)]
+                    for shard, row in gp.lists.get((field, term), ()):
+                        by_shard.setdefault(shard, []).append(
+                            TermPostings(field, term, w,
+                                         *gp.cols.list_arrays(row),
+                                         avgdls[field], bf))
             if not weights:
                 return []
             partials = []
@@ -643,7 +537,6 @@ class SearchEngine:
         out_schema = "doc_id long, score double"
 
         bound_factor = dict(self._bound_factor)
-        bound_missing = self._bound_missing
         filtered = allowed_df is not None
 
         def _score_rows(pdf: pd.DataFrame, allowed) -> pd.DataFrame:
@@ -657,8 +550,7 @@ class SearchEngine:
                         row.field, row.term, weights[wkey],
                         bytes(row.postings), bytes(row.skips),
                         bytes(row.blockmax), avgdls[row.field],
-                        bound_factor.get((int(row.gen), row.field),
-                                         bound_missing),
+                        bound_factor[(int(row.gen), row.field)],
                     )
                 )
             hits = scorer(tps, k, min_score, allowed=allowed, denied=denied)

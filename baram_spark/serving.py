@@ -17,10 +17,13 @@ highlights (1 title + 3 content fragments).
 Architecture note (the 100-TB story): this is the OpenSearch-NODE analog —
 one serving process holds the postings (engine ``preload=True``), the doc
 metadata projection, and the embedding matrix resident, and answers with
-zero Spark jobs. At full scale each such node serves one shard-set and a
-thin router fans out/merges (exactly the reference's OpenSearch topology);
-Spark remains the build/analytics plane. The stdlib threaded HTTP server
-stands in for axum."""
+zero Spark jobs. A snapshot reads exactly the generations the manifest
+commits: postings, docs and embeddings each from their generation dirs'
+part files, never a whole table dir where crashed or superseded
+generations may linger. At full scale each such node serves one
+shard-set and a thin router fans out/merges (exactly the reference's
+OpenSearch topology); Spark remains the build/analytics plane. The stdlib
+threaded HTTP server stands in for axum."""
 
 from __future__ import annotations
 
@@ -32,13 +35,22 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 import numpy as np
+import pyarrow as pa
 
 from .query.bm25 import DEFAULT_K
-from .query.engine import MAX_K, SearchEngine
+from .query.engine import MAX_K, SearchEngine, read_gens
 from .query.hybrid import (embed_query, highlight, highlight_pattern,
                            hybrid_search)
 
 VERSION = "0.2.0"
+
+#: the doc-store columns; the types give an empty snapshot its schema
+_DOC_SCHEMA = pa.schema([
+    ("doc_id", pa.int64()), ("oid", pa.string()), ("aid", pa.string()),
+    ("title", pa.string()), ("text", pa.string()),
+    ("category", pa.string()), ("publisher", pa.string()),
+    ("url", pa.string()), ("published_at", pa.timestamp("us")),
+])
 
 
 def _parse_date(s: str | None):
@@ -115,8 +127,6 @@ class _IvfServing:
 
 def _one_chunk(col):
     """Normalize a pyarrow Table column (ChunkedArray) to a single Array."""
-    import pyarrow as pa
-
     ca = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
     if isinstance(ca, pa.ChunkedArray):
         return ca.chunk(0) if ca.num_chunks else pa.array([], type=ca.type)
@@ -167,8 +177,6 @@ class _DocStore(_Mapping):
 
     @classmethod
     def from_table(cls, tbl, denied: set[int]):
-        import pyarrow as pa
-
         ids = tbl["doc_id"].to_numpy(zero_copy_only=False).astype(np.int64)
         order = np.argsort(ids, kind="stable")
         if denied:
@@ -241,28 +249,16 @@ class _Snapshot:
         postings generations are shared where their part files are
         unchanged (see SearchEngine ``reuse``). Everything else — stats,
         tombstones, doc metadata, embeddings and the attribute indexes —
-        is re-read with pyarrow; no Spark job runs."""
-        import pyarrow.dataset as ds
-
+        is re-read with pyarrow from the engine's committed generations'
+        dirs; no Spark job runs."""
         from .index import fs
 
         self.engine = SearchEngine(spark, index_dir, preload=True,
                                    reuse=prev.engine if prev else None)
         base = index_dir.rstrip("/")
-        cols = ["doc_id", "oid", "aid", "title", "text", "category",
-                "publisher", "url", "published_at"]
-        committed = self.engine._committed  # snapshot manifest, if present
-        docs_fs, docs_path = fs.resolve(f"{base}/docs")
-        docs_ds = ds.dataset(
-            docs_path, format="parquet", partitioning="hive",
-            filesystem=docs_fs,
-        )
-        gen_filter = (
-            ds.field("gen").isin(committed)
-            if committed is not None and "gen" in docs_ds.schema.names
-            else None
-        )
-        tbl = docs_ds.to_table(columns=cols, filter=gen_filter)
+        committed = self.engine._committed
+        tbl = (read_gens(f"{base}/docs", committed, _DOC_SCHEMA.names)
+               if committed else _DOC_SCHEMA.empty_table())
         denied = set(
             int(x) for x in (self.engine._denied.tolist()
                              if self.engine._denied is not None else [])
@@ -296,20 +292,12 @@ class _Snapshot:
         self._emb_raw = None  # lazy raw-matrix memo (see the property)
         n_emb_committed = 0  # pre-tombstone committed rows (IVF gating)
         emb_dir = f"{base}/embeddings"
-        if fs.exists(emb_dir):
-            emb_fs, emb_path = fs.resolve(emb_dir)
-            emb_ds = ds.dataset(emb_path, format="parquet",
-                                partitioning="hive", filesystem=emb_fs)
-            # same committed-generation filter as docs — a compaction/merge
-            # retires an embedding gen with its doc gen, so deleted docs'
-            # vectors never re-enter knn/hybrid ranking
-            emb_filter = (
-                ds.field("gen").isin(committed)
-                if committed is not None and "gen" in emb_ds.schema.names
-                else None
-            )
-            tbl = emb_ds.to_table(columns=["doc_id", "embedding"],
-                                  filter=emb_filter)
+        # the committed generations built with embeddings — a
+        # compaction/merge retires an embedding gen with its doc gen, so
+        # deleted docs' vectors never re-enter knn/hybrid ranking
+        emb_gens = [g for g in committed if fs.exists(f"{emb_dir}/gen={g}")]
+        if emb_gens:
+            tbl = read_gens(emb_dir, emb_gens, ["doc_id", "embedding"])
             ids = tbl["doc_id"].to_numpy(zero_copy_only=False).astype(
                 np.int64)
             # zero-copy-ish matrix rebuild: flatten() respects list

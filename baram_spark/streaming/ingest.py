@@ -76,15 +76,14 @@ def stream_build(
     )
     bloom = None
     if bloom_prefilter:
-        from ..index import fs
         from ..operators.bloom import CommittedUrlBloom
 
         committed = builder.committed_generations()
-        if committed and fs.exists(builder.docs_path):
+        if committed:
             from ..index.builder import read_gen_table
 
             bloom = CommittedUrlBloom.seed(
-                read_gen_table(spark, index_dir, "docs", gens=committed)
+                read_gen_table(spark, index_dir, "docs", committed)
                 .select("url")
             )
         else:
@@ -122,7 +121,7 @@ def stream_build(
 
             bloom = CommittedUrlBloom.seed(
                 read_gen_table(spark, index_dir, "docs",
-                               gens=builder.committed_generations())
+                               builder.committed_generations())
                 .select("url")
             )
             state["bloom"] = bloom

@@ -25,6 +25,16 @@ def work_dir(tmp_path_factory):
     shutil.rmtree(d, ignore_errors=True)
 
 
+def read_committed(spark, index_dir: str, table: str):
+    """``table`` at the committed snapshot: exactly the generations the
+    manifest lists, as a Spark relation with a ``gen`` column."""
+    from baram_spark.index import fs
+    from baram_spark.index.builder import read_gen_table
+
+    return read_gen_table(spark, index_dir, table,
+                          fs.committed_gens(fs.read_manifest(index_dir)))
+
+
 def snapshot_stats(spark, index_dir: str):
     """The committed snapshot's stats as a reader resolves them: the
     term_stats and gen_meta rows of exactly the manifest's generations,
@@ -41,10 +51,8 @@ def snapshot_stats(spark, index_dir: str):
 
     from pyspark.sql import functions as F
 
-    from baram_spark.index.builder import read_gen_table
-
-    ts = read_gen_table(spark, index_dir, "term_stats")
-    gm = read_gen_table(spark, index_dir, "gen_meta")
+    ts = read_committed(spark, index_dir, "term_stats")
+    gm = read_committed(spark, index_dir, "gen_meta")
     totals = {}
     for r in gm.collect():
         n, dl = totals.get(r["field"], (0, 0))

@@ -62,6 +62,34 @@ def test_cli_search_hybrid(capsys, spark, cli_index):
     assert out["hits"]
 
 
+def test_cli_hybrid_embeds_only_committed_docs(capsys, spark, tmp_path):
+    """`search --hybrid` on an index built without embeddings embeds the
+    committed docs: a doc tombstoned and compacted away stays out of the
+    knn side of the fusion, though its superseded generation is still
+    retained on disk."""
+    from baram_spark.index.builder import IndexBuilder
+    from baram_spark.query.engine import SearchEngine
+    from baram_spark.query.hybrid import embed_docs, knn_search
+    from tests.conftest import read_committed
+
+    out = f"{tmp_path}/noemb"
+    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b.build(pages_df(spark, 80, partitions=2), fingerprint="h0")
+    q = make_query_set()[0]["query_text"]
+    # the knn side's best doc, which the query also matches
+    (victim, _), = knn_search(embed_docs(read_committed(spark, out, "docs")),
+                              q, k=1)
+    assert victim in {d for d, _ in SearchEngine(spark, out).search(q, k=100)}
+    argv = ["search", "--index", out, "--query", q, "--k", "5", "--hybrid"]
+    assert victim in {h["doc_id"] for h in _run(capsys, spark, argv)["hits"]}
+
+    b.delete_docs([victim])
+    assert b.compact()["compacted_gens"] == [0]
+    assert os.path.isdir(f"{out}/docs/gen=0")
+    hits = _run(capsys, spark, argv)["hits"]
+    assert hits and victim not in {h["doc_id"] for h in hits}
+
+
 def test_cli_stats(capsys, spark, cli_index):
     # the generator plants deleted-page fixtures that extraction drops,
     # so compare against the docs table, not the raw page count
@@ -78,7 +106,8 @@ def test_cli_stats_terms_follow_the_manifest(capsys, spark, tmp_path):
     """`stats` counts terms as the distinct (field, term) pairs of the
     committed generations — not of a staged, uncommitted wave whose
     term_stats are already on disk."""
-    from baram_spark.index.builder import IndexBuilder, read_gen_table
+    from baram_spark.index.builder import IndexBuilder
+    from tests.conftest import read_committed
 
     out = f"{tmp_path}/statsidx"
     b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
@@ -101,10 +130,10 @@ def test_cli_stats_terms_follow_the_manifest(capsys, spark, tmp_path):
 
     rep = _run(capsys, spark, ["stats", "--index", out])
     assert rep["generations"] == [0, 1]
-    post = read_gen_table(spark, out, "postings")
+    post = read_committed(spark, out, "postings")
     assert rep["terms"] == post.select("field", "term").distinct().count()
     # a term in both generations counts once
-    assert rep["terms"] < read_gen_table(spark, out, "term_stats").count()
+    assert rep["terms"] < read_committed(spark, out, "term_stats").count()
 
 
 def test_cli_cluster(capsys, spark, cli_index):

@@ -15,9 +15,10 @@ import shutil
 import pytest
 
 from baram_spark.corpus import make_query_set, pages_df
-from baram_spark.index.builder import IndexBuilder, read_gen_table
+from baram_spark.index.builder import IndexBuilder
 from baram_spark.query.bm25 import BruteForceIndex
 from baram_spark.query.engine import SearchEngine
+from tests.conftest import read_committed
 
 
 class _Crash(RuntimeError):
@@ -34,7 +35,7 @@ def _search(spark, out, q):
 
 def _oracle(spark, out, q):
     docs = (
-        read_gen_table(spark, out, "docs")
+        read_committed(spark, out, "docs")
         .select("doc_id", "title", "text").toPandas()
     )
     idx = BruteForceIndex.build(
@@ -197,3 +198,54 @@ def test_vacuum_crash_before_swap(spark, tmp_path, base_index, monkeypatch):
     b2.vacuum(retain_snapshots=1)
     assert b2.committed_generations() == [0, 1]
     assert _search(spark, out, q) == before
+
+
+def test_crashed_first_build_never_goes_live(spark, tmp_path, monkeypatch):
+    """A first build killed after shard group 0's postings leaves a
+    half-written generation 0 and no manifest. A wave of another
+    fingerprint commits only its own generation: readers never see
+    generation 0 (it has no term_stats), and vacuum reclaims it."""
+    import os
+
+    from baram_spark.index import builder as builder_mod
+    from baram_spark.index import fs
+    from baram_spark.serving import ServingContext
+
+    out = f"{tmp_path}/first_crash"
+    orig = builder_mod.build_postings
+    calls = []
+
+    def second_call_dies(*a, **kw):
+        calls.append(1)
+        if len(calls) == 2:
+            raise _Crash("build_postings")
+        return orig(*a, **kw)
+
+    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+                     shard_concurrency=1)
+    with monkeypatch.context() as m:
+        m.setattr(builder_mod, "build_postings", second_call_dies)
+        with pytest.raises(_Crash):
+            b.build(pages_df(spark, 150, partitions=2), fingerprint="first")
+    assert fs.read_manifest(out) is None
+    assert os.path.isdir(f"{out}/postings/gen=0/shard=0")
+    assert not os.path.exists(f"{out}/term_stats/gen=0")
+
+    b2 = _builder(spark, out)
+    assert b2.committed_generations() == []
+    m = b2.build_incremental(pages_df(spark, 260, partitions=2),
+                             fingerprint="wave")
+    assert m["gen"] == 1
+    assert b2.committed_generations() == [1]
+    engine = SearchEngine(spark, out)
+    for q in [q["query_text"] for q in make_query_set()[:3]]:
+        exp = _oracle(spark, out, q)
+        assert exp
+        for mode in ("local", "distributed"):
+            assert _norm(engine.search(q, k=10, mode=mode)) == exp, mode
+    ctx = ServingContext(spark, out)
+    assert list(ctx.engine._resident) == [1]
+
+    assert b2.vacuum()["removed_gens"] == [0]
+    assert not [t for t in os.listdir(out)
+                if os.path.exists(f"{out}/{t}/gen=0")]

@@ -135,10 +135,9 @@ def test_multi_generation_compact_stats(spark, tmp_path):
     assert len(res["new_gens"]) == 2
 
     # corpus stats must equal a direct recount over the committed docs
-    from baram_spark.index.builder import read_gen_table
-    from tests.conftest import snapshot_stats
+    from tests.conftest import read_committed, snapshot_stats
 
-    committed = read_gen_table(spark, out, "docs")
+    committed = read_committed(spark, out, "docs")
     n_docs = committed.count()
     stats = snapshot_stats(spark, out).corpus
     assert stats["title"][0] == n_docs, (stats, n_docs)

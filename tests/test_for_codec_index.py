@@ -9,6 +9,7 @@ from baram_spark.index.builder import IndexBuilder
 from baram_spark.index.codec import CODEC_FOR, CODEC_PFOR
 from baram_spark.query.bm25 import BruteForceIndex
 from baram_spark.query.engine import SearchEngine
+from tests.conftest import read_committed
 
 
 @pytest.fixture(scope="module",
@@ -26,21 +27,23 @@ def for_index(request, spark, work_dir):
 def test_for_codec_rank_identity(spark, for_index):
     for_index, _ = for_index
     docs = (
-        spark.read.parquet(f"{for_index}/docs")
+        read_committed(spark, for_index, "docs")
         .select("doc_id", "title", "text")
         .toPandas()
     )
     oracle = BruteForceIndex.build(
         [(int(r.doc_id), r.title, r.text) for r in docs.itertuples()]
     )
+    # distributed scoring decodes the bit-packed blobs per query; the
+    # serving mode decodes them once, at load
     engine = SearchEngine(spark, for_index)
-    # the serving mode decodes the bit-packed lists once, at load
     resident = SearchEngine(spark, for_index, preload=True)
     for q in make_query_set()[:5]:
         exp = [(d, round(s, 9)) for d, s in oracle.search(q["query_text"], k=10)]
-        hits = engine.search(q["query_text"], k=10, mode="local")
+        hits = engine.search(q["query_text"], k=10, mode="distributed")
         assert [(d, round(s, 9)) for d, s in hits] == exp, q["query_text"]
         assert resident.search(q["query_text"], k=10, mode="local") == hits
+        assert engine.search(q["query_text"], k=10, mode="local") == hits
 
 
 def test_codec_stats_telemetry(spark, for_index):

@@ -52,9 +52,6 @@ def test_registered_scheme_ops(tmp_path):
         assert fs.read_json(f"{base}/no_manifest.json") is None
         # spark translation points at the same bytes
         assert fs.spark_url(f"{base}/docs") == f"file:{root}/idx/docs"
-        # recursive dir walk (shard detection)
-        fs.makedirs(f"{base}/postings/gen=0/shard=3")
-        assert "shard=3" in fs.walk_dir_names(f"{base}/postings")
         # parquet round-trip through the filesystem
         import pyarrow as pa
 
@@ -93,6 +90,40 @@ def test_no_direct_os_metadata_calls():
     assert not offenders, "\n".join(offenders)
 
 
+def test_only_the_builder_lists_generation_dirs():
+    """Which generations a snapshot holds is the manifest's answer
+    (``fs.committed_gens``); every reader reads exactly those dirs. Only
+    index/builder.py — next-gen numbering, GC, vacuum and
+    ``generations()`` — may match ``gen=`` directory names. Paths built
+    from a generation number are f-strings and docstrings only describe
+    the layout, so a plain ``"gen="`` literal anywhere else is a scan."""
+    import ast
+    import pathlib
+
+    import baram_spark
+
+    root = pathlib.Path(baram_spark.__path__[0])
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "index/builder.py":
+            continue
+        tree = ast.parse(path.read_text())
+        exempt = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.JoinedStr):
+                exempt.update(id(v) for v in node.values)
+            elif isinstance(node, ast.Expr):
+                exempt.add(id(node.value))
+        offenders += [
+            f"{rel}:{node.lineno}: {node.value!r}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant) and isinstance(node.value, str)
+            and "gen=" in node.value and id(node) not in exempt
+        ]
+    assert not offenders, "\n".join(offenders)
+
+
 # -- integration: full index lifecycle against a mock:// URI ----------------
 
 @pytest.fixture(scope="module")
@@ -117,13 +148,13 @@ def test_full_lifecycle_on_mock_scheme(spark, mock_index):
     assert b.committed_generations() == [0]
     assert fs.exists(f"{out}/_manifest.json")
 
-    from baram_spark.index.builder import read_gen_table
+    from tests.conftest import read_committed
 
     def oracle():
         # committed snapshot only — the whole-dir read would double-count
         # superseded generations retained for pinned readers
         docs = (
-            read_gen_table(spark, out, "docs")
+            read_committed(spark, out, "docs")
             .select("doc_id", "title", "text").toPandas()
         )
         return BruteForceIndex.build(

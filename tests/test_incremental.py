@@ -8,27 +8,16 @@ from baram_spark.corpus import make_query_set, pages_df
 from baram_spark.index.builder import IndexBuilder
 from baram_spark.query.bm25 import BruteForceIndex
 from baram_spark.query.engine import SearchEngine
+from tests.conftest import read_committed, snapshot_stats
 
 N_BASE = 300
 N_ALL = 500
 
 
 def _oracle(spark, index_dir):
-    docs = (
-        spark.read.parquet(f"{index_dir}/docs")
-        .select("doc_id", "title", "text")
-        .toPandas()
-    )
-    return BruteForceIndex.build(
-        [(int(r.doc_id), r.title, r.text) for r in docs.itertuples()]
-    )
-
-
-def _committed_oracle(spark, index_dir):
-    """Brute force over the committed docs only (staged waves excluded)."""
-    from baram_spark.index.builder import read_gen_table
-
-    docs = read_gen_table(spark, index_dir, "docs").select(
+    """Brute force over the committed docs: the manifest's generations,
+    never a staged wave or a retained superseded generation."""
+    docs = read_committed(spark, index_dir, "docs").select(
         "doc_id", "title", "text").toPandas()
     return BruteForceIndex.build(
         [(int(r.doc_id), r.title, r.text) for r in docs.itertuples()]
@@ -43,11 +32,8 @@ def _assert_term_stats_exact(spark, out):
     """The term_stats a reader resolves (those of the manifest's
     generations) equal the direct Spark aggregate over the committed
     postings: per generation, and summed into the global df."""
-    from baram_spark.index.builder import committed_gens, read_gen_table
-    from tests.conftest import snapshot_stats
-
     stats = snapshot_stats(spark, out)
-    post = read_gen_table(spark, out, "postings", gens=committed_gens(out))
+    post = read_committed(spark, out, "postings")
     for got, keys in ((stats.term_stats, ["gen", "field", "term"]),
                       (stats.df, ["field", "term"])):
         expect = post.groupBy(*keys).agg(F.sum("df").alias("df"))
@@ -235,7 +221,6 @@ def test_merge_generations(spark, tmp_path):
     assert res["docs"] == docs.count()
     # gen_meta holds exactly one generation per field, packed at current
     # avgdl (bound factor 1)
-    from tests.conftest import snapshot_stats
     gm = snapshot_stats(spark, out).gen_meta.collect()
     assert {r["gen"] for r in gm} == {new_gen}
 
@@ -635,8 +620,6 @@ def test_concurrent_append_commits_stats_of_every_gen(spark, tmp_path):
     gens = b1.committed_generations()
     assert len(gens) == 3
     # committed gen_meta and term_stats cover every committed generation
-    from tests.conftest import snapshot_stats
-
     stats = snapshot_stats(spark, out)
     for t in (stats.gen_meta, stats.term_stats):
         covered = {int(r["gen"]) for r in t.select("gen").distinct().collect()}
@@ -832,10 +815,8 @@ def test_commit_pins_its_own_corpus_stats(spark, tmp_path):
     a.build_incremental(_pages(spark, 120, 190), fingerprint="r1")
     assert a.committed_generations() == [0, 1]
 
-    from baram_spark.index.builder import read_gen_table
-
     rows = (
-        read_gen_table(spark, out, "doc_terms").filter(F.col("first") == 1)
+        read_committed(spark, out, "doc_terms").filter(F.col("first") == 1)
         .groupBy("field").agg(F.count(F.lit(1)).alias("n"),
                               F.sum("dl").alias("dl"))
         .collect()
@@ -844,7 +825,7 @@ def test_commit_pins_its_own_corpus_stats(spark, tmp_path):
     assert SearchEngine(spark, out).corpus_stats == expect
     q = make_query_set()[0]["query_text"]
     assert _norm(SearchEngine(spark, out).search(q, k=10, mode="local")) \
-        == _norm(_committed_oracle(spark, out).search(q, k=10))
+        == _norm(_oracle(spark, out).search(q, k=10))
 
 
 def test_resumed_wave_packs_with_its_recorded_avgdl(spark, tmp_path):
@@ -853,7 +834,6 @@ def test_resumed_wave_packs_with_its_recorded_avgdl(spark, tmp_path):
     be the pack of its doc_terms with the avgdl_pack its gen_meta row
     records — the avgdl the query-time bound factor trusts — not with
     whatever corpus stats B left behind."""
-    from tests.conftest import snapshot_stats
     from tests.test_crash_recovery import _Crash, _kill_first_call
     from tests.test_plan_shape import _pack_runs
     from tests.test_serving_refresh import _pages

@@ -9,6 +9,7 @@ from baram_spark.corpus import make_query_set, pages_df
 from baram_spark.index.builder import IndexBuilder
 from baram_spark.query.bm25 import BruteForceIndex
 from baram_spark.query.engine import SearchEngine
+from tests.conftest import read_committed
 
 N_DOCS = 600
 FP = f"test-{N_DOCS}"
@@ -151,19 +152,15 @@ def test_chunk_text_third_field(spark, tmp_path):
     # build docs first, then re-index with a synthetic chunk column:
     # chunk_text = first 120 chars of content for even doc_ids
     builder.build(pages, fingerprint="chunk-base")
-    base = spark.read.parquet(f"{out}/docs")
+    base = read_committed(spark, out, "docs").drop("gen")
     with_chunks = base.withColumn(
         "chunk_text",
         F.when(F.col("doc_id") % 2 == 0, F.substring("text", 1, 120)),
     )
     out2 = f"{tmp_path}/chunk_idx2"
     b2 = IndexBuilder(spark, out2, n_shards=2, salt_threshold=10**9)
-    # write docs-with-chunks as the docs table and run tokenize+postings
-    with_chunks.write.mode("overwrite").parquet(f"{out2}/docs/gen=0")
-    b2._write_index_meta()
-    b2._stage_tokenize_from(with_chunks, 0, "doc_terms", "fp2", {}, [])
-    b2._stage_postings(0, "postings", "fp2", set(), {})
-    b2._stage_term_stats("term_stats", "fp2", set(), {}, [0])
+    # pre-parsed docs keep their chunk_text column through the build
+    b2.build_docs(with_chunks, "fp2")
 
     pdf = with_chunks.select(
         "doc_id", "title", "text", "chunk_text"
@@ -346,10 +343,8 @@ def test_extended_identity_survives_compaction(spark, tmp_path):
     b.delete_docs(victims)
     b.compact(fingerprint="ext-cmp-c")
 
-    from baram_spark.index.builder import read_gen_table
-
     docs = (
-        read_gen_table(spark, out, "docs")
+        read_committed(spark, out, "docs")
         .select("doc_id", "title", "text").toPandas()
     )
     oracle2 = BruteForceIndex.build(

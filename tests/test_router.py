@@ -292,3 +292,26 @@ def test_split_guards(spark, topology, tmp_path):
     assert sets
     with pytest.raises(ValueError, match="split the ORIGINAL"):
         split_index(spark, f"{root}/n0", [f"{root}/z0"])
+
+
+def test_split_counts_only_committed_embeddings(spark, tmp_path):
+    """An index compacted to empty commits no generation but retains the
+    superseded generation 0 for pinned readers: its split descriptors
+    count 0 committed embeddings, not the retained generation's rows."""
+    import os
+
+    out = f"{tmp_path}/emptied"
+    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+                     build_embeddings=True)
+    b.build(pages_df(spark, 60, partitions=2), fingerprint="e0")
+    b.delete_docs([int(r["doc_id"]) for r in
+                   spark.read.parquet(f"{out}/docs").collect()])
+    b.compact()
+    assert b.committed_generations() == []
+    assert os.path.isdir(f"{out}/embeddings/gen=0")
+
+    nodes = [f"{tmp_path}/n0", f"{tmp_path}/n1"]
+    split_index(spark, out, nodes)
+    for nd in nodes:
+        desc = json.loads(fs.read_text(f"{nd}/_shard_set.json"))
+        assert desc["n_embeddings"] == 0, desc

@@ -176,11 +176,22 @@ def test_preloaded_engine_open_starts_no_spark_job(spark, tmp_path):
     out = f"{tmp_path}/idx"
     IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9).build(
         _pages(spark, 0, 60), fingerprint="p")
+    q = make_query_set()[0]["query_text"]
     with spark_jobs(spark) as jobs:
         eng = SearchEngine(spark, out, preload=True)
         eng.refresh()
-        hits = eng.search(make_query_set()[0]["query_text"], k=5,
-                          mode="local")
+        hits = eng.search(q, k=5, mode="local")
     assert jobs == []
-    assert hits == SearchEngine(spark, out).search(
-        make_query_set()[0]["query_text"], k=5, mode="local")
+    lazy = SearchEngine(spark, out)
+    assert hits and hits == lazy.search(q, k=5, mode="distributed")
+    # an engine opened without preload loads the resident generations at
+    # its first local query, and a refresh shares them
+    assert lazy._resident is None
+    with spark_jobs(spark) as jobs:
+        assert lazy.search(q, k=5, mode="local") == hits
+        held = lazy._resident[0]
+        lazy.refresh()
+        assert lazy._resident is None
+        assert lazy.search(q, k=5, mode="local") == hits
+    assert jobs == []
+    assert lazy._resident[0] is held
