@@ -6,8 +6,7 @@
 Commands (mirroring the reference CLI, ``/root/reference/src/main.rs``):
 
     index   (--pages PATH | --markdown DIR) --out DIR [--shards N]
-            [--salt-threshold N] [--fingerprint F] [--no-resume]
-            [--incremental] [--since TS]
+            [--fingerprint F] [--no-resume] [--incremental] [--since TS]
     search  --index DIR --query TEXT [--k K] [--mode local|distributed]
             [--min-score X] [--hybrid] [--category C] [--publisher P]
             [--date-from YYYY-MM-DD] [--date-to YYYY-MM-DD]
@@ -43,7 +42,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     src.add_argument("--markdown")
     p_index.add_argument("--out", required=True)
     p_index.add_argument("--shards", type=int, default=8)
-    p_index.add_argument("--salt-threshold", type=int, default=50_000)
     p_index.add_argument("--fingerprint", default=None)
     p_index.add_argument("--no-resume", action="store_true")
     p_index.add_argument("--incremental", action="store_true")
@@ -196,7 +194,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                  "pfor": CODEC_PFOR}[args.codec]
         builder = IndexBuilder(
             spark, args.out, n_shards=args.shards,
-            salt_threshold=args.salt_threshold,
             build_embeddings=args.embeddings, codec=codec,
         )
         fp = args.fingerprint or f"cli-{int(time.time())}"

@@ -5,8 +5,7 @@ index.rs:36-359``), re-architected for 10^12-doc scale:
 
     pages ──extract UDF──▶ docs            (narrow; no shuffle)
     docs  ──analyze UDF──▶ doc_terms       (narrow; tf+dl computed in-batch)
-    doc_terms ─groupBy(field,term[,salt])─▶ packed postings   (THE shuffle)
-    salted heavy terms ──groupBy(field,term)──▶ merged postings
+    doc_terms ─repartition(shard,term)─▶ packed postings   (THE shuffle)
 
 Scale levers, explicit per the north_rule:
 
@@ -17,11 +16,13 @@ Scale levers, explicit per the north_rule:
   query engine fans out to every shard and k-merges (engine.py). Term
   pruning happens WITHIN a shard via the term-sorted parquet files'
   row-group min-max, not by shard routing.
-- **Skew**: Zipf-head terms (df above ``salt_threshold``, detected from a
-  cheap term_stats aggregation) get a salt ``pmod(xxhash64(doc_id), k)``
-  so no single reducer receives the head term's full posting set. The merge
-  stage joins a term's partial lists — by then they are compact packed
-  blobs (~3 bytes/posting), 1-2 orders of magnitude smaller than rows.
+- **Skew**: bounded by the document sharding itself. A term sends at
+  most one doc_terms row per doc of its shard into the exchange keyed
+  (shard, term), so a Zipf-head term's reducer input is bounded by its
+  shard's doc count, while the shard's other terms spread over up to 4
+  reduce partitions (see ``builder.postings_partitions``). The packer
+  consumes its partition in ``PACK_CHUNK_ROWS`` chunks, so its working
+  set stays bounded however large the partition grows.
 - **Map-side pre-aggregation**: tf and dl are computed inside the tokenize
   batch (one row per (doc, field, term) leaves the mapper — never one row
   per token).
@@ -38,7 +39,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..textproc.analyzer import analyze_index
 from ..textproc.extract import extract_batch
@@ -57,14 +58,13 @@ DOC_TERMS_SCHEMA = (
 # arrow-pack working-set bound: a packer task buffers at most this many
 # rows at once (one chunk ≈ 7 int64 columns + two short strings ≈ 0.4 GB
 # at 4M rows, plus the sort's index array). Partitions larger than a
-# chunk — unbounded by any shuffle knob on the blob path, where the pack
-# runs straight on scan partitions — are packed chunk-wise and merged
-# group-wise (see _pack_partition_arrow).
+# chunk — a reduce partition grows with its shard's doc count — are
+# packed chunk-wise and merged group-wise (see _pack_partition_arrow).
 PACK_CHUNK_ROWS = 4_000_000
 # per-emitted-RecordBatch cap on binary payload: pa.binary() carries
-# 32-bit offsets, so one array tops out at 2 GiB total bytes; blob-path
-# scan partitions are unbounded by any shuffle knob, so the packer
-# slices its output at this boundary instead of trusting partition size
+# 32-bit offsets, so one array tops out at 2 GiB total bytes; a reduce
+# partition grows with its shard's doc count, so the packer slices its
+# output at this boundary instead of trusting partition size
 PACK_EMIT_BYTES_CAP = 1 << 30
 
 # the three scored fields of the reference's bool-should query
@@ -161,23 +161,11 @@ def tokenize_docs(docs: DataFrame) -> DataFrame:
     return docs.select(*cols).mapInPandas(run, schema=DOC_TERMS_SCHEMA)
 
 
-def plan_salts(term_stats_pdf: pd.DataFrame, salt_threshold: int) -> dict:
-    """Driver-side salt planner: heavy (field,term) → salt factor k.
-
-    k = ceil(df / salt_threshold) capped at 64 — each salted reducer handles
-    at most ~salt_threshold postings.
-    """
-    heavy = term_stats_pdf[term_stats_pdf["df"] > salt_threshold]
-    return {
-        (r.field, r.term): min(int(np.ceil(r.df / salt_threshold)), 64)
-        for r in heavy.itertuples()
-    }
-
-
-# a group table: one row per (shard, field, term, salt) posting list. The
-# packer and the merge exchange both hold their groups in this layout and
-# emit it through _emit; the blob columns are large_binary so a task's
-# groups may exceed the 2 GiB that pa.binary()'s 32-bit offsets allow
+# a group table: one row per (shard, field, term, salt) posting list, salt
+# always 0 (the column stays so existing indexes still read). The packer
+# holds its groups and chunk partials in this layout and emits it through
+# _emit; the blob columns are large_binary so a task's groups may exceed
+# the 2 GiB that pa.binary()'s 32-bit offsets allow
 _GROUP_SCHEMA = pa.schema(
     [
         ("shard", pa.int32()),
@@ -212,8 +200,8 @@ def _group_key(shard: np.ndarray, field, salt: np.ndarray, term):
     fcode = _numpy(fdict.indices)
     fnames = fdict.dictionary.to_pylist()
     tcode = _numpy(term.dictionary_encode().indices)
-    # salt < 64 (plan_salts caps k at 64), term codes < 2^32 (a table holds
-    # < 2^32 rows); the shard/field product must leave 38 low bits free
+    # salt < 64 (6 key bits), term codes < 2^32 (a table holds < 2^32
+    # rows); the shard/field product must leave 38 low bits free
     if salt.size and int(salt.max()) >= 64:
         raise ValueError("salt factor exceeds 64: key fold invalid")
     hi = (int(shard.max()) + 1) * len(fnames) if shard.size else 0
@@ -360,9 +348,8 @@ def _pack_partition_arrow(avgdl_by_field: dict, codec: int,
     merged by :func:`merge_chunks` before the task yields; the emitted
     bytes equal a whole-partition pack (pinned by tests). The resident
     peak is therefore one chunk plus the accumulated partials — NOT the
-    whole partition as rows. This matters most on the blob path
-    (``row_shuffle=False``), where the packer runs directly on scan
-    partitions whose size no shuffle knob bounds.
+    whole partition as rows, which a Zipf-head term of a large shard
+    would otherwise make unbounded.
 
     Output is written by :func:`_emit` (term-sorted, byte-capped).
     """
@@ -392,31 +379,6 @@ def _pack_partition_arrow(avgdl_by_field: dict, codec: int,
     return run
 
 
-def _merge_partials_arrow(avgdl_by_field: dict, codec: int):
-    """mapInArrow merger behind the merge exchange: a partition of packed
-    partial lists → one list per (shard, field, term).
-
-    The partition's partials are read as ONE group table with salt
-    cleared, so a term's salted partials (and the blob path's per-mapper
-    partials) form one group; :func:`merge_chunks` merges them and
-    :func:`_emit` writes the result, as the packer does.
-
-    **Memory bound**: the resident peak is the partition's partials, at
-    about 3 bytes per posting — the bound the packer already accepts for
-    its accumulated chunk partials."""
-
-    def run(iterator):
-        batches = [b for b in iterator if b.num_rows]
-        if not batches:
-            return
-        t = pa.Table.from_batches(batches).cast(_GROUP_SCHEMA)
-        t = t.set_column(t.schema.get_field_index("salt"), "salt",
-                         pa.array(np.zeros(t.num_rows, dtype=np.int32)))
-        yield from _emit(merge_chunks([t], avgdl_by_field, codec))
-
-    return run
-
-
 def shard_expr(n_shards: int):
     """shard = pmod(xxhash64(doc_id), n_shards) — DOCUMENT sharding.
 
@@ -428,101 +390,34 @@ def shard_expr(n_shards: int):
     return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_shards))
 
 
-def resolve_shuffle_mode(master: str | None) -> str:
-    """Pick the postings shuffle strategy for this deployment, from where
-    the postings exchange physically lands — the one variable that flips
-    the measured tradeoff in :func:`build_postings`:
-
-    * ``local[...]`` master → **rows**: the shuffle is same-box disk, so
-      the ~10× byte reduction of map-side packing buys nothing while its
-      per-partial decode/re-encode CPU cost is pure overhead (measured:
-      rows 23.9 s vs blob 36.4 s at 30M postings, local[8]).
-    * any cluster master (yarn, k8s, spark://, …) → **blob**: the exchange
-      crosses the network, where ~3 bytes/posting vs ~40-byte rows is the
-      dominant term and Zipf-head terms arrive pre-compacted (the classic
-      inverted-index combiner; measured to SCALE better 8→32 even on one
-      box: 1.63× vs 1.27×).
-    """
-    return "rows" if (master or "").startswith("local") else "blob"
-
-
 def build_postings(
-    spark: SparkSession,
     doc_terms: DataFrame,
     avgdl_by_field: dict,
-    salt_plan: dict,
+    out_partitions: int,
     codec: int = CODEC_VARINT,
-    out_partitions: int | None = None,
-    row_shuffle: bool = False,
 ) -> DataFrame:
-    """doc_terms (WITH shard column) → packed postings.
+    """doc_terms (WITH shard column) → packed postings, in ONE exchange.
 
-    Every strategy packs rows with :func:`_pack_partition_arrow` and, where
-    a term's postings arrive as several partial lists, merges them with
-    ONE merge: a ``mapInArrow`` (:func:`_merge_partials_arrow`) behind an
-    exchange keyed (shard, term), which reuses the packer's group merge
-    and its emit. The strategies differ only in where the rows are
-    packed; their output is byte-identical (asserted in tests):
+    Rows are hash-partitioned on (shard, term) into ``out_partitions``
+    partitions and each partition is packed by
+    :func:`_pack_partition_arrow`: every row of a (shard, field, term)
+    group lands in one task, so each group is packed once, with nothing
+    to merge across tasks. The same exchange is the writer's layout: each
+    task emits its groups sorted by (shard, field, term), which is what
+    the writer wants (few files per shard, row-group min/max pruning),
+    so the write needs no repartition of its own.
 
-    - **Blob shuffle (``row_shuffle=False``, 1 exchange)** — map-side
-      packing: each input partition packs its rows into PARTIAL lists,
-      then the merge exchange moves ~3 bytes/posting instead of ~40-byte
-      rows (the classic inverted-index combiner), and Zipf-head terms
-      arrive at their reducer pre-compacted.
-    - **Salted row shuffle (``row_shuffle=True`` with a salt plan, 2
-      exchanges)** — rows are hash-partitioned on (shard, field, term,
-      salt), so a Zipf-head term is spread over its k salts; each salt
-      is packed post-shuffle, and the merge exchange joins a term's
-      salted partials. This bounds per-reducer ROW volume too — the
-      regime for extreme skew.
-    - **Unsalted row shuffle (``row_shuffle=True``, no salt plan, 1
-      exchange)** — no term exceeds ``salt_threshold`` rows, so the row
-      exchange keyed (shard, term) serves packing and the write layout at
-      once, and there is nothing to merge.
-
-    Measured on one box (30M postings, local[8]/local[32], best-of-2
-    interleaved): rows 23.9 s / 18.8 s, blob 36.4 s / 22.4 s — blob scales
-    better (1.63× vs 1.27×) and ships ~10× fewer shuffle bytes, but pays a
-    per-partial decode/re-encode cost that a local-disk shuffle does not
-    recoup (see :func:`resolve_shuffle_mode`).
-
-    ``out_partitions`` folds the writer's layout into the LAST exchange
-    (no separate write repartition): it is keyed on (shard, term), and
-    each task emits its groups sorted by (shard, field, term), which is
-    what the writer wants (few files per shard, row-group min/max
-    pruning)."""
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    out_parts = out_partitions or n_parts
-    pack = _pack_partition_arrow(avgdl_by_field, codec)
+    Skew is bounded by the document sharding (see the module docstring):
+    a term's rows in one shard are at most that shard's docs, and the
+    packer's chunking bounds its working set. The ``salt`` column is
+    always 0; it stays in the schema so existing indexes still read."""
     # shuffle only what the packer consumes (`first` and any extra
     # columns ride the doc_terms parquet for the stats observer, not
     # this exchange)
-    doc_terms = doc_terms.select("doc_id", "field", "term", "tf", "dl",
-                                 "shard")
-    if row_shuffle and not salt_plan:
-        return (
-            doc_terms.withColumn("salt", F.lit(0).cast("int"))
-            .repartition(out_parts, "shard", "term")
-            .mapInArrow(pack, schema=POSTINGS_SCHEMA_SPARK)
-        )
-    if not row_shuffle:
-        partial = doc_terms.withColumn("salt", F.lit(0).cast("int"))
-    else:
-        plan_pdf = pd.DataFrame(
-            [(f, t, k) for (f, t), k in salt_plan.items()],
-            columns=["field", "term", "salt_k"],
-        )
-        plan_df = F.broadcast(spark.createDataFrame(plan_pdf))
-        partial = doc_terms.join(plan_df, ["field", "term"], "left").withColumn(
-            "salt",
-            F.when(
-                F.col("salt_k").isNotNull(),
-                F.pmod(F.xxhash64(F.col("doc_id")), F.col("salt_k")),
-            ).otherwise(F.lit(0)).cast("int"),
-        ).drop("salt_k").repartition(n_parts, "shard", "field", "term", "salt")
     return (
-        partial.mapInArrow(pack, schema=POSTINGS_SCHEMA_SPARK)
-        .repartition(out_parts, "shard", "term")
-        .mapInArrow(_merge_partials_arrow(avgdl_by_field, codec),
+        doc_terms.select("doc_id", "field", "term", "tf", "dl", "shard")
+        .withColumn("salt", F.lit(0).cast("int"))
+        .repartition(out_partitions, "shard", "term")
+        .mapInArrow(_pack_partition_arrow(avgdl_by_field, codec),
                     schema=POSTINGS_SCHEMA_SPARK)
     )

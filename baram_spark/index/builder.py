@@ -46,8 +46,6 @@ from .build import (
     INDEX_FIELDS,
     build_postings,
     extract_docs,
-    plan_salts,
-    resolve_shuffle_mode,
     shard_expr,
     tokenize_docs,
 )
@@ -177,12 +175,18 @@ class SnapshotConflictError(RuntimeError):
 
 
 class IndexBuilder:
+    """Builds, extends and maintains one index directory.
+
+    ``salt_threshold`` is accepted and ignored: every build packs its
+    postings through one unsalted exchange (see ``build.build_postings``).
+    It is kept only so that existing callers still construct a builder."""
+
     def __init__(
         self,
         spark: SparkSession,
         out_dir: str,
         n_shards: int = 8,
-        salt_threshold: int = 50_000,
+        salt_threshold: int | None = None,
         codec: int = CODEC_VARINT,
         shard_concurrency: int = 2,
         build_embeddings: bool = False,
@@ -192,7 +196,6 @@ class IndexBuilder:
         self.spark = spark
         self.out = out_dir.rstrip("/")
         self.n_shards = n_shards
-        self.salt_threshold = salt_threshold
         self.codec = codec
         self.shard_concurrency = shard_concurrency
         # hybrid search reads build-time embeddings (embeddings/gen=G) —
@@ -200,13 +203,6 @@ class IndexBuilder:
         # model swap point (see query.hybrid.embed_docs).
         self.build_embeddings = build_embeddings
         self.embed_fn = embed_fn
-        # "rows" = salted row shuffle + blob merge — fastest on single-box
-        # local-disk shuffle. "blob" = map-side packing + ONE blob-level
-        # exchange moving ~3 bytes/posting — the strategy for real clusters
-        # where shuffle crosses the network. Picked per deployment from
-        # the master URL; identical output either way (byte-identity
-        # asserted in tests); see build.build_postings for the tradeoff.
-        self.shuffle_mode = resolve_shuffle_mode(spark.sparkContext.master)
         # snapshots whose generation dirs survive GC (readers pinned to a
         # recent manifest keep their files; see _commit_manifest / vacuum)
         self.retain_snapshots = max(retain_snapshots, 1)
@@ -214,9 +210,6 @@ class IndexBuilder:
         # naturally small. Half the shards per job.
         self.shards_per_job = max(n_shards // 2, 1)
         self.ledger = LineageLedger(spark, f"{self.out}/lineage")
-        # salt plans computed concurrently with extract (see
-        # _stage_extract_tokenize); keyed by generation
-        self._salt_plans: dict[int, dict] = {}
         # doc_terms rows per shard observed by the tokenize write (sizes
         # the postings exchange); keyed by generation
         self._doc_terms_rows: dict[int, dict[int, int]] = {}
@@ -386,19 +379,6 @@ class IndexBuilder:
                     except Exception as e:
                         errs.append(e)
 
-                def plan_salts_task():
-                    # overlap the salt-plan sample with extract/tokenize:
-                    # tokenize 5% of the persisted extraction (cheap second
-                    # pass over cached rows) instead of a SEQUENTIAL sample
-                    # job over doc_terms after tokenize finishes — removes
-                    # an unparallelizable barrier from the critical path.
-                    try:
-                        self._salt_plans[gen] = self._salt_plan_from_docs(
-                            extracted
-                        )
-                    except Exception as e:
-                        errs.append(e)
-
                 def write_embeddings():
                     try:
                         if not emb_done:
@@ -425,19 +405,9 @@ class IndexBuilder:
                 # PHASE 1 runs the tokenize job alone — it materializes the
                 # persisted extraction at FULL python-worker parallelism —
                 # then PHASE 2 overlaps the cheap cache consumers (docs
-                # write is JVM-only parquet IO, the salt sample tokenizes
-                # 5%, embeddings hash cached rows). Below it, every
-                # consumer overlaps from the start.
+                # write is JVM-only parquet IO, embeddings hash cached
+                # rows). Below it, every consumer overlaps from the start.
                 tasks = [write_docs, write_attrs]
-                if self.shuffle_mode == "rows":
-                    if n_pages > self.salt_threshold:
-                        tasks.append(plan_salts_task)
-                        metrics["salt_plan"] = "sampled"
-                    else:
-                        # exact, not an estimate: df <= docs <= pages, so
-                        # no term of this wave can pass plan_salts'
-                        # df > salt_threshold
-                        self._salt_plans[gen] = {}
                 if not emb_done:
                     tasks.append(write_embeddings)
                 if n_pages >= PHASE_THRESHOLD:
@@ -601,37 +571,6 @@ class IndexBuilder:
             overwrite=True,
         )
 
-    def _salt_plan(self, gen: int) -> dict:
-        """Salt planning needs only the Zipf head — a 5% sample finds it at
-        1/20th the cost; df estimates scale back up by 1/fraction.
-
-        Resume fallback: the fresh-build path computes the plan concurrently
-        with extract (_salt_plan_from_docs); this reads doc_terms instead."""
-        doc_terms = self.spark.read.parquet(_sp(f"{self.doc_terms_path}/gen={gen}"))
-        frac = 0.05
-        sample_counts = (
-            doc_terms.sample(fraction=frac, seed=42)
-            .groupBy("field", "term")
-            .agg((F.count("*") / frac).cast("long").alias("df"))
-            .filter(F.col("df") > self.salt_threshold)
-            .toPandas()
-        )
-        return plan_salts(sample_counts, self.salt_threshold)
-
-    def _salt_plan_from_docs(self, docs: DataFrame) -> dict:
-        """Same Zipf-head estimate from a 5% DOC sample of the in-flight
-        extraction (df is a per-doc count, so doc sampling estimates it
-        just like row sampling does)."""
-        frac = 0.05
-        sample_counts = (
-            tokenize_docs(docs.sample(fraction=frac, seed=42))
-            .groupBy("field", "term")
-            .agg((F.count("*") / frac).cast("long").alias("df"))
-            .filter(F.col("df") > self.salt_threshold)
-            .toPandas()
-        )
-        return plan_salts(sample_counts, self.salt_threshold)
-
     def _stage_postings(self, gen, stage_prefix, fingerprint, done, metrics):
         todo, resumed = [], []
         for k in range(self.n_shards):
@@ -653,20 +592,12 @@ class IndexBuilder:
                 resumed.append(k)
         metrics["resumed_shards"] = sorted(resumed)
         if not todo:
-            # fully resumed: skip the avgdl collect and (above all) the
-            # doc_terms 5% sampling job the salt plan would otherwise run
+            # fully resumed: skip the avgdl collect
             metrics["postings_built"] = 0
             return
         # the avgdl this generation recorded when it was tokenized
         avgdl_by_field = {r["field"]: r["avgdl_pack"]
                           for r in self._gen_meta(gen)}
-        salt_plan = {}
-        if self.shuffle_mode == "rows":
-            salt_plan = self._salt_plans.pop(gen, None)
-            if salt_plan is None:
-                salt_plan = self._salt_plan(gen)
-                metrics["salt_plan"] = "sampled"
-        metrics.setdefault("salt_plan", "skipped")
         groups = [
             todo[i : i + self.shards_per_job]
             for i in range(0, len(todo), self.shards_per_job)
@@ -701,15 +632,11 @@ class IndexBuilder:
                 .parquet(*[_sp(f"{gen_doc_terms}/shard={k}")
                            for k in present])
             )
-            # the LAST exchange inside build_postings is keyed on
-            # (shard, term) at this partition count — the write needs no
-            # repartition of its own (2 exchanges salted, 1 unsalted);
-            # counts ride along as write observations.
-            postings = build_postings(
-                self.spark, shard_terms, avgdl_by_field, salt_plan,
-                codec=self.codec, out_partitions=n_parts,
-                row_shuffle=(self.shuffle_mode == "rows"),
-            )
+            # build_postings' one exchange is keyed on (shard, term) at
+            # this partition count — the write needs no repartition of its
+            # own; counts ride along as write observations.
+            postings = build_postings(shard_terms, avgdl_by_field, n_parts,
+                                      codec=self.codec)
             obs = Observation(f"postings-{gen}-{shard_ids[0]}")
             (
                 postings.observe(
@@ -906,16 +833,22 @@ class IndexBuilder:
         for g in sorted(prev_ref - referenced):
             self._remove_gen_dirs(g)
 
-    def _gc_gen_dirs(self, referenced: set[int]) -> None:
+    def _gc_gen_dirs(self, referenced: set[int]) -> set[int]:
         """Remove EVERY gen dir not in ``referenced`` — including crashed
-        partial gens. Only safe from :meth:`vacuum` (no writer in flight)."""
+        partial gens — in every gen-partitioned table, and return the
+        generations removed. Only safe from :meth:`vacuum` (no writer in
+        flight)."""
+        removed = set()
         for t in _GEN_TABLES:
             base = f"{self.out}/{t}"
             for d in fs.listdir(base):
-                if d.startswith("gen=") and int(d.split("=")[1]) not in referenced:
+                gen = int(d.split("=")[1]) if d.startswith("gen=") else None
+                if gen is not None and gen not in referenced:
                     fs.rmtree(f"{base}/{d}")
+                    removed.add(gen)
                 elif d.startswith(".stage_"):  # crashed attrs staging
                     fs.rmtree(f"{base}/{d}")
+        return removed
 
     def _remove_gen_dirs(self, gen: int) -> None:
         for t in _GEN_TABLES:
@@ -936,7 +869,6 @@ class IndexBuilder:
         history = list(m.get("history", []))[-max(retain_snapshots, 1):]
         referenced = {int(g) for h in history for g in h["generations"]}
         referenced |= {int(g) for g in m.get("generations", [])}
-        before = set(self.generations())
         # vacuum is itself an OCC commit: it advances snapshot_id (so a
         # concurrent writer whose base_sid predates the vacuum conflicts
         # and retries instead of committing over the shrunk history), and
@@ -959,12 +891,12 @@ class IndexBuilder:
                         f"vacuum; re-run vacuum against the new snapshot"
                     )
                 fs.publish_manifest(self.out, json.dumps(m))
-                self._gc_gen_dirs(referenced)
+                removed = self._gc_gen_dirs(referenced)
         except fs.CommitLockError as e:
             raise SnapshotConflictError(
                 f"concurrent committer holds the lock on {self.out}: {e}"
             ) from e
-        return {"removed_gens": sorted(before - referenced)}
+        return {"removed_gens": sorted(removed)}
 
     def _write_index_meta(self) -> None:
         """Record structural facts queries need (n_shards re-derives the

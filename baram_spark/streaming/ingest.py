@@ -32,7 +32,6 @@ def stream_build(
     index_dir: str,
     checkpoint_dir: str,
     n_shards: int = 8,
-    salt_threshold: int = 50_000,
     available_now: bool = True,
     schema: str = PAGES_SCHEMA,
     occ_retries: int = 3,
@@ -71,9 +70,7 @@ def stream_build(
     from ..index.builder import index_n_shards
 
     builder = IndexBuilder(
-        spark, index_dir, n_shards=index_n_shards(index_dir, n_shards),
-        salt_threshold=salt_threshold,
-    )
+        spark, index_dir, n_shards=index_n_shards(index_dir, n_shards))
     bloom = None
     if bloom_prefilter:
         from ..operators.bloom import CommittedUrlBloom

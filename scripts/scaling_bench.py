@@ -185,7 +185,6 @@ walls = []
 for i, (path, n) in enumerate(zip(page_paths, n_docs)):
     pages = spark.read.parquet(path)
     builder = IndexBuilder(spark, f"{{out_base}}/idx{{cores}}_{{i}}", n_shards=8,
-                           salt_threshold=max(n // 8, 1000),
                            shard_concurrency=max(cores // 16, 1))
     t0 = time.time()
     m = builder.build(pages, fingerprint=f"s{{cores}}-{{i}}", resume=False)

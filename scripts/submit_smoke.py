@@ -36,8 +36,7 @@ def main() -> int:
     from baram_spark.index.builder import IndexBuilder
     from baram_spark.query.engine import SearchEngine
 
-    builder = IndexBuilder(spark, f"{out}/idx", n_shards=2,
-                           salt_threshold=10**9)
+    builder = IndexBuilder(spark, f"{out}/idx", n_shards=2)
     m = builder.build(pages_df(spark, 200, partitions=4),
                       fingerprint="submit-smoke")
     engine = SearchEngine(spark, f"{out}/idx")

@@ -13,6 +13,7 @@ import pytest
 
 from baram_spark.__main__ import main
 from baram_spark.corpus import make_query_set, pages_df
+from tests.conftest import read_committed
 
 N_DOCS = 150
 
@@ -70,10 +71,9 @@ def test_cli_hybrid_embeds_only_committed_docs(capsys, spark, tmp_path):
     from baram_spark.index.builder import IndexBuilder
     from baram_spark.query.engine import SearchEngine
     from baram_spark.query.hybrid import embed_docs, knn_search
-    from tests.conftest import read_committed
 
     out = f"{tmp_path}/noemb"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 80, partitions=2), fingerprint="h0")
     q = make_query_set()[0]["query_text"]
     # the knn side's best doc, which the query also matches
@@ -93,7 +93,7 @@ def test_cli_hybrid_embeds_only_committed_docs(capsys, spark, tmp_path):
 def test_cli_stats(capsys, spark, cli_index):
     # the generator plants deleted-page fixtures that extraction drops,
     # so compare against the docs table, not the raw page count
-    n_docs = spark.read.parquet(f"{cli_index}/docs").count()
+    n_docs = read_committed(spark, cli_index, "docs").count()
     out = _run(capsys, spark, ["stats", "--index", cli_index])
     assert out["documents"] == n_docs
     assert out["posting_lists"] > 0
@@ -107,10 +107,9 @@ def test_cli_stats_terms_follow_the_manifest(capsys, spark, tmp_path):
     committed generations — not of a staged, uncommitted wave whose
     term_stats are already on disk."""
     from baram_spark.index.builder import IndexBuilder
-    from tests.conftest import read_committed
 
     out = f"{tmp_path}/statsidx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 60, partitions=2), fingerprint="t0")
     b.build_incremental(pages_df(spark, 100, partitions=2),
                         fingerprint="t1")
@@ -121,7 +120,7 @@ def test_cli_stats_terms_follow_the_manifest(capsys, spark, tmp_path):
     def held(*a, **kw):
         raise Held
 
-    staged = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    staged = IndexBuilder(spark, out, n_shards=2)
     staged._commit_manifest = held
     with pytest.raises(Held):
         staged.build_incremental(pages_df(spark, 300, partitions=2),
@@ -162,7 +161,7 @@ def test_cli_maintenance(capsys, spark, cli_index):
         serve_forever_in_thread,
     )
 
-    b = IndexBuilder(spark, cli_index, n_shards=2, salt_threshold=10**9,
+    b = IndexBuilder(spark, cli_index, n_shards=2,
                      build_embeddings=True)
     b.build_incremental(pages_df(spark, 190, partitions=4),
                         fingerprint="cli-wave2")
@@ -203,7 +202,7 @@ def test_cli_maintenance_preserves_shard_count(capsys, spark, tmp_path):
     from baram_spark.query.engine import SearchEngine
 
     out = f"{tmp_path}/shardidx"
-    b = IndexBuilder(spark, out, n_shards=4, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=4,
                      build_embeddings=True)
     b.build(pages_df(spark, 120, partitions=2), fingerprint="s1")
     b.build_incremental(pages_df(spark, 160, partitions=2),
@@ -237,7 +236,7 @@ def test_index_n_shards_reads_the_committed_manifest(spark, tmp_path):
     from baram_spark.index.builder import IndexBuilder, index_n_shards
 
     out = f"{tmp_path}/committed"
-    IndexBuilder(spark, out, n_shards=4, salt_threshold=10**9).build(
+    IndexBuilder(spark, out, n_shards=4).build(
         pages_df(spark, 60, partitions=2), fingerprint="n4")
     assert index_n_shards(out) == 4
     # an uncommitted 8-shard build has started over the same dir
@@ -265,7 +264,7 @@ def test_cli_maintenance_notify_failure_keeps_report(capsys, spark,
     from baram_spark.index.builder import IndexBuilder
 
     out = f"{tmp_path}/notifyidx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 100, partitions=2), fingerprint="n1")
     rep = _run(capsys, spark, [
         "maintenance", "--index", out, "--skip-cluster",

@@ -49,7 +49,7 @@ def base_index(spark, tmp_path_factory):
     """One base build, copied per case (copytree is instant; a fresh
     build per kill point would dominate the suite)."""
     out = f"{tmp_path_factory.mktemp('crash_base')}/idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 150, partitions=2), fingerprint="crash-base")
     return out
 
@@ -61,7 +61,7 @@ def _clone(base_index, tmp_path, name):
 
 
 def _builder(spark, out):
-    return IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    return IndexBuilder(spark, out, n_shards=2)
 
 
 def _kill_first_call(builder, method_name):
@@ -221,7 +221,7 @@ def test_crashed_first_build_never_goes_live(spark, tmp_path, monkeypatch):
             raise _Crash("build_postings")
         return orig(*a, **kw)
 
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=2,
                      shard_concurrency=1)
     with monkeypatch.context() as m:
         m.setattr(builder_mod, "build_postings", second_call_dies)
@@ -249,3 +249,33 @@ def test_crashed_first_build_never_goes_live(spark, tmp_path, monkeypatch):
     assert b2.vacuum()["removed_gens"] == [0]
     assert not [t for t in os.listdir(out)
                 if os.path.exists(f"{out}/{t}/gen=0")]
+
+
+def test_vacuum_reports_gens_without_postings(spark, tmp_path, monkeypatch):
+    """A first build killed at its first build_postings call leaves
+    generation 0 in docs, doc_terms, doc_attrs and gen_meta but not in
+    postings. After a wave of another fingerprint commits, vacuum
+    removes generation 0 from every table and reports it."""
+    import os
+
+    from baram_spark.index import builder as builder_mod
+
+    def dies(*a, **kw):
+        raise _Crash("build_postings")
+
+    out = f"{tmp_path}/no_postings"
+    with monkeypatch.context() as m:
+        m.setattr(builder_mod, "build_postings", dies)
+        with pytest.raises(_Crash):
+            _builder(spark, out).build(pages_df(spark, 120, partitions=2),
+                                       fingerprint="first")
+    assert os.path.isdir(f"{out}/docs/gen=0")
+    assert not os.path.exists(f"{out}/postings/gen=0")
+
+    b = _builder(spark, out)
+    assert b.build_incremental(pages_df(spark, 180, partitions=2),
+                               fingerprint="wave")["gen"] == 1
+    assert b.vacuum()["removed_gens"] == [0]
+    assert not [t for t in os.listdir(out)
+                if os.path.exists(f"{out}/{t}/gen=0")]
+    assert b.vacuum()["removed_gens"] == []

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from baram_spark.corpus import make_query_set, pages_df
 from baram_spark.index.builder import IndexBuilder
 from baram_spark.query.engine import SearchEngine
+from tests.conftest import read_committed
 
 N = 300
 
@@ -14,7 +15,7 @@ N = 300
 @pytest.fixture()
 def del_index(spark, tmp_path):
     out = f"{tmp_path}/del_idx"
-    builder = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    builder = IndexBuilder(spark, out, n_shards=2)
     builder.build(pages_df(spark, N, partitions=4), fingerprint="del-test")
     return out, builder
 
@@ -27,7 +28,7 @@ def test_delete_then_query_excludes_doc(spark, del_index):
     assert before
     victim = before[0][0]
 
-    url = spark.read.parquet(f"{out}/docs").filter(
+    url = read_committed(spark, out, "docs").filter(
         F.col("doc_id") == victim
     ).collect()[0]["url"]
     n = builder.delete_by_query(f"url = '{url}'")
@@ -120,7 +121,7 @@ def test_multi_generation_compact_stats(spark, tmp_path):
     earlier replacement generations' stats into the later folds —
     global n_docs/avgdl stay exact and rank identity holds."""
     out = f"{tmp_path}/mgc_idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 120, partitions=2), fingerprint="g0")
     b.build_incremental(pages_df(spark, 200, partitions=2),
                         fingerprint="g1")
@@ -135,7 +136,7 @@ def test_multi_generation_compact_stats(spark, tmp_path):
     assert len(res["new_gens"]) == 2
 
     # corpus stats must equal a direct recount over the committed docs
-    from tests.conftest import read_committed, snapshot_stats
+    from tests.conftest import snapshot_stats
 
     committed = read_committed(spark, out, "docs")
     n_docs = committed.count()
@@ -175,11 +176,11 @@ def test_compact_to_empty_index_no_resurrection(spark, tmp_path):
     )
 
     out = f"{tmp_path}/empty_idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=2,
                      build_embeddings=True)
     b.build(pages_df(spark, 80, partitions=2), fingerprint="e0")
     all_ids = [int(r["doc_id"]) for r in
-               spark.read.parquet(f"{out}/docs").select("doc_id").collect()]
+               read_committed(spark, out, "docs").select("doc_id").collect()]
     b.delete_docs(all_ids)
     res = b.compact()
     assert res["dropped_gens"] == [0] and res["new_gens"] == []

@@ -24,7 +24,7 @@ N = 300
 @pytest.fixture(scope="module")
 def attrs_index(spark, tmp_path_factory):
     out = f"{tmp_path_factory.mktemp('attrs')}/idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, N, partitions=4), fingerprint="attrs-test")
     return out
 

@@ -126,7 +126,7 @@ def test_crawl_extract_index_search_loop(spark, http_server, tmp_path):
     ).withColumn("lang", F.lit("ko"))
 
     out = f"{tmp_path}/crawl_idx"
-    IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9).build(
+    IndexBuilder(spark, out, n_shards=2).build(
         fetched_df, fingerprint="crawl"
     )
     table = spark.read.parquet(f"{out}/docs")

@@ -18,7 +18,7 @@ from tests.conftest import read_committed
 def for_index(request, spark, work_dir):
     codec, name = request.param
     out = f"{work_dir}/idx_codec{codec}"
-    builder = IndexBuilder(spark, out, n_shards=2, salt_threshold=100,
+    builder = IndexBuilder(spark, out, n_shards=2,
                            codec=codec)
     builder.build(pages_df(spark, 250, partitions=4), fingerprint="for-250")
     return out, name
@@ -53,8 +53,7 @@ def test_codec_stats_telemetry(spark, for_index):
     import os
 
     for_index, codec_name = for_index
-    builder = IndexBuilder(spark, for_index, n_shards=2,
-                           salt_threshold=100, codec=CODEC_FOR)
+    builder = IndexBuilder(spark, for_index, n_shards=2, codec=CODEC_FOR)
     stats = builder.codec_stats(persist=True)
     # whole index packed with exactly the fixture's codec — a builder
     # that ignored codec= or a mis-stamped codec id byte fails here

@@ -143,7 +143,7 @@ def test_full_lifecycle_on_mock_scheme(spark, mock_index):
     from baram_spark.query.engine import SearchEngine
 
     out = mock_index
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     m = b.build(pages_df(spark, 150, partitions=2), fingerprint="mockfs")
     assert b.committed_generations() == [0]
     assert fs.exists(f"{out}/_manifest.json")

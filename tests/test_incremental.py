@@ -46,7 +46,7 @@ def _assert_term_stats_exact(spark, out):
 @pytest.fixture(scope="module")
 def inc_index(spark, work_dir):
     out = f"{work_dir}/inc"
-    builder = IndexBuilder(spark, out, n_shards=4, salt_threshold=100)
+    builder = IndexBuilder(spark, out, n_shards=4)
     builder.build(pages_df(spark, N_BASE, partitions=4), fingerprint="base")
     # second wave: overlap [0, N_BASE) must be deduped away
     m = builder.build_incremental(
@@ -58,7 +58,7 @@ def inc_index(spark, work_dir):
 def test_incremental_adds_only_new_docs(spark, inc_index):
     out, m = inc_index
     assert m["gen"] == 1
-    docs = spark.read.parquet(f"{out}/docs")
+    docs = read_committed(spark, out, "docs")
     total = docs.count()
     gen1 = docs.filter(F.col("gen") == 1).count()
     base = docs.filter(F.col("gen") == 0).count()
@@ -91,7 +91,7 @@ def test_wand_bounds_safe_after_avgdl_drift(spark, inc_index):
 
 def test_incremental_noop_when_no_new_pages(spark, inc_index):
     out, _ = inc_index
-    builder = IndexBuilder(spark, out, n_shards=4, salt_threshold=100)
+    builder = IndexBuilder(spark, out, n_shards=4)
     m = builder.build_incremental(
         pages_df(spark, N_ALL, partitions=4), fingerprint="wave3"
     )
@@ -108,15 +108,13 @@ def test_streaming_available_now(spark, tmp_path):
     idx_dir = str(tmp_path / "stream_idx")
     ck_dir = str(tmp_path / "ck")
     pages_df(spark, 150, partitions=2).write.mode("append").parquet(pages_dir)
-    stream_build(spark, pages_dir, idx_dir, ck_dir, n_shards=2,
-                 salt_threshold=100)
+    stream_build(spark, pages_dir, idx_dir, ck_dir, n_shards=2)
     # second drop (new files, overlapping ids 100-149 come as new FILES but
     # duplicate urls — the anti-join must drop them)
     pages_df(spark, 250, partitions=2).write.mode("append").parquet(pages_dir)
-    stream_build(spark, pages_dir, idx_dir, ck_dir, n_shards=2,
-                 salt_threshold=100)
+    stream_build(spark, pages_dir, idx_dir, ck_dir, n_shards=2)
 
-    docs = spark.read.parquet(f"{idx_dir}/docs")
+    docs = read_committed(spark, idx_dir, "docs")
     assert docs.select("url").distinct().count() == docs.count()
 
     engine = SearchEngine(spark, idx_dir)
@@ -134,7 +132,7 @@ def test_manifest_snapshot_isolation(spark, tmp_path):
     import os
 
     out = str(tmp_path / "snap_idx")
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=100)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 150, partitions=2), fingerprint="snap")
     with open(f"{out}/_manifest.json") as f:
         assert json.load(f)["generations"] == [0]
@@ -165,7 +163,7 @@ def test_manifest_snapshot_isolation(spark, tmp_path):
     assert len(rows) == 3
 
     # committing generation 1 for real makes it visible again
-    b2 = IndexBuilder(spark, out, n_shards=2, salt_threshold=100)
+    b2 = IndexBuilder(spark, out, n_shards=2)
     import shutil
 
     shutil.rmtree(f"{out}/postings/gen=1")
@@ -186,7 +184,7 @@ def test_merge_generations(spark, tmp_path):
     gen dirs survive until the retention window expires (pinned readers),
     then vacuum reclaims them."""
     out = str(tmp_path / "merge_idx")
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=100)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 200, partitions=2), fingerprint="m0")
     b.build_incremental(pages_df(spark, 350, partitions=2), fingerprint="m1")
     assert b.generations() == [0, 1]
@@ -216,7 +214,7 @@ def test_merge_generations(spark, tmp_path):
     assert gc["removed_gens"] == [0, 1]
     assert b.generations() == [new_gen]
 
-    docs = spark.read.parquet(f"{out}/docs")
+    docs = read_committed(spark, out, "docs")
     assert docs.filter(F.col("doc_id") == victim).isEmpty()
     assert res["docs"] == docs.count()
     # gen_meta holds exactly one generation per field, packed at current
@@ -240,7 +238,7 @@ def test_interrupted_wave_resumes_its_own_gen(spark, tmp_path):
     """An interrupted incremental wave must resume ITS generation number
     even if later waves (other fingerprints) appended more generations."""
     out = str(tmp_path / "genfix")
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=100)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 100, partitions=2), fingerprint="g0")
     m1 = b.build_incremental(pages_df(spark, 160, partitions=2), fingerprint="w1")
     assert m1["gen"] == 1
@@ -265,7 +263,7 @@ def test_crashed_partial_gen_never_committed_then_gcd(spark, tmp_path):
     import os
 
     out = str(tmp_path / "crash_idx")
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=100)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 150, partitions=2), fingerprint="c0")
 
     # crash leaves garbage gen-1 dirs in docs AND postings; term_stats or
@@ -277,7 +275,7 @@ def test_crashed_partial_gen_never_committed_then_gcd(spark, tmp_path):
     with open(f"{out}/docs/gen=1/junk.parquet", "wb") as f:
         f.write(b"garbage")
 
-    b2 = IndexBuilder(spark, out, n_shards=2, salt_threshold=100)
+    b2 = IndexBuilder(spark, out, n_shards=2)
     b2.build_incremental(pages_df(spark, 260, partitions=2),
                          fingerprint="c2")
     with open(f"{out}/_manifest.json") as f:
@@ -310,13 +308,13 @@ def test_concurrent_commit_conflict_detected(spark, tmp_path):
     from baram_spark.index.builder import SnapshotConflictError
 
     out = str(tmp_path / "occ_idx")
-    a = IndexBuilder(spark, out, n_shards=2, salt_threshold=100)
+    a = IndexBuilder(spark, out, n_shards=2)
     a.build(pages_df(spark, 150, partitions=2), fingerprint="occ0")
 
     # writer A begins an operation against snapshot 1...
     base = a._begin()
     # ...writer B commits snapshot 2 meanwhile
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=100)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build_incremental(pages_df(spark, 220, partitions=2),
                         fingerprint="occ-b")
     assert b.committed_generations() == [0, 1]
@@ -344,11 +342,11 @@ def test_occ_conflict_retry(spark, tmp_path):
     out = f"{tmp_path}/occ_idx"
     # embeddings on: a resumed wave's ledger carries "docs.gN.embed" stage
     # names, whose parse must not be mistaken for a generation number
-    b1 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+    b1 = IndexBuilder(spark, out, n_shards=2,
                       build_embeddings=True)
     b1.build(pages_df(spark, 120, partitions=2), fingerprint="base")
 
-    b2 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+    b2 = IndexBuilder(spark, out, n_shards=2,
                       build_embeddings=True)
     # b1 stages urls 120..300; b2 commits 120..240 FIRST — the overlap
     # forces the retry to discard b1's staged gen and re-dedup, leaving
@@ -404,12 +402,12 @@ def test_occ_retry_survives_concurrent_vacuum(spark, tmp_path):
     from baram_spark.index.builder import SnapshotConflictError
 
     out = f"{tmp_path}/occ_vac"
-    b1 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b1 = IndexBuilder(spark, out, n_shards=2)
     b1.build(pages_df(spark, 100, partitions=2), fingerprint="base")
     b1.build_incremental(pages_df(spark, 160, partitions=2),
                          fingerprint="w1")
 
-    b2 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b2 = IndexBuilder(spark, out, n_shards=2)
     wave = pages_df(spark, 240, partitions=2)  # new urls 160..240
 
     fired = {"n": 0}
@@ -493,7 +491,7 @@ def test_vacuum_is_an_occ_commit(spark, tmp_path):
     from baram_spark.index.builder import SnapshotConflictError
 
     out = f"{tmp_path}/vac_occ"
-    b1 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b1 = IndexBuilder(spark, out, n_shards=2)
     b1.build(pages_df(spark, 120, partitions=2), fingerprint="base")
 
     # (1) vacuum advances the snapshot
@@ -503,7 +501,7 @@ def test_vacuum_is_an_occ_commit(spark, tmp_path):
         b1._commit_manifest([0], base_sid=base)
 
     # (2) concurrent commit mid-vacuum aborts the vacuum
-    b2 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b2 = IndexBuilder(spark, out, n_shards=2)
     orig = b1._read_manifest
     fired = {"n": 0}
 
@@ -539,14 +537,14 @@ def test_fully_resumed_build_repairs_missing_doc_attrs(spark, tmp_path):
     import shutil
 
     out = f"{tmp_path}/attrs_resume"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 120, partitions=2), fingerprint="attrs-fp")
     attrs_dir = f"{out}/doc_attrs/gen=0"
     assert os.path.isdir(attrs_dir)
 
     # simulate the crash window: attrs dir gone, every stage ledgered done
     shutil.rmtree(attrs_dir)
-    b2 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b2 = IndexBuilder(spark, out, n_shards=2)
     b2.build(pages_df(spark, 120, partitions=2), fingerprint="attrs-fp",
              resume=True)
     assert os.path.isdir(attrs_dir)  # repaired, not silently skipped
@@ -561,7 +559,7 @@ def test_tombstones_added_during_merge_survive(spark, tmp_path):
     maintenance job clears exactly the tombstone FILES it read, never the
     whole deletes dir."""
     out = f"{tmp_path}/race_idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 150, partitions=2), fingerprint="race")
     b.build_incremental(pages_df(spark, 260, partitions=2),
                         fingerprint="race2")
@@ -572,7 +570,7 @@ def test_tombstones_added_during_merge_survive(spark, tmp_path):
 
     # inject the racing delete between the merge's tombstone read and its
     # commit (hook the stats stage, which runs mid-merge)
-    b2 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b2 = IndexBuilder(spark, out, n_shards=2)
     orig = b2._stage_term_stats
     fired = {"n": 0}
 
@@ -599,10 +597,10 @@ def test_concurrent_append_commits_stats_of_every_gen(spark, tmp_path):
     cover exactly the committed generations, so BM25 stays
     oracle-identical."""
     out = f"{tmp_path}/cover_idx"
-    b1 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b1 = IndexBuilder(spark, out, n_shards=2)
     b1.build(pages_df(spark, 120, partitions=2), fingerprint="c0")
 
-    b2 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b2 = IndexBuilder(spark, out, n_shards=2)
     fired = {"n": 0}
     orig = b1._stage_term_stats
 
@@ -639,7 +637,7 @@ def test_empty_wave_leaves_no_orphan_dirs(spark, tmp_path):
     import os
 
     out = f"{tmp_path}/orphan_idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 100, partitions=2), fingerprint="o0")
     # identical wave: everything dedupes away
     m = b.build_incremental(pages_df(spark, 100, partitions=2),
@@ -660,7 +658,7 @@ def test_stream_build_keeps_stored_shard_count(spark, tmp_path):
     from baram_spark.streaming.ingest import stream_build
 
     out = f"{tmp_path}/shard_idx"
-    b = IndexBuilder(spark, out, n_shards=4, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=4)
     b.build(pages_df(spark, 100, partitions=2), fingerprint="s0")
 
     pages_dir = f"{tmp_path}/pages"
@@ -684,7 +682,7 @@ def test_tiny_wave_with_empty_shards_builds(spark, tmp_path):
     cleanly — empty shards complete with zero postings instead of
     crashing the group read on a missing shard dir."""
     out = f"{tmp_path}/tiny_idx"
-    b = IndexBuilder(spark, out, n_shards=4, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=4)
     b.build(pages_df(spark, 100, partitions=2), fingerprint="t0")
     # 103 pages: ~2-3 new urls -> guaranteed empty shards among 4
     m = b.build_incremental(pages_df(spark, 103, partitions=2),
@@ -711,7 +709,7 @@ def test_resume_reruns_shard_whose_postings_were_deleted(spark, tmp_path):
     from baram_spark.query.engine import SearchEngine
 
     out = f"{tmp_path}/idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 120, partitions=2), fingerprint="rr")
     eng = SearchEngine(spark, out)
     q = "block43"
@@ -720,7 +718,7 @@ def test_resume_reruns_shard_whose_postings_were_deleted(spark, tmp_path):
     # simulate the race: the artifact vanishes AFTER the ledger recorded
     # completion (doc_terms still present -> the verify must re-run it)
     shutil.rmtree(f"{out}/postings/gen=0/shard=0")
-    b2 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b2 = IndexBuilder(spark, out, n_shards=2)
     b2.build(pages_df(spark, 120, partitions=2), fingerprint="rr",
              resume=True)
     assert b2.spark is spark
@@ -741,9 +739,9 @@ def test_commit_pins_its_own_term_stats_version(spark, tmp_path):
     import os
 
     out = f"{tmp_path}/pin_idx"
-    a = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    a = IndexBuilder(spark, out, n_shards=2)
     a.build(pages_df(spark, 120, partitions=2), fingerprint="p0")
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
 
     class Held(Exception):
         pass
@@ -792,9 +790,9 @@ def test_commit_pins_its_own_corpus_stats(spark, tmp_path):
     from tests.test_serving_refresh import _pages
 
     out = f"{tmp_path}/race_idx"
-    a = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    a = IndexBuilder(spark, out, n_shards=2)
     a.build(_pages(spark, 0, 120), fingerprint="r0")
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
 
     class Held(Exception):
         pass
@@ -839,16 +837,16 @@ def test_resumed_wave_packs_with_its_recorded_avgdl(spark, tmp_path):
     from tests.test_serving_refresh import _pages
 
     out = f"{tmp_path}/resume_idx"
-    IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9).build(
+    IndexBuilder(spark, out, n_shards=2).build(
         _pages(spark, 0, 120), fingerprint="k0")
-    a = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    a = IndexBuilder(spark, out, n_shards=2)
     _kill_first_call(a, "_stage_postings")
     with pytest.raises(_Crash):
         a.build_incremental(_pages(spark, 120, 190), fingerprint="k-a")
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     assert b.build_incremental(_pages(spark, 190, 400),
                                fingerprint="k-b")["gen"] == 2
-    a2 = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    a2 = IndexBuilder(spark, out, n_shards=2)
     assert a2.build_incremental(_pages(spark, 120, 190),
                                 fingerprint="k-a")["gen"] == 1
     assert a2.committed_generations() == [0, 1, 2]
@@ -896,7 +894,7 @@ def test_term_stats_fold_is_exact_and_spark_free(spark, tmp_path):
         builder._stage_term_stats = stage
 
     out = f"{tmp_path}/fold_idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=100)
+    b = IndexBuilder(spark, out, n_shards=2)
     jobs: list = []
     counting(b, jobs)
     m = b.build(pages_df(spark, 150, partitions=2), fingerprint="f0")
@@ -925,56 +923,9 @@ def test_term_stats_fold_is_exact_and_spark_free(spark, tmp_path):
         == _norm(_oracle(spark, out).search(q, k=10))
 
     out2 = f"{tmp_path}/fold_docs_idx"
-    b2 = IndexBuilder(spark, out2, n_shards=2, salt_threshold=100)
+    b2 = IndexBuilder(spark, out2, n_shards=2)
     counting(b2, jobs)
     b2.build_docs(extract_docs(pages_df(spark, 90, partitions=2)),
                   fingerprint="fd")
     _assert_term_stats_exact(spark, out2)
     assert len(jobs) == 6 and jobs == [[]] * 6
-
-
-def test_small_wave_skips_salt_sample(spark, tmp_path):
-    """A wave of at most salt_threshold pages cannot hold a term with df
-    above the threshold (df <= docs <= pages), so it plans no salts
-    without sampling — and packs the same postings rows as that wave
-    built with a sampled salt plan. A larger wave still samples."""
-    def postings_rows(out, gen):
-        rows = (
-            spark.read.parquet(f"{out}/postings/gen={gen}")
-            .select("shard", "field", "term", "df", "postings", "skips",
-                    "blockmax")
-            .collect()
-        )
-        return sorted(tuple(r) for r in rows)
-
-    def refuse(*args, **kw):
-        raise AssertionError("salt sample ran for a small wave")
-
-    base = pages_df(spark, 150, partitions=2)
-    wave = pages_df(spark, 200, partitions=2)  # 50 new pages
-    skip_out = f"{tmp_path}/salt_skip"
-    b = IndexBuilder(spark, skip_out, n_shards=2, salt_threshold=100)
-    m0 = b.build(base, fingerprint="s0")
-    assert m0["salt_plan"] == "sampled"  # 150 pages > 100
-    b._salt_plan_from_docs = refuse
-    b._salt_plan = refuse
-    m = b.build_incremental(wave, fingerprint="s1")
-    assert m["pages_in"] <= b.salt_threshold
-    assert m["salt_plan"] == "skipped"
-
-    sampled_out = f"{tmp_path}/salt_sampled"
-    b2 = IndexBuilder(spark, sampled_out, n_shards=2, salt_threshold=100)
-    b2.build(base, fingerprint="s0")
-    b2.salt_threshold = 20  # the same 50-page wave now samples (and salts)
-    plans = []
-    orig = b2._salt_plan_from_docs
-
-    def spy(docs):
-        plans.append(orig(docs))
-        return plans[-1]
-
-    b2._salt_plan_from_docs = spy
-    m2 = b2.build_incremental(wave, fingerprint="s1")
-    assert m2["salt_plan"] == "sampled" and len(plans) == 1
-    assert postings_rows(skip_out, m["gen"]) \
-        == postings_rows(sampled_out, m2["gen"])

@@ -1,5 +1,6 @@
 """Spark integration: end-to-end index build + BM25 rank identity vs the
-brute-force oracle, WAND/exhaustive equivalence, salting, and resume."""
+brute-force oracle, WAND/exhaustive equivalence, head-term packing, and
+resume."""
 
 import numpy as np
 import pytest
@@ -20,7 +21,7 @@ def index_dir(spark, work_dir):
     out = f"{work_dir}/idx"
     pages = pages_df(spark, N_DOCS, partitions=8)
     builder = IndexBuilder(
-        spark, out, n_shards=4, salt_threshold=100, shard_concurrency=2
+        spark, out, n_shards=4, shard_concurrency=2
     )
     metrics = builder.build(pages, fingerprint=FP)
     assert metrics["postings_built"] > 0
@@ -148,7 +149,7 @@ def test_chunk_text_third_field(spark, tmp_path):
     matches the query must gain score from it."""
     out = f"{tmp_path}/chunk_idx"
     pages = pages_df(spark, 200, partitions=4)
-    builder = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    builder = IndexBuilder(spark, out, n_shards=2)
     # build docs first, then re-index with a synthetic chunk column:
     # chunk_text = first 120 chars of content for even doc_ids
     builder.build(pages, fingerprint="chunk-base")
@@ -158,7 +159,7 @@ def test_chunk_text_third_field(spark, tmp_path):
         F.when(F.col("doc_id") % 2 == 0, F.substring("text", 1, 120)),
     )
     out2 = f"{tmp_path}/chunk_idx2"
-    b2 = IndexBuilder(spark, out2, n_shards=2, salt_threshold=10**9)
+    b2 = IndexBuilder(spark, out2, n_shards=2)
     # pre-parsed docs keep their chunk_text column through the build
     b2.build_docs(with_chunks, "fp2")
 
@@ -195,18 +196,15 @@ def test_filtered_search_returns_k_in_category(spark, index_dir):
     assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
 
 
-def test_salting_was_exercised(spark, index_dir, work_dir):
-    """Rows mode with salt_threshold=100 must salt the Zipf head terms —
-    verify heavy terms exist, no duplicate rows leak, and the explicit
-    rows-mode index ranks identically to the default-mode index fixture
-    (auto → rows on this local master)."""
-    out2 = f"{work_dir}/idx_rows"
-    rows_builder = IndexBuilder(
+def test_head_terms_pack_one_unsalted_row(spark, index_dir, work_dir):
+    """At salt_threshold=100 (accepted and ignored; the value once salted
+    the Zipf head) a 4-shard build packs terms with df above 100 into
+    exactly one postings row per (shard, field, term), salt always 0, and
+    ranks identically to the fixture index."""
+    out2 = f"{work_dir}/idx_head"
+    IndexBuilder(
         spark, out2, n_shards=4, salt_threshold=100, shard_concurrency=2,
-    )
-    assert rows_builder.shuffle_mode == "rows"
-    rows_builder.build(pages_df(spark, N_DOCS, partitions=8),
-                       fingerprint=f"{FP}-rows")
+    ).build(pages_df(spark, N_DOCS, partitions=8), fingerprint=f"{FP}-head")
     e1 = SearchEngine(spark, index_dir)
     e2 = SearchEngine(spark, out2)
     for q in make_query_set()[:4]:
@@ -216,10 +214,9 @@ def test_salting_was_exercised(spark, index_dir, work_dir):
     from tests.conftest import snapshot_stats
     ts = snapshot_stats(spark, out2).df
     heavy = ts.filter(F.col("df") > 100).count()
-    assert heavy > 0, "corpus should have Zipf-head terms above threshold"
-    post = spark.read.parquet(f"{out2}/postings")
-    # one merged row per (field, term) per shard — salting never leaks
-    # duplicate rows into the final index
+    assert heavy > 0, "corpus should have Zipf-head terms above 100 docs"
+    post = read_committed(spark, out2, "postings")
+    assert post.filter(F.col("salt") != 0).isEmpty()
     dup = (
         post.groupBy("shard", "field", "term")
         .count()
@@ -231,7 +228,7 @@ def test_salting_was_exercised(spark, index_dir, work_dir):
 
 def test_postings_df_matches_term_stats(spark, index_dir):
     """Σ per-shard df == global df from term_stats for every term."""
-    post = spark.read.parquet(f"{index_dir}/postings")
+    post = read_committed(spark, index_dir, "postings")
     from tests.conftest import snapshot_stats
     ts = snapshot_stats(spark, index_dir).df
     agg = post.groupBy("field", "term").agg(F.sum("df").alias("df_sum"))
@@ -249,7 +246,7 @@ def test_postings_df_matches_term_stats(spark, index_dir):
 def test_resume_skips_completed(spark, index_dir, work_dir):
     """Re-running the build with the same fingerprint skips every stage."""
     builder = IndexBuilder(
-        spark, index_dir, n_shards=4, salt_threshold=100, shard_concurrency=2
+        spark, index_dir, n_shards=4, shard_concurrency=2
     )
     pages = pages_df(spark, N_DOCS, partitions=8)
     m2 = builder.build(pages, fingerprint=FP)
@@ -269,7 +266,7 @@ def test_partial_resume_rebuilds_only_missing(spark, index_dir, oracle):
     spark.createDataFrame(kept, df.schema).write.mode("overwrite").parquet(ledger_path)
 
     builder = IndexBuilder(
-        spark, index_dir, n_shards=4, salt_threshold=100, shard_concurrency=2
+        spark, index_dir, n_shards=4, shard_concurrency=2
     )
     pages = pages_df(spark, N_DOCS, partitions=8)
     m = builder.build(pages, fingerprint=FP)
@@ -335,7 +332,7 @@ def test_extended_identity_survives_compaction(spark, tmp_path):
     from baram_spark.corpus import make_query_set_extended
 
     out = f"{tmp_path}/cmp_idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 300, partitions=4), fingerprint="ext-cmp")
     first = SearchEngine(spark, out)
     victims = [d for d, _ in first.search(
@@ -408,7 +405,7 @@ def test_empty_snapshot_opens_after_vacuum(spark, tmp_path):
     from baram_spark.index.builder import IndexBuilder
 
     out = f"{tmp_path}/empty_idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 60, partitions=2), fingerprint="empty")
     all_ids = [int(r["doc_id"]) for r in
                spark.read.parquet(f"{out}/docs").select("doc_id").collect()]

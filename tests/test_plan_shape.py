@@ -41,64 +41,85 @@ def doc_terms(spark):
     return tokenize_docs(docs).withColumn("shard", shard_expr(4))
 
 
-def test_blob_mode_postings_is_one_shuffle(spark, doc_terms):
-    """Default strategy: map-side packing means the ONLY exchange is the
-    blob-level merge — regardless of skew (no salt machinery needed)."""
-    out = build_postings(
-        spark, doc_terms, {"title": 5.0, "content": 130.0}, salt_plan={},
-        out_partitions=8,
-    )
-    assert _n_shuffles(out) == 1, _plan(out, "simple")
-
-
 def test_rows_unsalted_postings_is_one_shuffle(spark, doc_terms):
-    out = build_postings(
-        spark, doc_terms, {"title": 5.0, "content": 130.0}, salt_plan={},
-        out_partitions=8, row_shuffle=True,
-    )
-    assert _n_shuffles(out) == 1, _plan(out, "simple")
-
-
-def test_rows_salted_postings_is_two_shuffles_plus_broadcast(spark, doc_terms):
-    out = build_postings(
-        spark, doc_terms, {"title": 5.0, "content": 130.0},
-        salt_plan={("content", "the"): 4}, out_partitions=8, row_shuffle=True,
-    )
-    assert _n_shuffles(out) == 2, _plan(out, "simple")
+    """Every build packs unsalted rows behind ONE exchange keyed
+    (shard, term) — no salt-plan broadcast, no merge exchange."""
+    out = build_postings(doc_terms, {"title": 5.0, "content": 130.0}, 8)
     plan = _plan(out, "simple")
-    # the salt plan joins broadcast, never shuffled
-    assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan, plan
+    assert _n_shuffles(out) == 1, plan
+    assert "Broadcast" not in plan, plan
 
 
+@pytest.mark.parametrize("chunk_rows", [None, 16])
 @pytest.mark.parametrize("codec", [CODEC_VARINT, CODEC_FOR, CODEC_PFOR])
-def test_blob_and_row_strategies_byte_identical(spark, doc_terms, codec):
-    """The two physical strategies must produce the SAME index: one row per
-    (shard, field, term), identical df and identical packed bytes — in
-    every codec."""
+def test_build_postings_matches_pack_runs(spark, doc_terms, monkeypatch,
+                                          codec, chunk_rows):
+    """build_postings emits one row per (shard, field, term), salt 0, with
+    the df and packed bytes of _pack_runs (one encode_postings call per
+    doc_id-sorted group) — in every codec. At the default PACK_CHUNK_ROWS
+    a task packs its partition in one chunk; with 16 (and 8-row Arrow
+    batches, so a chunk holds 16-23 rows) a head term's rows span chunks
+    inside one task and go through merge_chunks."""
+    from baram_spark.index import build
+
     avgdl = {"title": 5.0, "content": 130.0}
-    blob = build_postings(spark, doc_terms, avgdl, salt_plan={},
-                          codec=codec, out_partitions=4).collect()
-    rows = build_postings(spark, doc_terms, avgdl,
-                          salt_plan={("content", "the"): 4}, codec=codec,
-                          out_partitions=4, row_shuffle=True).collect()
+    if chunk_rows is not None:
+        monkeypatch.setattr(build, "PACK_CHUNK_ROWS", chunk_rows)
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "8")
+    try:
+        got = build_postings(doc_terms, avgdl, 4, codec=codec).collect()
+    finally:
+        if chunk_rows is not None:
+            spark.conf.set(key, prev)
+    keyed = {
+        (r["shard"], r["field"], r["term"], r["salt"]): (
+            r["df"], bytes(r["postings"]), bytes(r["skips"]),
+            bytes(r["blockmax"]))
+        for r in got
+    }
+    assert len(keyed) == len(got)  # no duplicate groups
+    pdf = (doc_terms.select("doc_id", "field", "term", "tf", "dl", "shard")
+           .toPandas().assign(salt=0)
+           .sort_values(["shard", "field", "term", "salt", "doc_id"],
+                        kind="stable"))
+    assert keyed == _pack_runs(pdf, avgdl, codec)
+    if chunk_rows is not None:
+        # a group larger than the largest chunk cannot fit in one
+        assert max(df for df, *_ in keyed.values()) > chunk_rows + 7
 
-    def key(rs):
-        return {
-            (r["shard"], r["field"], r["term"]): (
-                r["df"], bytes(r["postings"]), bytes(r["skips"]),
-                bytes(r["blockmax"]),
-            )
-            for r in rs
-        }
 
-    kb, kr = key(blob), key(rows)
-    assert len(kb) == len(blob) and len(kr) == len(rows)  # no dup terms
-    assert kb == kr
+def test_build_starts_no_salt_sample_job(spark, tmp_path):
+    """salt_threshold is accepted and ignored: a 150-page build at 100 (a
+    value that once ran a 5% salt-sample job) starts exactly the Spark
+    jobs of the same build without it, in total and in its postings
+    stage."""
+    from tests.conftest import spark_jobs
+
+    def build(name, **kw):
+        b = IndexBuilder(spark, f"{tmp_path}/{name}", n_shards=2, **kw)
+        post = []
+        orig = b._stage_postings
+
+        def stage(*args, **kws):
+            with spark_jobs(spark) as started:
+                orig(*args, **kws)
+            post.extend(started)
+
+        b._stage_postings = stage
+        with spark_jobs(spark) as jobs:
+            m = b.build(pages_df(spark, 150, partitions=2), fingerprint="j")
+        return len(jobs), len(post), len(m["postings_partitions"])
+
+    total, post, groups = build("kw", salt_threshold=100)
+    assert (total, post, groups) == build("ref")
+    assert groups == 2 and 0 < post < total
 
 
 def test_postings_lookup_pushes_term_filter(spark, tmp_path):
     out = f"{tmp_path}/plan_idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 120, partitions=4), fingerprint="plan")
     from baram_spark.query.engine import SearchEngine
 
@@ -116,7 +137,7 @@ def test_postings_lookup_pushes_term_filter(spark, tmp_path):
 
 def test_filtered_docs_scan_pushes_category(spark, tmp_path):
     out = f"{tmp_path}/plan_idx2"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 120, partitions=4), fingerprint="plan2")
     from baram_spark.query.engine import SearchEngine
 
@@ -140,25 +161,6 @@ def test_exact_dedup_has_partial_aggregate(spark):
     # map-side combine: partial HashAggregate before the exchange
     assert plan.count("HashAggregate") >= 2, plan
     assert _n_shuffles(exact_dedup(docs)) == 1, plan
-
-
-def test_resolve_shuffle_mode():
-    """rows on a single-box local master (shuffle never crosses a
-    network), blob on any cluster master."""
-    from baram_spark.index.build import resolve_shuffle_mode
-
-    assert resolve_shuffle_mode("local[32]") == "rows"
-    assert resolve_shuffle_mode("local[*]") == "rows"
-    for cluster in ("yarn", "spark://host:7077", "k8s://https://api:6443"):
-        assert resolve_shuffle_mode(cluster) == "blob"
-    assert resolve_shuffle_mode(None) == "blob"
-
-
-def test_builder_resolves_auto_mode(spark, tmp_path):
-    """On the test session's local master the builder must land on rows
-    (and expose the resolved mode)."""
-    b = IndexBuilder(spark, str(tmp_path / "mode_probe"), n_shards=2)
-    assert b.shuffle_mode == "rows"
 
 
 def _pack_runs(pdf, avgdl_by_field: dict, codec: int) -> dict:
@@ -418,7 +420,7 @@ def test_row_sized_postings_partitions_keep_blobs_and_ledger(
 
     def build(name):
         out = f"{tmp_path}/{name}"
-        b = IndexBuilder(spark, out, n_shards=4, salt_threshold=10**9)
+        b = IndexBuilder(spark, out, n_shards=4)
         m = b.build(pages_df(spark, 200, partitions=4), fingerprint="fp")
         blobs = sorted(
             (r["shard"], r["field"], r["term"], r["df"], bytes(r["postings"]),

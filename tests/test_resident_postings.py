@@ -24,7 +24,7 @@ def test_preloaded_queries_decode_no_blob(spark, tmp_path, monkeypatch):
     match more documents than k — and the answers equal the engine's
     blob-decoding distributed path."""
     out = f"{tmp_path}/idx"
-    b = IndexBuilder(spark, out, n_shards=3, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=3,
                      build_embeddings=True)
     pages = pages_df(spark, 260, partitions=2)
     aid = F.substring_index("url", "/", -1).cast("long")

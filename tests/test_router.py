@@ -23,13 +23,14 @@ from baram_spark.serving import (
     make_server,
     serve_forever_in_thread,
 )
+from tests.conftest import read_committed
 
 
 @pytest.fixture(scope="module")
 def topology(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("router")
     full = f"{root}/full"
-    b = IndexBuilder(spark, full, n_shards=4, salt_threshold=10**9,
+    b = IndexBuilder(spark, full, n_shards=4,
                      build_embeddings=True)
     b.build(pages_df(spark, 400, partitions=4), fingerprint="router-test")
 
@@ -301,11 +302,11 @@ def test_split_counts_only_committed_embeddings(spark, tmp_path):
     import os
 
     out = f"{tmp_path}/emptied"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=2,
                      build_embeddings=True)
     b.build(pages_df(spark, 60, partitions=2), fingerprint="e0")
     b.delete_docs([int(r["doc_id"]) for r in
-                   spark.read.parquet(f"{out}/docs").collect()])
+                   read_committed(spark, out, "docs").collect()])
     b.compact()
     assert b.committed_generations() == []
     assert os.path.isdir(f"{out}/embeddings/gen=0")

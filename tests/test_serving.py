@@ -17,7 +17,7 @@ from baram_spark.serving import ServingContext, make_server, serve_forever_in_th
 @pytest.fixture(scope="module")
 def server(spark, tmp_path_factory):
     out = f"{tmp_path_factory.mktemp('serve')}/idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=2,
                      build_embeddings=True)
     b.build(pages_df(spark, 300, partitions=4), fingerprint="serve-test")
     ctx = ServingContext(spark, out)
@@ -105,7 +105,7 @@ def test_refresh_picks_up_new_generation(spark, server):
     base, out = server
     code, before = _get(f"{base}/api/health")
     n_before = before["document_count"]
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=2,
                      build_embeddings=True)
     b.build_incremental(pages_df(spark, 380, partitions=4),
                         fingerprint="serve-wave2")
@@ -157,7 +157,7 @@ def test_refresh_via_post_and_compaction_drops_vectors(spark, server):
     victim = body["results"][0]["id"]
     oid, aid = victim.split("_")
 
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=2,
                      build_embeddings=True)
     n = b.delete_by_query(f"oid = '{oid}' AND aid = '{aid}'")
     assert n == 1
@@ -367,7 +367,7 @@ def test_snapshot_refuses_null_embedding_rows(spark, tmp_path):
     import pyarrow.parquet as pq
 
     out = f"{tmp_path}/idx"
-    b = IndexBuilder(spark, out, n_shards=1, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=1,
                      build_embeddings=True)
     b.build(pages_df(spark, 20, partitions=2), fingerprint="null-emb")
     ServingContext(spark, out)  # clean load works

@@ -41,7 +41,7 @@ fake_model = _make_fake_model(DIM)
 @pytest.fixture(scope="module")
 def emb_index(spark, tmp_path_factory):
     out = f"{tmp_path_factory.mktemp('ivf_srv')}/idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=2,
                      build_embeddings=True, embed_fn=fake_model)
     b.build(pages_df(spark, N, partitions=4), fingerprint="ivf-serve")
     return out

@@ -9,7 +9,7 @@ from baram_spark.index import fs
 from baram_spark.index.builder import IndexBuilder
 from baram_spark.query.engine import SearchEngine
 from baram_spark.serving import ServingContext
-from tests.conftest import spark_jobs
+from tests.conftest import read_committed, spark_jobs
 
 
 def _pages(spark, lo: int, hi: int):
@@ -44,7 +44,7 @@ def test_refresh_matches_fresh_open_through_index_lifecycle(spark, tmp_path):
     by identity, retired ones leave the resident state, and neither the
     refresh nor a preloaded open starts a Spark job."""
     out = f"{tmp_path}/idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=2,
                      build_embeddings=True)
     b.build(_pages(spark, 0, 120), fingerprint="base")
     ctx = ServingContext(spark, out)
@@ -101,14 +101,14 @@ def test_refresh_after_gen_number_reuse_drops_stale_blobs(spark, tmp_path):
     generation-0 postings after refresh: reuse is keyed on the part-file
     listing, not on the generation number."""
     out = f"{tmp_path}/idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9,
+    b = IndexBuilder(spark, out, n_shards=2,
                      build_embeddings=True)
     b.build(_pages(spark, 0, 60), fingerprint="old")
     ctx = ServingContext(spark, out)
     old_gen0 = ctx.engine._resident[0]
 
     ids = [int(r["doc_id"]) for r in
-           spark.read.parquet(f"{out}/docs").select("doc_id").collect()]
+           read_committed(spark, out, "docs").select("doc_id").collect()]
     b.delete_docs(ids)
     assert b.compact()["new_gens"] == []
     b.vacuum(retain_snapshots=1)
@@ -135,7 +135,7 @@ def test_queries_racing_refreshes_see_whole_snapshots(spark, tmp_path):
     import threading
 
     out = f"{tmp_path}/idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(_pages(spark, 0, 80), fingerprint="r")
     b.build_incremental(_pages(spark, 80, 120), fingerprint="r1")
     ctx = ServingContext(spark, out)
@@ -174,7 +174,7 @@ def test_queries_racing_refreshes_see_whole_snapshots(spark, tmp_path):
 
 def test_preloaded_engine_open_starts_no_spark_job(spark, tmp_path):
     out = f"{tmp_path}/idx"
-    IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9).build(
+    IndexBuilder(spark, out, n_shards=2).build(
         _pages(spark, 0, 60), fingerprint="p")
     q = make_query_set()[0]["query_text"]
     with spark_jobs(spark) as jobs:

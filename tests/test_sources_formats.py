@@ -241,7 +241,7 @@ def test_builder_bloom_skips_and_routes(spark, tmp_path):
     from baram_spark.operators.bloom import CommittedUrlBloom
 
     out = f"{tmp_path}/bloom_idx"
-    b = IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9)
+    b = IndexBuilder(spark, out, n_shards=2)
     b.build(pages_df(spark, 100, partitions=2), fingerprint="b0")
 
     committed_urls = spark.read.parquet(f"{out}/docs").select("url")
@@ -290,10 +290,10 @@ def test_stream_build_with_bloom_prefilter(spark, tmp_path):
     idx = str(tmp_path / "sidx")
     ck = str(tmp_path / "ck")
     pages_df(spark, 120, partitions=2).write.mode("append").parquet(pages_dir)
-    stream_build(spark, pages_dir, idx, ck, n_shards=2, salt_threshold=100,
+    stream_build(spark, pages_dir, idx, ck, n_shards=2,
                  bloom_prefilter=True)
     pages_df(spark, 200, partitions=2).write.mode("append").parquet(pages_dir)
-    stream_build(spark, pages_dir, idx, ck, n_shards=2, salt_threshold=100,
+    stream_build(spark, pages_dir, idx, ck, n_shards=2,
                  bloom_prefilter=True)
     docs = spark.read.parquet(f"{idx}/docs")
     assert docs.count() == docs.select("url").distinct().count()
@@ -408,7 +408,7 @@ def test_build_docs_preserves_chunk_text(spark, tmp_path):
         "chunk_text", F.substring("text", 1, 40)
     )
     out = f"{tmp_path}/chunk_docs_idx"
-    IndexBuilder(spark, out, n_shards=2, salt_threshold=10**9).build_docs(
+    IndexBuilder(spark, out, n_shards=2).build_docs(
         docs, fingerprint="ck"
     )
     table = spark.read.parquet(f"{out}/docs")
