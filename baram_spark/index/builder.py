@@ -18,10 +18,13 @@ Fresh build = generation 0. ``build_incremental`` appends a new generation:
 new pages are prefiltered by ``warc_ts`` (the reference's ``--since`` mtime
 filter, ``src/commands/index.rs:115-158``) and anti-joined against already-
 indexed urls (the checkpoint/dedup prefilter, ``index.rs:160-175`` +
-``storage/dedup.rs:856-970``). Each document lives in exactly one
-generation, so a query scores every generation's postings independently and
-exactly; only the block-max BOUNDS need a safety factor when the global
-avgdl has grown since a generation was packed (see query/engine.py).
+``storage/dedup.rs:856-970``). Every build keys pages by their canonical
+url (``sources.urls.CANONICAL``), as the doc_id is keyed by (oid, aid), so
+a legacy variant of a committed url is deduped too. Each document lives in
+exactly one generation, so a query scores every generation's postings
+independently and exactly; only the block-max BOUNDS need a safety factor
+when the global avgdl has grown since a generation was packed (see
+query/engine.py).
 
 A generation writes its own gen_meta and term_stats once and never
 rewrites them, as a Lucene segment carries its own statistics. The
@@ -43,12 +46,14 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .build import (
     CODEC_VARINT,
+    DOC_TERMS_SCHEMA,
     INDEX_FIELDS,
     build_postings,
     extract_docs,
     shard_expr,
     tokenize_docs,
 )
+from ..sources.urls import with_canonical_url
 from . import fs
 from .fs import spark_url as _sp
 from .lineage import LineageLedger, StageTimer
@@ -627,8 +632,11 @@ class IndexBuilder:
                 return 0, 0
             n_parts = postings_partitions(
                 sum(rows_by_shard.get(k, 0) for k in present), len(shard_ids))
+            # the schema is known: inferring it would start a footer-read
+            # job per group before the write
             shard_terms = (
-                self.spark.read.option("basePath", _sp(gen_doc_terms))
+                self.spark.read.schema(f"{DOC_TERMS_SCHEMA}, shard int")
+                .option("basePath", _sp(gen_doc_terms))
                 .parquet(*[_sp(f"{gen_doc_terms}/shard={k}")
                            for k in present])
             )
@@ -922,7 +930,8 @@ class IndexBuilder:
                          "resumed_stages": []}
         others = [g for g in self.committed_generations() if g != 0]
         self._stage_extract_tokenize(
-            pages, 0, "docs", "doc_terms", fingerprint, done, metrics, others
+            with_canonical_url(pages), 0, "docs", "doc_terms", fingerprint,
+            done, metrics, others,
         )
         self._stage_postings(0, "postings", fingerprint, done, metrics)
         self._stage_term_stats("term_stats", fingerprint, done, metrics, [0])
@@ -1097,6 +1106,9 @@ class IndexBuilder:
                          "resumed_stages": []}
         if since is not None:
             pages = pages.filter(F.col("warc_ts") >= F.lit(since))
+        # committed urls are canonical: a legacy or tracking-suffixed
+        # variant of one is the same (oid, aid), so the same doc_id
+        pages = with_canonical_url(pages)
         if gen > 0 and committed_before:
             skip_dedup = False
             if bloom is not None and getattr(bloom, "authoritative", True):

@@ -15,14 +15,23 @@ Query lifecycle (the Spark-native analog of ``baram search`` →
    is DOCUMENT-sharded (every doc lives in exactly one shard, the
    OpenSearch/Lucene shard model), so each shard holds all query terms for
    its doc subset and can compute exact local BM25 scores.
-4. ``mode="distributed"``: per-shard block-max-WAND top-k inside an
-   Arrow-batched ``applyInPandas``, each looked-up posting list decoded
-   from its blobs into a ``wand.TermPostings``. ``mode="local"``: the
-   same WAND on the driver over the resident generations
-   (``_GenPostings``, each decoded once when it loads), so a query
-   gathers blocks and decodes nothing.
-5. global k-merge of the per-shard top-k lists (k·n_shards rows — O(k)
-   driver work), deterministic tie-break (score desc, doc_id asc).
+4. per-segment scoring (``wand.score_segments``). A segment is one
+   (generation, shard) pair: docs are disjoint across them, so each one's
+   top-k is complete alone, the way Lucene searches each segment on its
+   own. Segments are visited in descending bound order (Σ weight × each
+   list's largest block-max) and share one threshold θ, the k-th best
+   score so far (never below ``min_score``): θ seeds each segment's
+   block-max-WAND ``min_score``, and the first segment whose bound is
+   below θ ends the query with its lists never built.
+   ``mode="distributed"``: the same loop inside each shard's Arrow-batched
+   ``applyInPandas`` task over its generations, a scored list decoded from
+   its blobs into a ``wand.TermPostings``. ``mode="local"``: the loop on
+   the driver over every (gen, shard) of the resident generations
+   (``_GenPostings``, each decoded once when it loads), so a query gathers
+   blocks and decodes nothing.
+5. global k-merge of the per-segment top-k lists (at most k·n_shards rows
+   in distributed mode — O(k) driver work), deterministic tie-break
+   (score desc, doc_id asc).
 
 Filters from SearchConfig (category / date range / min_score,
 ``src/embedding/mod.rs:135-175``) apply on the doc-join projection step.
@@ -30,6 +39,7 @@ Filters from SearchConfig (category / date range / min_score,
 
 from __future__ import annotations
 
+import functools
 import logging
 
 import pandas as pd
@@ -38,11 +48,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 import numpy as np
 
 from ..index import fs
-from ..index.codec import decode_generation
+from ..index.codec import decode_blockmax, decode_generation
 from ..index.fs import spark_url as _sp
 from ..textproc.analyzer import analyze_search
 from .bm25 import DEFAULT_K, FIELD_BOOSTS, FIELDS, idf
-from .wand import TermPostings, score_blockmax, score_exhaustive
+from .wand import (
+    TermPostings,
+    merge_topk,
+    score_blockmax,
+    score_exhaustive,
+    score_segments,
+)
 
 MAX_K = 100  # REST cap, src/commands/serve.rs:426
 
@@ -101,21 +117,24 @@ class _GenPostings:
     """One generation's postings, decoded once when it loads and resident
     on the driver: ``cols`` holds every posting list of the generation as
     flat CSR arrays (``codec.decode_generation``) and
-    ``lists[(field, term)] = [(shard, row), ...]`` indexes them. The
-    compressed blobs are not kept. ``df[(field, term)]`` is the
-    generation's own term_stats (``stats``: its dir) — global over all
-    shards, so a split node's idf stays global.
+    ``lists[(field, term)] = [(shard, row), ...]`` indexes them.
+    ``list_max[row]`` is list ``row``'s largest block-max, its segment
+    bound before weight and bound factor. The compressed blobs are not
+    kept. ``df[(field, term)]`` is the generation's own term_stats
+    (``stats``: its dir) — global over all shards, so a split node's idf
+    stays global.
 
     Immutable once loaded, so consecutive snapshots of a serving node
     share it: a refresh loads only generations it does not already hold.
     ``files`` is the part-file listing it was read from — the reuse key."""
 
-    __slots__ = ("files", "lists", "cols", "df")
+    __slots__ = ("files", "lists", "cols", "list_max", "df")
 
     def __init__(self, d: str, files: tuple, stats: str):
         self.files = files
         self.lists: dict = {}
         self.cols = None
+        self.list_max = None
         ts = fs.read_parquet(stats, columns=["field", "term", "df"])
         self.df = dict(zip(zip(ts["field"].to_pylist(),
                                ts["term"].to_pylist()),
@@ -124,13 +143,27 @@ class _GenPostings:
             return
         tbl = _read_parts(d, files, ["field", "term", "postings", "skips",
                                      "blockmax", "shard"])
-        self.cols = decode_generation(tbl["postings"], tbl["skips"],
-                                      tbl["blockmax"])
+        cols = self.cols = decode_generation(tbl["postings"], tbl["skips"],
+                                             tbl["blockmax"])
+        # a zero-block list bounds nothing; reduceat over the starts of
+        # the others covers exactly each one's blocks
+        starts = cols.block_offsets[:-1]
+        has_blocks = np.diff(cols.block_offsets) > 0
+        self.list_max = np.zeros(starts.size, dtype=np.float64)
+        if has_blocks.any():
+            self.list_max[has_blocks] = np.maximum.reduceat(
+                cols.block_max, starts[has_blocks])
         shards = tbl["shard"].to_pylist()
         lists = self.lists
         for row, key in enumerate(zip(tbl["field"].to_pylist(),
                                       tbl["term"].to_pylist())):
             lists.setdefault(key, []).append((int(shards[row]), row))
+
+    def term_postings(self, row: int, field: str, term: str, weight: float,
+                      avgdl: float, bound_factor: float) -> TermPostings:
+        """List ``row`` as a :class:`TermPostings` over views of ``cols``."""
+        return TermPostings(field, term, weight,
+                            *self.cols.list_arrays(row), avgdl, bound_factor)
 
 
 class SearchEngine:
@@ -502,32 +535,30 @@ class SearchEngine:
                     s: np.sort(np.asarray(ids, dtype=np.int64))
                     for s, ids in tmp.items()
                 }
-            # weights from the resident df dictionary and TermPostings over
-            # the resident generations' decoded arrays — zero Spark jobs,
-            # nothing decoded per query
+            # weights from the resident df dictionary; each (gen, shard)
+            # segment's lists are views into its generation's decoded
+            # arrays, built only if the segment is scored — zero Spark
+            # jobs, nothing decoded per query
             resident = self._load_resident()
             weights = self._weights(terms)
-            by_shard: dict[int, list] = {}
+            by_segment: dict[tuple[int, int], list] = {}
             for (field, term), w in weights.items():
                 for gen, gp in resident.items():
                     bf = self._bound_factor[(gen, field)]
                     for shard, row in gp.lists.get((field, term), ()):
-                        by_shard.setdefault(shard, []).append(
-                            TermPostings(field, term, w,
-                                         *gp.cols.list_arrays(row),
-                                         avgdls[field], bf))
-            if not weights:
-                return []
-            partials = []
-            for shard, shard_terms in by_shard.items():
+                        by_segment.setdefault((gen, shard), []).append((
+                            field, term, w, float(gp.list_max[row]) * bf,
+                            functools.partial(gp.term_postings, row, field,
+                                              term, w, avgdls[field], bf)))
+            segments = []
+            for (_gen, shard), lists in by_segment.items():
                 allowed = allowed_flat
                 if allowed is None and allowed_by_shard is not None:
                     allowed = allowed_by_shard.get(shard)
                     if allowed is None:
                         continue  # no doc in this shard passes the filter
-                partials.extend(scorer(shard_terms, k, min_score,
-                                       allowed=allowed, denied=denied))
-            return _merge_topk(partials, k)
+                segments.append((lists, allowed))
+            return score_segments(segments, k, scorer, min_score, denied)
 
         weights = self._weights(terms)
         if not weights:
@@ -540,20 +571,26 @@ class SearchEngine:
         filtered = allowed_df is not None
 
         def _score_rows(pdf: pd.DataFrame, allowed) -> pd.DataFrame:
-            tps = []
+            # one shard's rows: each generation is a segment, and a
+            # skipped segment's lists are never decoded
+            by_gen: dict[int, list] = {}
             for row in pdf.itertuples():
                 wkey = (row.field, row.term)
                 if wkey not in weights:
                     continue
-                tps.append(
-                    TermPostings.from_blobs(
-                        row.field, row.term, weights[wkey],
-                        bytes(row.postings), bytes(row.skips),
-                        bytes(row.blockmax), avgdls[row.field],
-                        bound_factor[(int(row.gen), row.field)],
-                    )
-                )
-            hits = scorer(tps, k, min_score, allowed=allowed, denied=denied)
+                bf = bound_factor[(int(row.gen), row.field)]
+                blockmax = bytes(row.blockmax)
+                bm = decode_blockmax(blockmax)
+                by_gen.setdefault(int(row.gen), []).append((
+                    row.field, row.term, weights[wkey],
+                    float(bm.max()) * bf if bm.size else 0.0,
+                    functools.partial(
+                        TermPostings.from_blobs, row.field, row.term,
+                        weights[wkey], bytes(row.postings), bytes(row.skips),
+                        blockmax, avgdls[row.field], bf)))
+            hits = score_segments([(lists, allowed)
+                                   for lists in by_gen.values()],
+                                  k, scorer, min_score, denied)
             return pd.DataFrame(
                 {
                     "doc_id": pd.Series([h[0] for h in hits], dtype="int64"),
@@ -593,7 +630,7 @@ class SearchEngine:
                 .collect()
             )
         partials = [(int(r["doc_id"]), float(r["score"])) for r in partial_rows]
-        return _merge_topk(partials, k)
+        return merge_topk(partials, k)
 
     # ------------------------------------------------------------------
     def search_df(self, query_text: str, k: int = DEFAULT_K,
@@ -654,8 +691,3 @@ class SearchEngine:
             out = out.drop("text")
         return out.orderBy("rank")
 
-
-def _merge_topk(partials: list[tuple[int, float]], k: int):
-    """Global k-merge with the canonical tie-break."""
-    partials.sort(key=lambda x: (-x[1], x[0]))
-    return partials[:k]

@@ -1,32 +1,50 @@
 """Block-max pruned top-k scoring over decoded posting lists.
 
-Implements the Block-Max WAND idea (Ding & Suel, SIGIR 2011) in a
-batch/vectorized form suited to numpy rather than doc-at-a-time pointers:
+Two levels of pruning, both exact.
+
+Across segments (:func:`score_segments`). A segment is one
+(generation, shard) pair of the index, the Lucene segment analog. Docs
+are disjoint across segments (document sharding, and a wave indexes only
+urls no committed generation holds), so each segment's top-k is complete
+on its own. A segment's bound is Σ weight × (its list's largest
+block-max) over its lists. Segments are scored in descending bound
+order, and they share one threshold θ: the k-th best score found so far,
+never below ``min_score``. θ seeds each segment scorer's ``min_score``,
+and the first segment whose bound is strictly below θ ends the query
+unscored: its lists are never built or gathered. A wave's lists span the
+whole doc-id range, so scoring segments apart keeps their bounds from
+adding up over another generation's blocks.
+
+Within a segment, the Block-Max WAND idea (Ding & Suel, SIGIR 2011) in a
+batch/vectorized form suited to numpy rather than doc-at-a-time pointers
+(:func:`score_blockmax`):
 
 1. Without touching any posting, every term contributes per-block doc-id
    intervals (from its block table) with score upper bounds
    ``weight * blockmax``.
 2. Interval sweep: block boundaries from ALL terms split doc-id space into
-   segments; each segment's upper bound is the sum of the covering blocks'
+   ranges; each range's upper bound is the sum of the covering blocks'
    bounds — the WAND pivot bound, evaluated for a whole doc-id range at once.
-3. Segments are scored exactly in descending upper-bound order (gathering
+3. Ranges are scored exactly in descending upper-bound order (gathering
    only the blocks that overlap them out of the decoded arrays and scoring
-   those postings); once every remaining segment's bound is strictly below
+   those postings); once every remaining range's bound is strictly below
    the running top-k threshold θ, the rest are skipped.
 
 Posting lists arrive decoded (see :class:`TermPostings`): on a serving
 node each generation is decoded once when it loads, so a query only
 gathers and scores — it never decodes a blob.
 
-The skip is provably safe (a doc's true score ≤ its segment's bound, and
-segments with bound == θ are still scored so doc-id tie-breaks stay exact),
-so results are rank- AND score-identical to the exhaustive scorer —
-asserted by tests against both the exhaustive path and the brute-force
-oracle.
+Every skip is provably safe (a doc's true score ≤ its range's and its
+segment's bound, and a bound equal to θ is still scored so doc-id
+tie-breaks stay exact), so results are rank- AND score-identical to the
+exhaustive scorer — asserted by tests against both the exhaustive path
+and the brute-force oracle.
 
 Scoring accumulates float64 contributions in the canonical order
 (title terms sorted, then content terms sorted) so scores are bit-identical
-to the oracle (float addition order pinned).
+to the oracle (float addition order pinned). Bounds are summed in the same
+order: float addition is monotone, so a rounded bound stays ≥ every
+rounded score it covers.
 """
 
 from __future__ import annotations
@@ -108,9 +126,11 @@ class TermPostings:
         return ids, self.weight * bm25_tf_norm(tfs, dls, self.avgdl, K1, B)
 
 
+_FIELD_RANK = {f: i for i, f in enumerate(FIELDS)}
+
+
 def _canonical_order(terms: list) -> list:
-    field_rank = {f: i for i, f in enumerate(FIELDS)}
-    return sorted(terms, key=lambda t: (field_rank[t.field], t.term))
+    return sorted(terms, key=lambda t: (_FIELD_RANK[t.field], t.term))
 
 
 def _topk(uniq_ids: np.ndarray, scores: np.ndarray, k: int,
@@ -310,3 +330,54 @@ def score_blockmax(terms: list, k: int, min_score: float | None = None,
                     theta = max(theta,
                                 -np.partition(-heap_scores, k - 1)[k - 1])
     return _topk(heap_ids, heap_scores, k, min_score)
+
+
+def merge_topk(hits: list[tuple[int, float]], k: int):
+    """Global k-merge with the canonical tie-break (score desc, doc_id
+    asc)."""
+    return sorted(hits, key=lambda h: (-h[1], h[0]))[:k]
+
+
+def _segment_bound(lists: list) -> float:
+    """Upper bound on any doc's score in one segment: Σ weight × list_max
+    over its ``(field, term, weight, list_max, make)`` entries, where
+    ``list_max`` is the list's largest (bound-factor scaled) block-max.
+    Summed in the scorer's canonical term order, so float rounding keeps
+    it ≥ every score the scorer accumulates from the same lists."""
+    bound = 0.0
+    for _, _, weight, list_max, _ in sorted(
+            lists, key=lambda e: (_FIELD_RANK[e[0]], e[1])):
+        bound += weight * list_max
+    return bound
+
+
+def score_segments(segments: list, k: int, scorer,
+                   min_score: float | None = None,
+                   denied: np.ndarray | None = None):
+    """Exact top-k over doc-disjoint segments with one shared threshold
+    (see module docstring).
+
+    ``segments``: ``(lists, allowed)`` pairs. ``lists`` holds one
+    ``(field, term, weight, list_max, make)`` entry per posting list of
+    the segment; ``make()`` builds its :class:`TermPostings` and is only
+    called when the segment is scored. ``allowed`` is the segment's
+    filter set (see :func:`score_exhaustive`) or None. ``scorer`` is
+    :func:`score_blockmax` or :func:`score_exhaustive` (the caller's
+    binding, so a wrapper installed on it sees every segment call)."""
+    bounds = [_segment_bound(lists) for lists, _ in segments]
+    theta = min_score
+    hits: list = []
+    for i in sorted(range(len(segments)), key=lambda i: -bounds[i]):
+        # descending bounds: once one is below θ, all the rest are too.
+        # A bound equal to θ is scored: its docs may win a doc-id tie.
+        if theta is not None and bounds[i] < theta:
+            break
+        lists, allowed = segments[i]
+        hits = merge_topk(hits + scorer([make() for *_, make in lists], k,
+                                        theta, allowed=allowed,
+                                        denied=denied), k)
+        if len(hits) == k:
+            # every hit passed the scorer's min_score = θ ≥ min_score, so
+            # the k-th best never drops θ below min_score
+            theta = hits[-1][1]
+    return hits

@@ -46,29 +46,40 @@ def extract_urls(html: str) -> list[str]:
     return sorted(urls)
 
 
+def canonical_url(url) -> "F.Column":
+    """JVM-side :func:`normalize_url` of a url column: the canonical
+    ``CANONICAL`` form, or null when the url carries no article ids."""
+    def ids(pattern):
+        return (F.regexp_extract(url, pattern, 1),
+                F.regexp_extract(url, pattern, 2))
+
+    oid, aid = ids(r"/(?:mnews/)?article/(\d{3})/(\d{10,})")
+    oid2, aid2 = ids(r"oid=(\d{3})&aid=(\d{10,})")
+    oid = F.when(oid != "", oid).otherwise(oid2)
+    aid = F.when(aid != "", aid).otherwise(aid2)
+    return F.when((oid != "") & (aid != ""), F.concat(
+        F.lit(CANONICAL.split("{")[0]), oid, F.lit("/"), aid))
+
+
+def with_canonical_url(df: DataFrame, col: str = "url") -> DataFrame:
+    """``df`` with ``col`` in canonical form — the dedup key of an index,
+    whose doc_id is derived from (oid, aid) alone (url.rs:116-124
+    normalizes before dedup). A url carrying no article ids is kept as
+    is; extraction drops its page."""
+    return df.withColumn(col, F.coalesce(canonical_url(F.col(col)),
+                                         F.col(col)))
+
+
 def extract_urls_df(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """Distributed variant: page html → one row per normalized article url
     (regexp_extract_all → explode → normalize → distinct → sort)."""
     hrefs = F.expr(
         f"regexp_extract_all(cast({html_col} as string), 'href=[\"\\']([^\"\\']+)[\"\\']', 1)"
     )
-    exploded = pages.select(F.explode(hrefs).alias("href"))
-    oid = F.regexp_extract("href", r"/(?:mnews/)?article/(\d{3})/(\d{10,})", 1)
-    aid = F.regexp_extract("href", r"/(?:mnews/)?article/(\d{3})/(\d{10,})", 2)
-    oid2 = F.regexp_extract("href", r"oid=(\d{3})&aid=(\d{10,})", 1)
-    aid2 = F.regexp_extract("href", r"oid=(\d{3})&aid=(\d{10,})", 2)
     return (
-        exploded.select(
-            F.when(oid != "", oid).otherwise(oid2).alias("oid"),
-            F.when(aid != "", aid).otherwise(aid2).alias("aid"),
-        )
-        .filter((F.col("oid") != "") & (F.col("aid") != ""))
-        .select(
-            F.concat(
-                F.lit("https://n.news.naver.com/mnews/article/"),
-                F.col("oid"), F.lit("/"), F.col("aid"),
-            ).alias("url")
-        )
+        pages.select(F.explode(hrefs).alias("href"))
+        .select(canonical_url(F.col("href")).alias("url"))
+        .filter(F.col("url").isNotNull())
         .distinct()
         .orderBy("url")
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..index.builder import IndexBuilder
+from ..sources.urls import with_canonical_url
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string, "
@@ -133,12 +134,14 @@ def stream_build(
             # by dropping urls is never an option. One probe job decides
             # the path: limit(cap+1) collects at most cap+1 urls — the
             # rows double as the feed for the common small batch, so no
-            # extra full count() of the batch source
-            probe = batch_df.select("url").limit(bloom_feed_cap + 1).collect()
+            # extra full count() of the batch source. The builder commits
+            # canonical urls, so the filter is fed canonical urls too
+            urls = with_canonical_url(batch_df.select("url"))
+            probe = urls.limit(bloom_feed_cap + 1).collect()
             if len(probe) <= bloom_feed_cap:
                 bloom.add_many(r["url"] for r in probe)
             else:
-                bloom.add_df(batch_df, col="url")
+                bloom.add_df(urls, col="url")
 
     stream = (
         spark.readStream.schema(schema)

@@ -89,6 +89,84 @@ def test_wand_bounds_safe_after_avgdl_drift(spark, inc_index):
         assert pruned == full, q["query_text"]
 
 
+def test_wave_of_legacy_url_variants_commits_no_doc(spark, tmp_path):
+    """A wave of committed articles under legacy urls
+    (``read.naver?mode=LSD&oid=..&aid=..``) is the same (oid, aid), so the
+    same doc_id: the dedup keys on the canonical url and commits nothing,
+    and every committed doc_id stays unique."""
+    out = f"{tmp_path}/legacy"
+    b = IndexBuilder(spark, out, n_shards=2)
+    pages = pages_df(spark, 30, partitions=2)
+    b.build(pages, fingerprint="base")
+    urls = [r["url"] for r in read_committed(spark, out, "docs")
+            .select("url").orderBy("url").limit(4).collect()]
+    legacy = pages.filter(F.col("url").isin(urls)).withColumn(
+        "url", F.regexp_replace(
+            "url", r"^https://n\.news\.naver\.com/mnews/article/"
+                   r"(\d{3})/(\d+)$",
+            "https://news.naver.com/main/read.naver?mode=LSD&oid=$1&aid=$2"))
+    assert legacy.filter(F.col("url").contains("read.naver")).count() == 4
+    m = b.build_incremental(legacy, fingerprint="legacy")
+    assert m.get("docs_out", 0) == 0
+    ids = [r["doc_id"] for r in read_committed(spark, out, "docs")
+           .select("doc_id").collect()]
+    assert len(ids) == len(set(ids)) >= 4
+
+
+def test_segments_identity_base_plus_three_tiny_waves(spark, tmp_path):
+    """1 base + 3 tiny waves (16 (generation, shard) segments, each wave's
+    lists spanning the whole doc-id range) with two tombstones: local ==
+    distributed == brute force over the committed docs for BM25 and
+    category-filtered BM25, pruned == exhaustive, and hybrid == the
+    fusion of the oracle's BM25 hits."""
+    from baram_spark import serving
+    from baram_spark.index import fs
+    from baram_spark.query.hybrid import hybrid_search
+
+    out = f"{tmp_path}/segs"
+    b = IndexBuilder(spark, out, n_shards=4, build_embeddings=True)
+    b.build(pages_df(spark, 300, partitions=4), fingerprint="base")
+    for i, n in enumerate((306, 312, 318), 1):
+        m = b.build_incremental(pages_df(spark, n, partitions=2),
+                                fingerprint=f"w{i}")
+        assert m["docs_out"] > 0
+    assert fs.committed_gens(fs.read_manifest(out)) == [0, 1, 2, 3]
+    docs = read_committed(spark, out, "docs").select(
+        "doc_id", "title", "text", "category", "published_at",
+        "publisher", "gen").toPandas()
+    oracle = BruteForceIndex.build(
+        [(int(r.doc_id), r.title, r.text) for r in docs.itertuples()],
+        meta={int(r.doc_id): (r.category, r.published_at, r.publisher)
+              for r in docs.itertuples()})
+    queries = [q["query_text"] for q in make_query_set()]
+    # tombstone a wave doc and a base doc that rank first somewhere:
+    # deleted docs leave the race, live scores keep their statistics
+    dead = {oracle.search(queries[0], k=1)[0][0],
+            int(docs[docs.gen == 3].doc_id.iloc[0])}
+    b.delete_docs(sorted(dead))
+
+    def expect(q, k, **kw):
+        hits = oracle.search(q, k=k + len(dead), **kw)
+        return [h for h in hits if h[0] not in dead][:k]
+
+    eng = SearchEngine(spark, out, preload=True)
+    for i, q in enumerate(queries):
+        for kw in ({}, {"category": "sports"}):
+            got = eng.search(q, k=10, mode="local", **kw)
+            assert _norm(got) == _norm(expect(q, 10, **kw)), (q, kw)
+            assert eng.search(q, k=10, mode="local", prune=False,
+                              **kw) == got
+            if i < 3:
+                assert eng.search(q, k=10, mode="distributed", **kw) == got
+    ctx = serving.ServingContext(spark, out)
+    for q in queries[:5]:
+        got = ctx.search(q, mode="hybrid", k=10)["results"]
+        want = hybrid_search(expect(q, 10), ctx._knn(ctx._snap, q, 10, None),
+                             k=10)
+        assert _norm((r["doc_id"], r["score"]) for r in got) \
+            == _norm(want), q
+
+
 def test_incremental_noop_when_no_new_pages(spark, inc_index):
     out, _ = inc_index
     builder = IndexBuilder(spark, out, n_shards=4)

@@ -438,3 +438,34 @@ def test_row_sized_postings_partitions_keep_blobs_and_ledger(
     assert sized[0] == [1, 1]  # 200 pages fit one partition per group
     assert sized[1] == fixed[1]
     assert sized[2] == fixed[2] and len(sized[2]) == 4
+
+
+def test_wave_postings_stage_runs_one_job_per_shard_group(spark, tmp_path):
+    """A wave's postings stage reads doc_terms with the known schema, so
+    each shard group runs its write job alone: no footer-reading job for
+    schema inference first. Adaptive execution is off here because it
+    runs the shuffle stage of the one write as a job of its own."""
+    from tests.conftest import spark_jobs
+
+    b = IndexBuilder(spark, f"{tmp_path}/wave_jobs", n_shards=4)
+    b.build(pages_df(spark, 120, partitions=2), fingerprint="base")
+    post = []
+    orig = b._stage_postings
+
+    def stage(*args, **kws):
+        with spark_jobs(spark) as started:
+            orig(*args, **kws)
+        post.extend(started)
+
+    b._stage_postings = stage
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        m = b.build_incremental(pages_df(spark, 200, partitions=2),
+                                fingerprint="wave")
+    finally:
+        spark.conf.set(key, prev)
+    groups = len(m["postings_partitions"])
+    assert groups == 2 and m["postings_built"] > 0
+    assert len(post) == groups

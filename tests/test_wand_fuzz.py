@@ -6,8 +6,10 @@ allowed/denied filters × random k / min_score — the pruned scorer must
 return rank- AND score-identical results to the exhaustive scorer AND to
 an independent brute-force oracle (raw arrays, no codec, no wand.py
 internals) on every draw, whether the lists are decoded from their blobs
-or are views into one resident decoded generation. hypothesis shrinks any
-counterexample."""
+or are views into one resident decoded generation. The per-segment loop
+(doc-disjoint (generation, shard) segments sharing one top-k threshold)
+is held to the same identities. hypothesis shrinks any counterexample."""
+
 
 import numpy as np
 from hypothesis import given, settings
@@ -21,17 +23,32 @@ from baram_spark.index.codec import (
     bm25_tf_norm,
     encode_postings,
 )
-from baram_spark.query.wand import score_blockmax, score_exhaustive
+from baram_spark.query.wand import (
+    TermPostings,
+    score_blockmax,
+    score_exhaustive,
+    score_segments,
+)
 from tests.conftest import term_postings
 
 
 def _make_term(rng: np.random.Generator, field: str, term: str,
                n_docs: int, universe: int, weight: float,
                bound_factor: float, codec: int):
-    ids = np.sort(rng.choice(universe, size=n_docs, replace=False)
-                  .astype(np.int64))
+    ids = rng.choice(universe, size=n_docs, replace=False)
+    return _term_from_ids(rng, field, term, ids, weight, bound_factor, codec)
+
+
+def _term_from_ids(rng, field, term, ids, weight, bound_factor, codec,
+                   ties: bool = False):
+    """One posting list over ``ids``; ``ties`` gives every posting the
+    same tf and dl, so every doc holding the same terms ties."""
+    ids = np.sort(np.asarray(ids, dtype=np.int64))
+    n_docs = ids.size
     tfs = rng.integers(1, 6, size=n_docs).astype(np.int64)
     dls = rng.integers(5, 300, size=n_docs).astype(np.int64)
+    if ties:
+        tfs[:], dls[:] = 2, 80
     blobs = encode_postings(ids, tfs, dls, avgdl=80.0, codec=codec)
     spec = (field, term, weight, blobs, 80.0 * bound_factor, bound_factor)
     return spec, (ids, tfs, dls)
@@ -127,3 +144,117 @@ def test_decode_blocks_gathers_exactly_the_selected_blocks(seed):
         got_ids, got = tp.decode_blocks(sel)
         assert np.array_equal(got_ids, ids[pos])
         assert np.array_equal(got, want)
+
+
+def _segment(terms):
+    """score_segments entries for prebuilt TermPostings."""
+    return [(tp.field, tp.term, tp.weight,
+             float(tp.blockmax.max()) if tp.n_blocks else 0.0,
+             lambda tp=tp: tp) for tp in terms]
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.integers(min_value=0, max_value=2**32 - 1))
+def test_segments_equal_exhaustive_equal_bruteforce_fuzz(seed):
+    """Doc-disjoint segments, the engine's (generation, shard) pairs: one
+    big segment, others, and a tiny one whose few docs span the whole id
+    range (a small wave's lists). Each segment has its own bound factor,
+    the weights are global. The segment loop over score_blockmax equals
+    the loop over score_exhaustive, score_exhaustive over all the lists
+    at once, and brute force — filtered, tombstoned, with min_score, and
+    with scores tied across segments."""
+    rng = np.random.default_rng(seed)
+    universe = int(rng.integers(50, 2000))
+    n_segs = int(rng.integers(2, 6))
+    # segment 0 owns most docs; the last, tiny segment owns both ends of
+    # the id range and a few docs between
+    owner = np.where(rng.random(universe) < 0.7, 0,
+                     rng.integers(0, n_segs - 1, size=universe))
+    owner[rng.random(universe) < 0.01] = n_segs - 1
+    owner[[0, universe - 1]] = n_segs - 1
+    n_terms = int(rng.integers(1, 5))
+    weights = [float(rng.uniform(0.1, 4.0)) for _ in range(n_terms)]
+    ties = rng.random() < 0.3
+    seg_specs, raw_terms = [], []
+    for s in range(n_segs):
+        docs = np.flatnonzero(owner == s)
+        bf = float(rng.choice([1.0, 1.0, rng.uniform(1.0, 1.5)]))
+        specs = []
+        for t in range(n_terms):
+            ids = docs[rng.random(docs.size) < rng.uniform(0.05, 1.0)]
+            if ids.size == 0:
+                continue
+            codec = int(rng.choice([CODEC_VARINT, CODEC_FOR, CODEC_PFOR]))
+            spec, raw = _term_from_ids(rng, "content", f"t{t}", ids,
+                                       weights[t], bf, codec, ties)
+            specs.append(spec)
+            raw_terms.append((f"t{t}", weights[t], 80.0 * bf, raw))
+        if specs:
+            seg_specs.append(specs)
+    k = int(rng.integers(1, 30))
+    min_score = (None if rng.random() < 0.5
+                 else float(rng.uniform(0.0, 3.0)))
+    allowed = None
+    if rng.random() < 0.4:
+        allowed = np.unique(
+            rng.choice(universe, size=int(rng.integers(1, universe)),
+                       replace=False).astype(np.int64))
+    denied = None
+    if rng.random() < 0.4:
+        denied = np.unique(
+            rng.choice(universe, size=int(rng.integers(1, 20)),
+                       replace=False).astype(np.int64))
+    brute = _brute_force(raw_terms, k, min_score, allowed, denied)
+    for resident in (False, True):
+        segs = [term_postings(specs, resident) for specs in seg_specs]
+        segments = [(_segment(terms), allowed) for terms in segs]
+        got = score_segments(segments, k, score_blockmax, min_score, denied)
+        exp = score_segments(segments, k, score_exhaustive, min_score,
+                             denied)
+        flat = score_exhaustive([tp for terms in segs for tp in terms], k,
+                                min_score, allowed=allowed, denied=denied)
+        assert got == exp == flat
+        assert len(got) == len(brute)
+        for (gd, gs), (bd, bs) in zip(got, brute):
+            assert gd == bd
+            assert gs == bs, (gd, gs, bs)
+
+
+def test_segment_below_theta_is_never_built_or_gathered(monkeypatch):
+    """Once k hits beat a segment's bound, the segment's lists are never
+    built and none of its blocks is gathered."""
+    rng = np.random.default_rng(3)
+    big_ids = np.arange(1, 400, 3)
+    spec, _ = _term_from_ids(rng, "content", "a", big_ids, 3.0, 1.0,
+                             CODEC_FOR, ties=True)
+    (big,) = term_postings([spec], resident=False)
+    # the tiny segment spans the whole id range, as a small wave does
+    tiny_spec, _ = _term_from_ids(rng, "content", "a",
+                                  np.array([0, 200, 1000]), 0.2, 1.0,
+                                  CODEC_FOR)
+    built, gathered = [], []
+    decode = TermPostings.decode_blocks
+
+    def counting_decode(tp, bidxs):
+        gathered.append(tp)
+        return decode(tp, bidxs)
+
+    def make_tiny():
+        (tp,) = term_postings([tiny_spec], resident=False)
+        built.append(tp)
+        return tp
+
+    monkeypatch.setattr(TermPostings, "decode_blocks", counting_decode)
+    tiny_max = float(term_postings([tiny_spec], False)[0].blockmax.max())
+    tiny = [("content", "a", 0.2, tiny_max, make_tiny)]
+    segments = [(tiny, None), (_segment([big]), None)]
+    got = score_segments(segments, 5, score_blockmax)
+    assert got == score_exhaustive([big, make_tiny()], 5)
+    built.clear()
+    gathered.clear()
+    assert score_segments(segments, 5, score_blockmax) == got
+    assert built == [] and gathered and big in gathered
+    # with k above the big segment's doc count the tiny one is scored
+    assert len(score_segments(segments, 200, score_blockmax)) \
+        == big_ids.size + 3
+    assert len(built) == 1
